@@ -1,22 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Build-time helper (NOT part of the driver contract): prints DuckDB VALUES
   * oracles for the deterministic golden-corpus exports (arizona / fries /
   * canonical nodes) and the seeded simhash subset, so they can be pasted into
   * SparkEntry.oracleSql as regression pins. The golden corpus is hand-traced
   * (GoldenSpec exactness), so pinning its derived exports is a valid oracle:
   * any behavioral drift flips the driver row red.
+  *
+  * Query names given as arguments replace the default list, for
+  * hand-checking the output of any other query.
   */
 object DumpOracles {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.getOrCreate("graft-dump-oracles")
 
     def q(s: String): String = "'" + s.replace("'", "''") + "'"
     def lit(v: Any): String = v match {
@@ -26,10 +22,12 @@ object DumpOracles {
       case x => x.toString
     }
 
-    for (name <- Seq("kg_emit_arizona", "kg_canonical_nodes", "kg_emit_fries",
-                     "kg_fries_frames", "dedup_simhash", "text_fingerprint",
-                     "kg_emit_indexcard", "kg_emit_cmu", "kg_emit_assembly",
-                     "kg_emit_assembly_mitre", "kg_emit_serial")) {
+    val names = if (args.nonEmpty) args.toSeq else Seq(
+      "kg_emit_arizona", "kg_canonical_nodes", "kg_emit_fries",
+      "kg_fries_frames", "dedup_simhash", "text_fingerprint",
+      "kg_emit_indexcard", "kg_emit_cmu", "kg_emit_assembly",
+      "kg_emit_assembly_mitre", "kg_emit_serial")
+    for (name <- names) {
       val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
       val cols = df.columns
       val rows = df.collect().map { r =>

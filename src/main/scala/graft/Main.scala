@@ -1,7 +1,6 @@
 package graft
 
 import graft.kg._
-import org.apache.spark.sql.SparkSession
 
 /** Production entry point (spark-submit): run the KG-construction pipeline
   * over a transcript corpus with stage checkpoints in --workdir.
@@ -42,17 +41,7 @@ object Main {
     val nConvs = opts.getOrElse("--convs", "100").toInt
     val mega = opts.getOrElse("--mega", "0").toInt
     val seed = opts.getOrElse("--seed", "42").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft-kg-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.getOrCreate("graft-kg-pipeline")
 
     opts.get("--rules").foreach { path =>
       val text = new String(

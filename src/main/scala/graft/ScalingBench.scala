@@ -1,27 +1,24 @@
 package graft
 
 import graft.kg._
-import org.apache.spark.sql.SparkSession
 
-/** Two-cluster-size scaling evidence (north rule: throughput efficiency
-  * >= 0.8 from N to 4N executors; sandbox proxy = two local[N] levels on
-  * identical input — task instructions).
+/** N vs 4N scaling evidence (north rule: throughput efficiency >= 0.8 from
+  * N to 4N executors). The master, executor topology and shuffle/split conf
+  * all come from spark-submit, one level per fresh JVM, so a level sees no
+  * JIT or cache state from another; `tools/scaling.sh` alternates the two.
   *
-  * One parallelism level per JVM invocation (fresh JVM -> no cross-level JIT
-  * or cache pollution):
+  *   ScalingBench gen DIR NCONVS MEGA               seed-42 corpus → DIR/turns
+  *   ScalingBench gendense DIR NCONVS MEGA DENSITY  plus a dense mega-conv
+  *   ScalingBench run DIR REPS
   *
-  *   sbt "runMain graft.ScalingBench gen /tmp/corpus 8000 40000"
-  *   sbt "runMain graft.ScalingBench run /tmp/corpus 8"
-  *   sbt "runMain graft.ScalingBench run /tmp/corpus 32"
-  *
-  * `run` does: count (touch input) -> full-pipeline warmup pass (JIT +
-  * codegen) -> clear the Spark cache (so the warmup's cached stage cannot be
-  * reused) -> timed full-pipeline pass. Prints one JSON line.
+  * `run` counts the input, runs one untimed `Pipeline.extract` (JIT and
+  * codegen), then times REPS more, each after clearing the Spark cache, and
+  * prints one JSON line per rep.
   */
 object ScalingBench {
   def main(args: Array[String]): Unit = args.toList match {
     case "gen" :: dir :: nConvs :: mega :: Nil =>
-      val s = session(32)
+      val s = Sessions.getOrCreate("graft-scaling")
       val (turns, _) = Transcripts.corpus(s, nConvs.toInt, seed = 42,
         megaTurns = mega.toInt)
       turns.write.mode("overwrite").parquet(s"$dir/turns")
@@ -34,7 +31,7 @@ object ScalingBench {
       // per fold chunk. The scaling corpus's mega-conv is long but
       // mention-SPARSE; this one stresses the per-chunk fold state
       // (mentions per chunk, not turns per chunk).
-      val s = session(32)
+      val s = Sessions.getOrCreate("graft-scaling")
       import s.implicits._
       val slice = Pipeline.chunkTurns
       val megaN = mega.toInt
@@ -59,85 +56,12 @@ object ScalingBench {
       base.union(dense).write.mode("overwrite").parquet(s"$dir/turns")
       println(s"""{"generated":"$dir/turns","density":$d,"megaTurns":$megaN}""")
       s.stop()
-    case "run" :: dir :: cpus :: Nil =>
-      val s = session(cpus.toInt)
+    case "run" :: dir :: reps :: Nil =>
+      val s = Sessions.getOrCreate("graft-scaling")
       import s.implicits._
-      // task-level ON-CPU time: flat N->4N proves the extra wall at low
-      // parallelism is queueing, not extra work (same criterion as the
-      // multi-executor `cluster` mode)
-      val cpuNs = new java.util.concurrent.atomic.AtomicLong
-      var peakMem = 0L
-      s.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (t.taskMetrics != null) {
-              cpuNs.addAndGet(t.taskMetrics.executorCpuTime)
-              val m = t.taskMetrics.peakExecutionMemory
-              if (m > peakMem) peakMem = m
-            }
-        })
-      def gcMs: Long = {
-        import scala.jdk.CollectionConverters._
-        java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-          .asScala.map(_.getCollectionTime).sum
-      }
-      def timed[T](f: => T): (T, Double) = {
-        val t0 = System.nanoTime(); val r = f
-        (r, (System.nanoTime() - t0) / 1e9)
-      }
-      val turns = s.read.parquet(s"$dir/turns").as[graft.model.Turn]
-      val n = turns.count()
-      Pipeline.extract(s, turns).edges.count() // warmup (JIT + codegen)
-      s.sharedState.cacheManager.clearCache()
-      val acc = new org.apache.spark.util.CollectionAccumulator[graft.model.Lineage]
-      s.sparkContext.register(acc)
-      cpuNs.set(0L); peakMem = 0L
-      val gc0 = gcMs
-      // measured pass, stage by stage (same stage functions as extract)
-      val (mentions, mSec) = timed {
-        val m = Pipeline.stageMentions(s, turns, "mentions", acc).cache()
-        m.count(); m
-      }
-      val (b, bSec) = timed {
-        val b0 = Pipeline.stageB(s, mentions, "fold", acc).cache()
-        b0.count(); b0
-      }
-      val (canonMap, cSec) = timed {
-        val c = Pipeline.stageCanon(s, b); c.count(); c
-      }
-      val (edges, eSec) = timed {
-        val (e, _) = Pipeline.stageMaterialize(s, b, canonMap)
-        e.count()
-      }
-      val fullSec = mSec + bSec + cSec + eSec
-      val gcSec = (gcMs - gc0) / 1000.0
-      val thr = n / fullSec
-      import scala.jdk.CollectionConverters._
-      val stageStats = acc.value.asScala.groupBy(_.stage).map { case (st, ls) =>
-        val ws = ls.map(_.wall_ms)
-        f""""$st":{"parts":${ls.size},"sum_task_ms":${ws.sum},"max_task_ms":${ws.max}}"""
-      }.mkString(",")
-      println(f"""{"cpus":$cpus,"turns":$n,"edges":$edges,"mentions_sec":$mSec%.1f,"fold_sec":$bSec%.1f,"canon_sec":$cSec%.1f,"mat_sec":$eSec%.1f,"sec":$fullSec%.1f,"turns_per_sec":$thr%.1f,"gc_sec":$gcSec%.1f,"task_cpu_sec":${cpuNs.get / 1e9}%.1f,"peak_task_mem_mb":${peakMem / 1048576},"heap_max_mb":${Runtime.getRuntime.maxMemory / 1048576},"stages":{$stageStats}}""")
-      s.stop()
-    case "cluster" :: dir :: reps :: Nil =>
-      // REAL multi-executor evidence: submitted via spark-submit against a
-      // localhost standalone cluster; the master/executor topology comes
-      // entirely from the submit conf (spark.cores.max / executor.cores),
-      // so N vs 4N EXECUTORS is literally N vs 4N separate JVM processes
-      // with netty shuffle between them.
-      val s = SparkSession.builder()
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("GRAFT_SHUFFLE_PARTS", "32"))
-        .config("spark.sql.files.maxPartitionBytes", "4m")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      import s.implicits._
-      // executor CPU time per rep (task metrics, nanoseconds of ON-CPU time):
-      // immune to host-side VM pauses/throttling that inflate wall clock —
-      // lets a degraded-host window be diagnosed as such (wall up, CPU flat)
+      // task ON-CPU time per rep: flat from N to 4N shows the extra wall at
+      // low parallelism is queueing, not extra work, and it is immune to
+      // host-side pauses that inflate wall clock
       val cpuNs = new java.util.concurrent.atomic.AtomicLong
       val runMs = new java.util.concurrent.atomic.AtomicLong
       s.sparkContext.addSparkListener(
@@ -151,6 +75,7 @@ object ScalingBench {
         })
       val turns = s.read.parquet(s"$dir/turns").as[graft.model.Turn]
       val n = turns.count()
+      Pipeline.extract(s, turns).edges.count() // warmup (JIT + codegen)
       (1 to reps.toInt).foreach { i =>
         s.sharedState.cacheManager.clearCache()
         cpuNs.set(0L); runMs.set(0L)
@@ -161,75 +86,9 @@ object ScalingBench {
         println(f"""{"rep":$i,"executors":${s.sparkContext.getExecutorMemoryStatus.size - 1},"turns":$n,"edges":$e,"sec":$sec%.1f,"turns_per_sec":${n / sec}%.1f,"task_cpu_sec":$cpuSec%.1f,"task_run_sec":${runMs.get / 1e3}%.1f,"turns_per_cpu_sec":${n / cpuSec}%.1f}""")
       }
       s.stop()
-    case "ckpt" :: dir :: cpus :: reps :: Nil =>
-      // the production spark-submit path: checkpointed Pipeline.run with
-      // parquet stage tables (tmpfs). The in-memory extract() path pays the
-      // columnar cache serializer for stage_b (jstack-confirmed hot frame);
-      // the checkpoint path is both the real 100TB shape and cheaper.
-      val s = session(cpus.toInt)
-      import s.implicits._
-      def rmDir(p: String): Unit = {
-        def rec(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rec)
-          f.delete()
-        }
-        val f = new java.io.File(p); if (f.exists()) rec(f)
-      }
-      val turns = s.read.parquet(s"$dir/turns").as[graft.model.Turn]
-      val n = turns.count()
-      (1 to reps.toInt).foreach { i =>
-        s.sharedState.cacheManager.clearCache()
-        val wd = s"/dev/shm/graft-ckpt-$i"
-        rmDir(wd)
-        val t0 = System.nanoTime()
-        val r = Pipeline.run(s, turns, wd, resume = false)
-        val e = r.edges.count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"""{"rep":$i,"cpus":$cpus,"turns":$n,"edges":$e,"sec":$sec%.1f,"turns_per_sec":${n / sec}%.1f}""")
-        rmDir(wd)
-      }
-      s.stop()
-    case "fused" :: dir :: cpus :: reps :: Nil =>
-      // diagnosis mode: repeat the fused in-memory extract to expose variance
-      val s = session(cpus.toInt)
-      import s.implicits._
-      val turns = s.read.parquet(s"$dir/turns").as[graft.model.Turn]
-      turns.count()
-      (1 to reps.toInt).foreach { i =>
-        s.sharedState.cacheManager.clearCache()
-        val t0 = System.nanoTime()
-        val e = Pipeline.extract(s, turns).edges.count()
-        println(f"""{"rep":$i,"edges":$e,"sec":${(System.nanoTime() - t0) / 1e9}%.1f}""")
-      }
-      s.stop()
     case _ =>
-      System.err.println("usage: ScalingBench gen DIR NCONVS MEGA | run DIR CPUS")
+      System.err.println("usage: ScalingBench gen DIR NCONVS MEGA | " +
+        "gendense DIR NCONVS MEGA DENSITY | run DIR REPS")
       sys.exit(2)
-  }
-
-  private def session(cpus: Int): SparkSession = {
-    // shuffle/cache spill on tmpfs: the sandbox's virtio disk write-throttles,
-    // and accumulated writeback debt made successive identical runs degrade
-    // 52s -> 105s -> 271s. We are measuring compute scaling, not host disk
-    // throttling; a real cluster provisions NVMe shuffle volumes.
-    val localDir = "/dev/shm/graft-spark-local"
-    new java.io.File(localDir).mkdirs()
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", localDir)
-      .config("spark.sql.shuffle.partitions", (cpus * 4).toString)
-      // small input splits: a 100MB+ parquet split of a mega-conversation
-      // becomes a single 90s task at low parallelism, and at 1.1M turns a
-      // 16MB split still yields only 16 scan tasks — 2 unbalanced waves on 8
-      // cores (measured max-task 10.6s vs 6.5s mean = the whole efficiency
-      // gap). 4MB splits give ~64 balanced tasks at every level (skew
-      // guidance, SURVEY.md §4)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
   }
 }

@@ -139,15 +139,7 @@ object Serve {
       case Array(k, v) if k.startsWith("--") => k -> v
     }.toMap
     val port = opts.getOrElse("--port", "8787").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.getOrCreate("graft-serve")
     // warmup: JIT + codegen so the first real request is not 10x
     annotateText(spark, "MEK1 phosphorylates ERK2.", "fries", "api0")
     val server = start(spark, port)

@@ -201,6 +201,28 @@ object KbLoader {
     // fail fast on a cyclic taxonomy: with a cycle the roots computation
     // below (values minus keys) would silently drop the whole component
     Taxonomy(data.taxonomyParents).validated
+    // a value that would reload as a comment (when it starts a line) or
+    // split its row: refuse it before any file is written, rather than
+    // write a bundle that loads as a different one
+    def check(file: String, values: Iterable[String], startsLine: Boolean) =
+      values.find(v => (startsLine && v.trim.startsWith("#")) ||
+          v.exists("\t\r\n".contains(_)))
+        .foreach { v =>
+          val shown = v.flatMap {
+            case '\t' => "\\t"; case '\r' => "\\r"; case '\n' => "\\n"
+            case c => c.toString
+          }
+          throw new IllegalArgumentException(s"$file: cannot write '$shown'" +
+            " (a value may not start with '#' or hold a tab, CR or newline)")
+        }
+    check("lexicon.tsv", data.lexicon.map(_._1), startsLine = true)
+    check("lexicon.tsv", data.lexicon.map(_._2), startsLine = false)
+    check("kb.tsv", data.kb.map(_.text), startsLine = true)
+    check("kb.tsv", data.kb.flatMap(e =>
+      Seq(e.id, e.species, e.namespace, e.label)), startsLine = false)
+    check("stoplist.txt", data.stopList, startsLine = true)
+    check("taxonomy.yml", data.taxonomyParents.flatMap { case (c, p) =>
+      Seq(c, p) }, startsLine = true)
     val d = Paths.get(dir)
     Files.createDirectories(d)
     def write(name: String, text: String): Unit =

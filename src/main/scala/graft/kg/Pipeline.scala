@@ -129,9 +129,10 @@ object Pipeline {
     * common case collects + broadcasts the tiny set (zero extra shuffle on
     * the turns table). Above [[aliasJoinThreshold]] the pipeline auto-switches
     * to a conv_id-keyed left join of the aggregated defs onto the annotated
-    * turns — fully distributed, no driver funnel, no truncation; the skewed
-    * mega-conversation case is one row on the defs side and AQE's skew-join
-    * handles the turns side.
+    * turns — no truncation; the skewed mega-conversation case is one row on
+    * the defs side and AQE's skew-join handles the turns side. On both paths
+    * the one job that picks the path collects up to threshold + 1 defs to
+    * the driver; the join path then drops them.
     */
   @volatile var aliasJoinThreshold: Long = 100000L
 
@@ -179,16 +180,21 @@ object Pipeline {
     val annotated = Annotate(spark, turns, bTrie)
     val defs = aliasDefsDs(spark, turns, bTrie, bG)
     val thr = aliasJoinThreshold
-    val useJoin =
-      defs.limit(math.min(thr + 1, Int.MaxValue.toLong).toInt).count() > thr
+    // one job decides the path and, below the threshold, is the whole set
+    val head = defs.limit(math.min(thr + 1, Int.MaxValue.toLong).toInt)
+      .collect()
+    val useJoin = head.length > thr
     val extracted =
       if (crossConvAliases) {
         // multi-document batch semantics (sent61): pool every conversation's
         // alias surfaces and rescan ALL conversations with them. Capped —
         // an unbounded pool is a corpus-sized broadcast.
-        val pooled = defs.sort("_2", "_3")
-          .limit(math.min(thr, Int.MaxValue.toLong).toInt).collect()
-          .map(x => (x._2, x._3)).distinct.sortBy(identity).toSeq
+        val capped =
+          if (useJoin) defs.sort("_2", "_3")
+            .limit(math.min(thr, Int.MaxValue.toLong).toInt).collect()
+          else head
+        val pooled =
+          capped.map(x => (x._2, x._3)).distinct.sortBy(identity).toSeq
         if (useJoin)
           System.err.println(s"[graft] WARNING: crossConvAliases pool " +
             s"truncated to $thr definitions (deterministic sort order)")
@@ -201,7 +207,7 @@ object Pipeline {
         // broadcast path: surfaces sorted per conv so injection order (which
         // resolves overlapping-surface conflicts) is deterministic and
         // identical to the join path's
-        val aliasMap = defs.collect().groupBy(_._1).map { case (conv, xs) =>
+        val aliasMap = head.groupBy(_._1).map { case (conv, xs) =>
           conv -> xs.map(x => (x._2, x._3)).sortBy(identity).toSeq
         }
         val bAliases = spark.sparkContext.broadcast(aliasMap)

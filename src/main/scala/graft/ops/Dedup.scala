@@ -30,6 +30,13 @@ object Dedup {
     * DuckDB oracle — run production JVMs with -Duser.language=en (or set
     * user.language explicitly) when corpora carry non-ASCII text, as this
     * repo's forked test JVM does.
+    *
+    * Signature-compatibility note: this tokenization replaced the kernels'
+    * earlier one (spaces-only trim instead of `String.trim`, ROOT
+    * lowercase, edge empty tokens kept). MinHash and SimHash
+    * signatures persisted by an earlier build no longer match this build's
+    * for texts with tab, CR or newline at either edge; regenerate persisted
+    * signatures rather than comparing them against fresh ones.
     */
   private[ops] def normTokens(text: String): Array[String] = {
     if (text == null) return Array.empty

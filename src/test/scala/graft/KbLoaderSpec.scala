@@ -99,6 +99,40 @@ class KbLoaderSpec extends AnyFunSuite {
     }
   }
 
+  test("render refuses a value that would reload as a comment or split " +
+       "its row") {
+    val b = KbData.builtin
+    val e0 = b.kb.head
+    val cases = Seq(
+      ("lexicon.tsv", "#MEK9", b.copy(lexicon = b.lexicon :+ ("#MEK9" -> "Family"))),
+      ("lexicon.tsv", "MEK\\t9", b.copy(lexicon = b.lexicon :+ ("MEK\t9" -> "Family"))),
+      ("lexicon.tsv", "Fam\\rily", b.copy(lexicon = b.lexicon :+ ("MEK9" -> "Fam\rily"))),
+      ("kb.tsv", "#MEK9", b.copy(kb = b.kb :+ e0.copy(text = "#MEK9"))),
+      ("kb.tsv", "MEK\\n9", b.copy(kb = b.kb :+ e0.copy(text = "MEK\n9"))),
+      ("kb.tsv", "P0\\t1", b.copy(kb = b.kb :+ e0.copy(id = "P0\t1"))),
+      ("stoplist.txt", "#stop", b.copy(stopList = b.stopList + "#stop")),
+      ("stoplist.txt", "st\\rop", b.copy(stopList = b.stopList + "st\rop")),
+      ("taxonomy.yml", "#Label", b.copy(taxonomyParents =
+        b.taxonomyParents + ("#Label" -> "Entity"))),
+      ("taxonomy.yml", "La\\nbel", b.copy(taxonomyParents =
+        b.taxonomyParents + ("La\nbel" -> "Entity"))))
+    for ((file, shown, data) <- cases) {
+      val dir = tmpDir("kbbad")
+      val e = intercept[IllegalArgumentException](KbLoader.render(data, dir))
+      assert(e.getMessage.contains(file) && e.getMessage.contains(shown),
+        e.getMessage)
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, file)),
+        s"$file written despite the refused value")
+    }
+    // '#' inside a row, or in a field that does not start the line, reloads
+    // unchanged and stays allowed
+    val ok = b.copy(lexicon = b.lexicon :+ ("MEK#9" -> "Family"),
+      kb = b.kb :+ e0.copy(text = "MEK#9", id = "#P01"))
+    val dir = tmpDir("kbhash")
+    KbLoader.render(ok, dir)
+    assert(KbLoader.merge(ok, KbLoader.load(dir), replace = true) == ok)
+  }
+
   test("a mistyped --kb path fails loudly; so does a dir with none of the " +
        "four bundle files") {
     intercept[IllegalArgumentException](

@@ -83,14 +83,42 @@ class PipelineSpec extends AnyFunSuite {
     val turns = Transcripts.goldenTurns(spark)
     val broadcastEdges =
       Score.keysOf(Pipeline.extract(spark, turns).edges).collect().toSet
+    val n = Pipeline.aliasDefsDs(spark, turns).count()
+    assert(n > 0)
     val saved = Pipeline.aliasJoinThreshold
     try {
-      Pipeline.aliasJoinThreshold = 0L // force the distributed join fallback
-      val joinEdges =
-        Score.keysOf(Pipeline.extract(spark, turns).edges).collect().toSet
-      assert(joinEdges == broadcastEdges,
-        "join-path edges diverged from broadcast-path edges")
+      // 0 and n - 1 force the distributed join fallback; n is the largest
+      // set the broadcast path still takes whole from the limit probe
+      for (thr <- Seq(0L, n - 1, n)) {
+        Pipeline.aliasJoinThreshold = thr
+        val edges =
+          Score.keysOf(Pipeline.extract(spark, turns).edges).collect().toSet
+        assert(edges == broadcastEdges,
+          s"edges at alias threshold $thr (of $n defs) diverged from the " +
+            "broadcast-path edges")
+      }
     } finally Pipeline.aliasJoinThreshold = saved
+  }
+
+  test("lineage rows_out sums equal the stage table counts (run, extract)") {
+    // extract's lineage is complete only because the canon stage runs an
+    // eager action before the accumulator is read; this pins that
+    val dir = java.nio.file.Files.createTempDirectory("kglineage").toString
+    val (turns, _) = Transcripts.corpus(spark, 40, seed = 13)
+    val io = graft.io.TableIO(dir)
+    val cold = Pipeline.run(spark, turns, dir, resume = false)
+    val nMentions = io.read(spark, "mentions_raw").count()
+    val nStageB = io.read(spark, "stage_b").count()
+    assert(nMentions > 0 && nStageB > 0)
+    for ((path, lineage) <- Seq("run" -> cold.lineage,
+                                "extract" -> Pipeline.extract(spark, turns).lineage)) {
+      val sums = lineage.groupBy("stage").agg(sum("rows_out"))
+        .as[(String, Long)].collect().toMap
+      assert(sums.get("mentions").contains(nMentions),
+        s"$path: mentions lineage rows_out $sums vs $nMentions mentions")
+      assert(sums.get("link_coref_emit").contains(nStageB),
+        s"$path: fold lineage rows_out $sums vs $nStageB stage_b rows")
+    }
   }
 
   test("cross-conversation alias application (multi-document batch, sent61)") {

@@ -1,0 +1,37 @@
+package graft
+
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Plan-shape pins for the KG headline queries (BENCH/PLANS.md): a query
+  * may not gain a shuffle exchange. Counted on AQE's initial physical plan,
+  * which is fixed at planning time (the final plan depends on runtime sizes).
+  */
+class PlanSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+  private val dir = "/root/testdata/sf0.001"
+
+  // ShuffleExchangeExec nodes per query, measured at the commit that
+  // introduced this spec
+  private val maxShuffles = Seq(
+    "kg_mentions" -> 0,
+    "kg_link_firsthit" -> 1,
+    "kg_precedence" -> 19,
+    "kg_emit_assembly" -> 25,
+    "kg_emit_serial" -> 0,
+    "kg_emit_indexcard" -> 3)
+
+  private def shuffles(name: String): Int =
+    SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec =>
+        a.initialPlan.collect { case e: ShuffleExchangeExec => e }.size
+      case p => p.collect { case e: ShuffleExchangeExec => e }.size
+    }
+
+  for ((name, max) <- maxShuffles)
+    test(s"$name gains no shuffle exchange (<= $max)") {
+      val n = shuffles(name)
+      assert(n <= max, s"$name plans $n shuffle exchanges, pinned at $max")
+    }
+}
