@@ -29,6 +29,7 @@ import graft.kg._
   * (--replace-kb swaps each present file's component wholesale) — the
   * spark-submit face of the reference's runtime-loaded TSV KBs.
   * --context-policy bidirectional enables the Policy4 context window.
+  * The rules, KB and policy make up one [[graft.kg.KgConfig]] for the run.
   */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -43,33 +44,27 @@ object Main {
     val seed = opts.getOrElse("--seed", "42").toLong
     val spark = Sessions.getOrCreate("graft-kg-pipeline")
 
-    opts.get("--rules").foreach { path =>
-      val text = new String(
+    def mode(replace: Boolean): String =
+      if (replace) " (replacing built-ins)" else " (extending built-ins)"
+    val replaceRules = flags.contains("--replace-rules")
+    val replaceKb = flags.contains("--replace-kb")
+    val policyCfg = KgConfig(contextPolicy =
+      opts.getOrElse("--context-policy", ConvProcessor.PolicyBackward))
+    val rulesCfg = opts.get("--rules").fold(policyCfg) { path =>
+      val g = RuleDsl.parse(new String(
         java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-        java.nio.charset.StandardCharsets.UTF_8)
-      val g = RuleDsl.parse(text)
-      Pipeline.reloadRules(spark, g,
-        extend = !flags.contains("--replace-rules"))
+        java.nio.charset.StandardCharsets.UTF_8))
       println(s"[graft] loaded ${g.rules.size} rules + " +
-        s"${g.depRules.size} dep rules from $path" +
-        (if (flags.contains("--replace-rules")) " (replacing built-ins)"
-         else " (extending built-ins)"))
+        s"${g.depRules.size} dep rules from $path" + mode(replaceRules))
+      policyCfg.withRules(g, replaceRules)
     }
-    opts.get("--kb").foreach { dir =>
-      val data = Pipeline.reloadKb(spark, dir,
-        extend = !flags.contains("--replace-kb"))
+    val cfg = opts.get("--kb").fold(rulesCfg) { dir =>
+      val c = rulesCfg.withKb(dir, replaceKb)
       println(s"[graft] loaded KB bundle from $dir: " +
-        s"${data.lexicon.size} lexicon surfaces, ${data.kb.size} KB " +
-        s"entries, ${data.stopList.size} stop words, " +
-        s"${data.taxonomyParents.size} taxonomy edges" +
-        (if (flags.contains("--replace-kb")) " (replacing built-ins)"
-         else " (extending built-ins)"))
-    }
-    opts.get("--context-policy").foreach {
-      case p @ (ConvProcessor.PolicyBackward |
-                ConvProcessor.PolicyBidirectional) =>
-        Pipeline.contextPolicy = p
-      case p => sys.error(s"unknown --context-policy $p")
+        s"${c.kb.lexicon.size} lexicon surfaces, ${c.kb.kb.size} KB " +
+        s"entries, ${c.kb.stopList.size} stop words, " +
+        s"${c.kb.taxonomyParents.size} taxonomy edges" + mode(replaceKb))
+      c
     }
 
     val t0 = System.nanoTime()
@@ -93,7 +88,7 @@ object Main {
 
     val nTurns = turns.count()
     val res = Pipeline.run(spark, turns, workDir,
-      resume = !flags.contains("--no-resume"))
+      resume = !flags.contains("--no-resume"), cfg = cfg)
     val nEdges = res.edges.count()
     val nNodes = res.nodes.count()
     val secs = (System.nanoTime() - t0) / 1e9

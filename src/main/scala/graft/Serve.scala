@@ -4,6 +4,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.kg._
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -17,16 +18,18 @@ import org.apache.spark.sql.functions._
   *     → 200 `{"hasError":false,"requestId":"apiN","resultJson":<json>}`
   *       (`fries`: the frame-graph document — sentences/entities/events
   *        frame collections; `indexcard`: a JSON array of card documents)
-  *     → 400/500 `{"hasError":true,"errorMessage":"..."}` (ApiRuler's
-  *       catch shape, mkResponse:69-90)
+  *     → 400 `{"hasError":true,"errorMessage":"..."}` for a bad request
+  *       (ApiRuler's catch shape, mkResponse:69-90); 500
+  *       `{"hasError":true,"errorMessage":"internal error (apiN)"}` for
+  *       anything else, with the exception and its stack trace on stderr
+  *       under the same request id (the response never carries it)
   *   GET  /api/ping → `{"status":"ok"}`
   *
   * Scale note: the reference runs a full ReachSystem per request; this
   * face runs the full pipeline on a one-conversation corpus per request —
-  * one local Spark job (~a second after warmup) through ONE shared
-  * session. It is the dev/eval serving shape; the 100 TB path is the
-  * batch pipeline, and a production service would put this behind a
-  * request queue with the session pinned hot.
+  * a few local Spark jobs (~a second after warmup) through ONE shared
+  * session, on a fixed pool of one handler thread per available processor.
+  * It is the dev/eval serving shape; the 100 TB path is the batch pipeline.
   */
 object Serve {
 
@@ -47,7 +50,8 @@ object Serve {
     * the requested exporter. Returns the resultJson payload.
     */
   private[graft] def annotateText(spark: SparkSession, text: String,
-                                  outFormat: String, convId: String): String = {
+                                  outFormat: String, convId: String,
+                                  cfg: KgConfig = KgConfig.default): String = {
     import spark.implicits._
     val turns = spark.createDataset(Seq(
       Transcripts.mkTurn(convId, 0, "user", text)))
@@ -57,7 +61,8 @@ object Serve {
     // consumes it four times (canon count + collect, edges, nodes) and
     // would otherwise replay the whole extraction per consumer
     val b = Pipeline.stageB(spark,
-      Pipeline.stageMentions(spark, turns, convId, acc), convId, acc).cache()
+      Pipeline.stageMentions(spark, turns, convId, acc, cfg), convId, acc,
+      cfg).cache()
     try {
       outFormat match {
         case "fries" =>
@@ -77,11 +82,33 @@ object Serve {
     } finally b.unpersist(blocking = false)
   }
 
-  /** Start the server on `port` (0 = ephemeral; read the bound port from
-    * the returned server). The caller owns the SparkSession lifecycle.
+  /** The 500 response for a failed request: the exception and its stack
+    * trace go to stderr under the request id; the client sees only the id.
     */
-  def start(spark: SparkSession, port: Int): HttpServer = {
+  private[graft] def internalError(reqId: String, e: Throwable): String = {
+    System.err.println(s"[graft] $reqId failed")
+    e.printStackTrace()
+    s"""{"hasError":true,"errorMessage":"internal error ($reqId)"}"""
+  }
+
+  /** Start the server on `port` (0 = ephemeral; read the bound port from
+    * the returned server), extracting with `cfg`. The caller owns the
+    * SparkSession lifecycle.
+    */
+  def start(spark: SparkSession, port: Int,
+            cfg: KgConfig = KgConfig.default): HttpServer = {
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+    // one handler thread per processor; idle threads exit, so a stopped
+    // server leaves none behind
+    val nThreads = Runtime.getRuntime.availableProcessors()
+    val pool = new ThreadPoolExecutor(nThreads, nThreads, 60L,
+      TimeUnit.SECONDS, new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, "graft-serve")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    server.setExecutor(pool)
     def respond(x: HttpExchange, code: Int, body: String): Unit = {
       val bytes = body.getBytes(StandardCharsets.UTF_8)
       x.getResponseHeaders.set("Content-Type", "application/json")
@@ -92,6 +119,8 @@ object Serve {
     server.createContext("/api/ping", (x: HttpExchange) =>
       respond(x, 200, """{"status":"ok"}"""))
     server.createContext("/api/text", (x: HttpExchange) => {
+      // reference request ids: prefix "api" + incrementing counter
+      val reqId = s"api${reqCounter.incrementAndGet()}"
       try {
         if (x.getRequestMethod != "POST")
           respond(x, 405,
@@ -107,27 +136,23 @@ object Serve {
             respond(x, 400,
               """{"hasError":true,"errorMessage":"empty text body"}""")
           else {
-            // reference request ids: prefix "api" + incrementing counter
-            val reqId = s"api${reqCounter.incrementAndGet()}"
             val json =
-              try Right(annotateText(spark, text, outFormat, reqId))
+              try Right(annotateText(spark, text, outFormat, reqId, cfg))
               catch {
-                case e: IllegalArgumentException =>
-                  Left((400, Option(e.getMessage).getOrElse(e.toString)))
-                case e: Throwable => Left((500, String.valueOf(e)))
+                case e: IllegalArgumentException => Left((400,
+                  s"""{"hasError":true,"errorMessage":"${jsonEscape(
+                    Option(e.getMessage).getOrElse(e.toString))}"}"""))
+                case e: Throwable => Left((500, internalError(reqId, e)))
               }
             json match {
               case Right(j) => respond(x, 200,
                 s"""{"hasError":false,"requestId":"$reqId","resultJson":$j}""")
-              case Left((code, msg)) => respond(x, code,
-                s"""{"hasError":true,"errorMessage":"${jsonEscape(msg)}"}""")
+              case Left((code, body)) => respond(x, code, body)
             }
           }
         }
       } catch {
-        case e: Throwable =>
-          respond(x, 500,
-            s"""{"hasError":true,"errorMessage":"${jsonEscape(String.valueOf(e))}"}""")
+        case e: Throwable => respond(x, 500, internalError(reqId, e))
       }
     })
     server.start()

@@ -235,8 +235,8 @@ object BioRules {
     * built-in grammar is [[BioRules.default]]; additional or replacement
     * grammars load from data via [[RuleDsl]] (the reference's grammar is
     * YAML loaded at startup and re-loadable per request —
-    * RuleReader.scala:43-51, export ApiRuler) and reach executors through
-    * [[Broadcasts.grammar]].
+    * RuleReader.scala:43-51, export ApiRuler), are carried by a
+    * [[KgConfig]] and reach executors through [[Broadcasts.all]].
     */
   final case class Grammar(rules: List[Rule], depRules: List[DepRule],
                            taxonomy: Taxonomy = Lexicon.builtinTaxonomy) {
@@ -258,12 +258,13 @@ object BioRules {
 
     /** Swap the strict-head generic-anaphor rule's head alternation — the
       * one rule whose pattern is derived from the NER lexicon
-      * ([[Lexicon.multiwordHeadsOf]]); a KB reload with new multi-word
-      * surfaces rebuilds it so data-added entities get anaphora support.
-      * Only the STOCK pattern (the alternation derived from the built-in
-      * lexicon) is rewritten: a user grammar that redefined
-      * `generic_head_np`'s heads via `--rules` keeps its own pattern — a
-      * KB reload must never silently clobber a data-defined rule.
+      * ([[Lexicon.multiwordHeadsOf]]); a config whose KB adds multi-word
+      * surfaces rebuilds it ([[KgConfig.effectiveGrammar]]) so data-added
+      * entities get anaphora support. Only the STOCK pattern (the
+      * alternation derived from the built-in lexicon) is rewritten: a user
+      * grammar that redefined `generic_head_np`'s heads via `--rules` keeps
+      * its own pattern — a data KB must never silently clobber a
+      * data-defined rule.
       */
     def withLexiconHeads(heads: Set[String]): Grammar = {
       def headsRe(hs: Set[String]): String =

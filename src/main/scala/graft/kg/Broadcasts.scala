@@ -3,105 +3,43 @@ package graft.kg
 import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 
-/** Session-singleton broadcasts of the dimension data (NER trie + grounding
-  * KB + rule grammar). The reference holds its KBs as lazy JVM singletons
-  * (ReachIMKBMentionLookups.scala:19-42, PaperReader.rs); the Spark-correct
-  * equivalent is ONE broadcast per SparkContext reused by every stage and
-  * every job — re-broadcasting per job churns TorrentBroadcast blocks (and
-  * was observed to intermittently stall jobs for exactly
-  * spark.network.timeout while a stale block fetch timed out).
-  *
-  * The grammar broadcast is additionally RELOADABLE ([[reloadGrammar]]) —
-  * the analogue of the reference's per-request rule recompilation
-  * (RuleReader.reload, export ApiRuler): swap in a grammar parsed from data
-  * ([[RuleDsl]]) and every subsequently planned job matches with it.
+/** The broadcasts of a [[KgConfig]]'s dimension data: NER trie, grounding
+  * KB index and matcher grammar. The reference holds its KBs as lazy JVM
+  * singletons (ReachIMKBMentionLookups.scala:19-42, PaperReader.rs); the
+  * Spark-correct equivalent is ONE broadcast per SparkContext and config,
+  * reused by every stage and every job — re-broadcasting per job churns
+  * TorrentBroadcast blocks (and was observed to intermittently stall jobs
+  * for exactly spark.network.timeout while a stale block fetch timed out).
   */
 object Broadcasts {
-  private var ctxId: Option[String] = None
-  private var trie: Broadcast[Annotate.Trie] = _
-  private var kb: Broadcast[Link.KbIndex] = _
-  private var gram: Broadcast[BioRules.Grammar] = _
-  // survive a SparkContext swap: the reloaded grammar/KB bundle is
-  // re-broadcast on the new context, matching singleton-KB re-init semantics
-  private var pendingGrammar: BioRules.Grammar = BioRules.default
-  private var pendingKb: KbData = KbData.builtin
+  type All = (Broadcast[Annotate.Trie], Broadcast[Link.KbIndex],
+              Broadcast[BioRules.Grammar])
 
-  /** The grammar actually broadcast: the pending rules with the pending KB
-    * bundle's taxonomy and lexicon-derived strict-head alternation applied.
-    * With the built-in bundle this is value-identical to [[pendingGrammar]]
-    * (same taxonomy map, same rendered head regex), so behavior is
-    * unchanged until a KB reload happens.
+  private final case class Entry(app: String, grammar: BioRules.Grammar,
+                                 kb: KbData, all: All)
+
+  // most recently used first. The bound keeps a caller that builds a fresh
+  // config per job from piling up broadcasts: a dropped entry's broadcasts
+  // are cleaned by Spark's ContextCleaner once no job holds them
+  private val MaxEntries = 8
+  private var memo: List[Entry] = Nil
+
+  /** The three broadcasts of `cfg`, made once per SparkContext and per
+    * (grammar, KB) pair — compared by reference, so every config that shares
+    * [[KgConfig.default]]'s grammar and KB shares its broadcasts. Planners
+    * take all three from one call, so a trie and a KB index always come
+    * from the same bundle.
     */
-  private def effectiveGrammar: BioRules.Grammar =
-    pendingGrammar.copy(taxonomy = Taxonomy(pendingKb.taxonomyParents))
-      .withLexiconHeads(Lexicon.multiwordHeadsOf(pendingKb.lexicon))
-
-  private def ensure(sc: SparkContext): Unit = {
-    if (!ctxId.contains(sc.applicationId) || trie == null) {
-      trie = sc.broadcast(
-        Annotate.buildTrie(pendingKb.lexicon, pendingKb.stopList))
-      kb = sc.broadcast(new Link.KbIndex(pendingKb.kb))
-      gram = sc.broadcast(effectiveGrammar)
-      ctxId = Some(sc.applicationId)
-    }
-  }
-
-  def get(sc: SparkContext): (Broadcast[Annotate.Trie], Broadcast[Link.KbIndex]) =
+  def all(sc: SparkContext, cfg: KgConfig = KgConfig.default): All =
     synchronized {
-      ensure(sc)
-      (trie, kb)
-    }
-
-  /** Atomic snapshot of all three broadcasts. Planners that capture more
-    * than one of (trie, KB index, grammar) MUST take them from one call —
-    * two separate synchronized calls could straddle a concurrent
-    * [[reloadKb]] and pair a new trie with an old KB index (a data-added
-    * surface would match but ground to the failsafe for one job).
-    */
-  def all(sc: SparkContext): (Broadcast[Annotate.Trie],
-                              Broadcast[Link.KbIndex],
-                              Broadcast[BioRules.Grammar]) =
-    synchronized {
-      ensure(sc)
-      (trie, kb, gram)
-    }
-
-  /** The current matcher-table broadcast (built-in grammar until a reload). */
-  def grammar(sc: SparkContext): Broadcast[BioRules.Grammar] =
-    synchronized {
-      ensure(sc)
-      gram
-    }
-
-  /** Rebuild the broadcast matcher tables from a new grammar (ApiRuler /
-    * RuleReader.reload analogue). In-flight jobs keep the broadcast they
-    * captured at plan time; new plans see the new grammar.
-    */
-  def reloadGrammar(sc: SparkContext, g: BioRules.Grammar): Unit =
-    synchronized {
-      ensure(sc)
-      pendingGrammar = g
-      val old = gram
-      gram = sc.broadcast(effectiveGrammar)
-      // release the old blocks lazily; never blocks running tasks
-      if (old != null) old.unpersist(blocking = false)
-    }
-
-  /** Rebuild the NER trie, grounding index, and grammar-carried taxonomy/
-    * head-alternation from a (data-loaded) KB bundle — the KB face of
-    * [[reloadGrammar]] (the reference's TSV KBs are runtime-loaded
-    * singletons; this is their broadcast-rebuild analogue). In-flight jobs
-    * keep the broadcasts they captured at plan time.
-    */
-  def reloadKb(sc: SparkContext, data: KbData): Unit =
-    synchronized {
-      ensure(sc)
-      pendingKb = data
-      val oldT = trie; val oldK = kb; val oldG = gram
-      trie = sc.broadcast(Annotate.buildTrie(data.lexicon, data.stopList))
-      kb = sc.broadcast(new Link.KbIndex(data.kb))
-      gram = sc.broadcast(effectiveGrammar)
-      Seq(oldT, oldK, oldG).foreach(b =>
-        if (b != null) b.unpersist(blocking = false))
+      val app = sc.applicationId
+      val live = memo.filter(_.app == app)
+      val e = live.find(e => (e.grammar eq cfg.grammar) && (e.kb eq cfg.kb))
+        .getOrElse(Entry(app, cfg.grammar, cfg.kb, (
+          sc.broadcast(Annotate.buildTrie(cfg.kb.lexicon, cfg.kb.stopList)),
+          sc.broadcast(new Link.KbIndex(cfg.kb.kb)),
+          sc.broadcast(cfg.effectiveGrammar))))
+      memo = (e :: live.filterNot(_ eq e)).take(MaxEntries)
+      e.all
     }
 }

@@ -102,9 +102,10 @@ object ConvProcessor {
   def process(convId: String, mentionsIn: Seq[MentionRow],
               kb: Link.KbIndex,
               contextPolicy: String = PolicyBackward,
-              chunkSize: Int = maxChunk): Seq[StageBRow] = {
+              chunkSize: Int = maxChunk,
+              overrideSpecies: Boolean = false): Seq[StageBRow] = {
     if (mentionsIn.size <= chunkSize)
-      processChunk(convId, mentionsIn, kb, contextPolicy)
+      processChunk(convId, mentionsIn, kb, contextPolicy, overrideSpecies)
     else {
       // chunk on turn boundaries, preserving order
       val sorted = sortMentions(mentionsIn)
@@ -138,7 +139,7 @@ object ConvProcessor {
           }.toSeq
         }
       chunks.zip(tails).flatMap { case (c, tail) =>
-        processChunk(convId, c, kb, contextPolicy, tail)
+        processChunk(convId, c, kb, contextPolicy, overrideSpecies, tail)
       }.toSeq
     }
   }
@@ -153,6 +154,7 @@ object ConvProcessor {
   private def processChunk(convId: String, mentionsIn: Seq[MentionRow],
                            kb: Link.KbIndex,
                            contextPolicy: String,
+                           overrideSpecies: Boolean,
                            ctxTail: Seq[MentionRow] = Nil): Seq[StageBRow] = {
     val mentions = sortMentions(mentionsIn)
     val byId = mutable.Map.empty[Long, MentionRow]
@@ -218,7 +220,7 @@ object ConvProcessor {
     // `!overrideSpecies`, covering either).
     val ctxSpeciesCache = mutable.Map.empty[Int, String]
     def ctxSpecies(turn: Int): String =
-      if (!hasCtx || Link.overrideSpecies) ""
+      if (!hasCtx || overrideSpecies) ""
       else ctxSpeciesCache.getOrElseUpdate(turn,
         nearestCtx("Species", turn).map(m => normSpecies(m.text)).getOrElse(""))
 

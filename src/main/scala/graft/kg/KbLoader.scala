@@ -50,8 +50,8 @@ object KbData {
   *
   * `#` comment lines and blank lines are skipped everywhere. Errors carry
   * file + line. All parsing is driver-side (the bundle is dimension data,
-  * MBs at most — it reaches executors through the session broadcasts,
-  * [[Broadcasts.reloadKb]], exactly like the reference's singleton KBs).
+  * MBs at most — a [[KgConfig]] carries it and [[Broadcasts.all]] ships it
+  * to executors once per session, like the reference's singleton KBs).
   */
 object KbLoader {
 

@@ -225,14 +225,6 @@ object Link {
   def failsafe(text: String): Grounding =
     Grounding("uaz", "UAZ:" + canonKey(text), "")
 
-  /** grounding.overrideSpecies (ReachGrounder.scala:22,38): true = species
-    * context is ignored and every multi-candidate grounding is re-ranked
-    * human-first (the reference's shipped application.conf:77 default);
-    * false = the context species re-ranks candidates (groundBySpecies).
-    * This engine defaults to the context-sensitive configuration.
-    */
-  @volatile var overrideSpecies: Boolean = false
-
   /** Broadcast-side KB index: (canonKey, label) -> entries. */
   final class KbIndex(entries: Seq[KBEntry]) extends Serializable {
     val byKeyLabel: Map[(String, String), Array[KBEntry]] =

@@ -3,6 +3,7 @@ package graft.kg
 import graft.io.TableIO
 import graft.model._
 import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
@@ -31,52 +32,6 @@ object Pipeline {
 
   final case class Result(edges: DataFrame, nodes: DataFrame,
                           lineage: DataFrame)
-
-  def sessionKb(): Link.KbIndex = new Link.KbIndex(Lexicon.kb)
-
-  /** Reload the extraction grammar from DSL text (the reference's
-    * RuleReader.reload / ApiRuler analogue): parse, rebuild the broadcast
-    * matcher tables, and match every subsequently planned job with the new
-    * grammar. `extend = true` (default) adds the data rules on top of the
-    * built-in grammar; `false` replaces it wholesale.
-    */
-  def reloadRules(spark: SparkSession, dslText: String,
-                  extend: Boolean = true): Unit =
-    reloadRules(spark, RuleDsl.parse(dslText), extend)
-
-  /** Pre-parsed variant (callers that also inspect the grammar parse once
-    * and pass it here, so logged counts always match what was loaded).
-    */
-  def reloadRules(spark: SparkSession, parsed: BioRules.Grammar,
-                  extend: Boolean): Unit = {
-    val g =
-      if (extend) BioRules.default.withRules(parsed.rules, parsed.depRules)
-      else parsed
-    Broadcasts.reloadGrammar(spark.sparkContext, g)
-  }
-
-  /** Restore the built-in grammar. */
-  def resetRules(spark: SparkSession): Unit =
-    Broadcasts.reloadGrammar(spark.sparkContext, BioRules.default)
-
-  /** Load a KB bundle directory ([[KbLoader]] format: lexicon.tsv, kb.tsv,
-    * stoplist.txt, taxonomy.yml — the reference's TsvIMKBFactory /
-    * ner_stoplist.txt / taxonomy.yml analogue) and rebuild the session
-    * broadcasts with it. `extend = true` (default) layers the files on top
-    * of the built-in bundle; `false` replaces each present component
-    * wholesale. Returns the effective bundle (for logging).
-    */
-  def reloadKb(spark: SparkSession, dir: String,
-               extend: Boolean = true): KbData = {
-    val data = KbLoader.merge(KbData.builtin, KbLoader.load(dir),
-      replace = !extend)
-    Broadcasts.reloadKb(spark.sparkContext, data)
-    data
-  }
-
-  /** Restore the built-in KB bundle. */
-  def resetKb(spark: SparkSession): Unit =
-    Broadcasts.reloadKb(spark.sparkContext, KbData.builtin)
 
   /** Thread-local rows_in counter. The stage transform (flatMap /
     * flatMapGroups) and the [[instrument]] wrapper are pipelined into the SAME
@@ -125,43 +80,23 @@ object Pipeline {
     * alias used *before* its definition still yields mentions (reference:
     * coref/Alias.scala:46-75 + InstanceFinder.scala:9-34).
     *
-    * Scale: alias definitions are a parenthetical-pattern rarity, so the
-    * common case collects + broadcasts the tiny set (zero extra shuffle on
-    * the turns table). Above [[aliasJoinThreshold]] the pipeline auto-switches
-    * to a conv_id-keyed left join of the aggregated defs onto the annotated
+    * Scale: alias definitions are a rarity, so the common case collects +
+    * broadcasts the tiny set (zero extra shuffle on the turns table). Above
+    * [[AliasJoinThreshold]] definitions the pipeline auto-switches to a
+    * conv_id-keyed left join of the aggregated defs onto the annotated
     * turns — no truncation; the skewed mega-conversation case is one row on
     * the defs side and AQE's skew-join handles the turns side. On both paths
     * the one job that picks the path collects up to threshold + 1 defs to
     * the driver; the join path then drops them.
     */
-  @volatile var aliasJoinThreshold: Long = 100000L
+  val AliasJoinThreshold: Long = 100000L
 
-  /** Cross-conversation alias application (reference: the multi-document
-    * API `Alias.canonizeAliases(mentions, docs)` + `ReachSystem.extractFrom
-    * (Seq[Document])` — aliases found in one document are sought in every
-    * other document of the same batch, TestCoreference sent61). Off by
-    * default: a conversation is the document analogue, and pooling surfaces
-    * corpus-wide is only meaningful for small batches — the pool is capped
-    * at [[aliasJoinThreshold]] surfaces (deterministically sorted) with a
-    * warning on truncation, since a corpus-sized rescan vocabulary is the
-    * one shape that cannot scale.
+  /** The pre-pass itself, on the caller's broadcasts so it and the main
+    * pass always match with the same grammar and trie.
     */
-  @volatile var crossConvAliases: Boolean = false
-
-  def aliasDefsDs(spark: SparkSession,
-                  turns: Dataset[Turn]): Dataset[(String, String, String)] = {
-    val (bTrie, _, bG) = Broadcasts.all(spark.sparkContext)
-    aliasDefsDs(spark, turns, bTrie, bG)
-  }
-
-  /** Snapshot-threaded variant: stageMentions passes ITS broadcasts so the
-    * pre-pass and the main pass can never straddle a concurrent
-    * [[Broadcasts.reloadKb]] (the atomic-snapshot invariant —
-    * [[Broadcasts.all]]).
-    */
-  private def aliasDefsDs(spark: SparkSession, turns: Dataset[Turn],
-                          bTrie: org.apache.spark.broadcast.Broadcast[Annotate.Trie],
-                          bG: org.apache.spark.broadcast.Broadcast[BioRules.Grammar])
+  private[graft] def aliasDefsDs(spark: SparkSession, turns: Dataset[Turn],
+                                 bTrie: Broadcast[Annotate.Trie],
+                                 bG: Broadcast[BioRules.Grammar])
       : Dataset[(String, String, String)] = {
     import spark.implicits._
     // cheap candidate pre-filter: the alias patterns all carry a parenthesis
@@ -174,9 +109,17 @@ object Pipeline {
   }
 
   def stageMentions(spark: SparkSession, turns: Dataset[Turn],
-                    runId: String, acc: CollectionAccumulator[Lineage]): Dataset[MentionRow] = {
+                    runId: String, acc: CollectionAccumulator[Lineage],
+                    cfg: KgConfig = KgConfig.default): Dataset[MentionRow] =
+    stageMentions(spark, turns, runId, acc, cfg, AliasJoinThreshold)
+
+  private[graft] def stageMentions(spark: SparkSession, turns: Dataset[Turn],
+                                   runId: String,
+                                   acc: CollectionAccumulator[Lineage],
+                                   cfg: KgConfig,
+                                   aliasJoinThreshold: Long): Dataset[MentionRow] = {
     import spark.implicits._
-    val (bTrie, _, bG) = Broadcasts.all(spark.sparkContext)
+    val (bTrie, _, bG) = Broadcasts.all(spark.sparkContext, cfg)
     val annotated = Annotate(spark, turns, bTrie)
     val defs = aliasDefsDs(spark, turns, bTrie, bG)
     val thr = aliasJoinThreshold
@@ -185,7 +128,7 @@ object Pipeline {
       .collect()
     val useJoin = head.length > thr
     val extracted =
-      if (crossConvAliases) {
+      if (cfg.crossConvAliases) {
         // multi-document batch semantics (sent61): pool every conversation's
         // alias surfaces and rescan ALL conversations with them. Capped —
         // an unbounded pool is a corpus-sized broadcast.
@@ -231,19 +174,14 @@ object Pipeline {
     instrument(extracted, "mentions", runId, acc)
   }
 
-  /** Context window policy for the fold stage —
-    * [[ConvProcessor.PolicyBackward]] (default, Policy2/3 semantics) or
-    * [[ConvProcessor.PolicyBidirectional]] (Policy4). Captured into the task
-    * closure at plan-build time, so it is cluster-correct (never read from
-    * the singleton on executors).
-    */
-  @volatile var contextPolicy: String = ConvProcessor.PolicyBackward
-
   def stageB(spark: SparkSession, mentions: Dataset[MentionRow],
-             runId: String, acc: CollectionAccumulator[Lineage]): Dataset[StageBRow] = {
+             runId: String, acc: CollectionAccumulator[Lineage],
+             cfg: KgConfig = KgConfig.default): Dataset[StageBRow] = {
     import spark.implicits._
-    val (_, bKb, bG) = Broadcasts.all(spark.sparkContext) // bG: taxonomy
-    val policy = contextPolicy // driver-side capture, ships with the closure
+    val (_, bKb, bG) = Broadcasts.all(spark.sparkContext, cfg) // bG: taxonomy
+    // plain values ship with the closure, never the config (it holds the KB)
+    val policy = cfg.contextPolicy
+    val overrideSpecies = cfg.overrideSpecies
     // the label closure is a pure function of the head label
     // (Lexicon.labelClosure) — shipping 5-7 closure strings per mention
     // through the conv_id exchange made the fold stage shuffle-bandwidth
@@ -258,7 +196,8 @@ object Pipeline {
             InCount.inc()
             m.copy(labels = Lexicon.labelClosure(m.labels.head))
           }.toSeq
-          ConvProcessor.process(key._1, ms, bKb.value, policy).iterator
+          ConvProcessor.process(key._1, ms, bKb.value, policy,
+            overrideSpecies = overrideSpecies).iterator
         }
       }
     instrument(grouped, "link_coref_emit", runId, acc)
@@ -353,7 +292,7 @@ object Pipeline {
   // ---- checkpointed run (spark-submit path, resumable) -------------------
 
   def run(spark: SparkSession, turns: Dataset[Turn], workDir: String,
-          resume: Boolean = true): Result = {
+          resume: Boolean = true, cfg: KgConfig = KgConfig.default): Result = {
     import spark.implicits._
     val io = TableIO(workDir)
     val runId = java.util.UUID.randomUUID().toString.take(8)
@@ -361,12 +300,13 @@ object Pipeline {
     spark.sparkContext.register(acc, "lineage")
 
     if (!(resume && io.isComplete("mentions_raw"))) {
-      io.write(stageMentions(spark, turns, runId, acc).toDF(), "mentions_raw")
+      io.write(stageMentions(spark, turns, runId, acc, cfg).toDF(),
+        "mentions_raw")
     }
     val mentionsRaw = io.read(spark, "mentions_raw").as[MentionRow]
 
     if (!(resume && io.isComplete("stage_b"))) {
-      io.write(stageB(spark, mentionsRaw, runId, acc).toDF(), "stage_b")
+      io.write(stageB(spark, mentionsRaw, runId, acc, cfg).toDF(), "stage_b")
     }
     val b = io.read(spark, "stage_b").as[StageBRow]
 
@@ -404,12 +344,18 @@ object Pipeline {
   /** In-memory path for tests and small corpora — same stage functions, no
     * checkpoint I/O.
     */
-  def extract(spark: SparkSession, turns: Dataset[Turn]): Result = {
+  def extract(spark: SparkSession, turns: Dataset[Turn],
+              cfg: KgConfig = KgConfig.default): Result =
+    extract(spark, turns, cfg, AliasJoinThreshold)
+
+  private[graft] def extract(spark: SparkSession, turns: Dataset[Turn],
+                             cfg: KgConfig, aliasJoinThreshold: Long): Result = {
     val runId = "mem"
     val acc = new CollectionAccumulator[Lineage]
     spark.sparkContext.register(acc, "lineage-mem")
-    val mentions = stageMentions(spark, turns, runId, acc)
-    val b = stageB(spark, mentions, runId, acc)
+    val mentions =
+      stageMentions(spark, turns, runId, acc, cfg, aliasJoinThreshold)
+    val b = stageB(spark, mentions, runId, acc, cfg)
     import spark.implicits._
     val bCached = b.cache()
     val canonMap = stageCanon(spark, bCached)

@@ -349,7 +349,7 @@ object RuleDsl {
   /** Parse a DSL text into a [[Grammar]] containing exactly the rules in
     * the text. To EXTEND the built-in grammar instead, use
     * `BioRules.default.withRules(parse(text).rules, parse(text).depRules)`
-    * or [[Pipeline.reloadRules]] with `extend = true`.
+    * or [[KgConfig.withRules]].
     */
   def parse(text: String): Grammar = {
     val rules = mutable.ListBuffer.empty[Rule]

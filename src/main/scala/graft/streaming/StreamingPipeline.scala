@@ -16,7 +16,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * The reference has no streaming; its analogue is whole-file reprocessing
   * via the restart log (ReachCLI.scala:47-66). Here a late conversation turn
-  * simply extends the conversation's state.
+  * (one older than turns already seen) folds with the retained window and
+  * its own triples emit once, under either policy; triples already emitted
+  * are never revised by it.
   *
   * Known deviation from batch: the BACKWARD alias rescan (J3 — an alias
   * surface used before its parenthetical definition) requires a second pass
@@ -36,11 +38,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * cost is latency (up to `contextBound` turns + the timeout), never
   * correctness — PROVIDED an `idleTimeout` is configured (without one the
   * unsealed tail of an idle conversation never flushes; a warning is
-  * printed). Pass `contextPolicy = PolicyBidirectional` explicitly
-  * (the session-global [[graft.kg.Pipeline.contextPolicy]] is
-  * deliberately not consulted here — a streaming query outlives driver
-  * mutations; StreamingSpec pins both facts). The default backward
-  * policy keeps the original emit-immediately behavior.
+  * printed). Opt in with a [[graft.kg.KgConfig]] whose `contextPolicy` is
+  * `PolicyBidirectional`; the default backward policy emits immediately.
+  * The config's grammar, KB and `overrideSpecies` apply as in batch;
+  * `crossConvAliases` does not (streaming has no batch to pool over).
   *
   * Scale: state is O(lookback x mentions-per-turn) per live conversation;
   * with watermarking on `ts` (caller adds `withWatermark` upstream) idle
@@ -72,9 +73,11 @@ object StreamingPipeline {
     * window and emit everything past the sealed frontier.
     */
   private[graft] def flushPending(convId: String, st: ConvState,
-                                  kb: Link.KbIndex,
-                                  contextPolicy: String): Iterator[PreTriple] =
-    ConvProcessor.process(convId, st.mentions, kb, contextPolicy)
+                                  kb: Link.KbIndex, contextPolicy: String,
+                                  overrideSpecies: Boolean = false)
+      : Iterator[PreTriple] =
+    ConvProcessor.process(convId, st.mentions, kb, contextPolicy,
+      overrideSpecies = overrideSpecies)
       .flatMap(_.triple)
       .filter(_.turn_idx > st.emittedThrough)
       .iterator
@@ -88,9 +91,12 @@ object StreamingPipeline {
 
   def triples(spark: SparkSession, turns: Dataset[Turn],
               idleTimeout: Option[String] = None,
-              contextPolicy: String = ConvProcessor.PolicyBackward): Dataset[PreTriple] = {
+              cfg: KgConfig = KgConfig.default): Dataset[PreTriple] = {
     import spark.implicits._
-    val (bTrie, bKb, bG) = Broadcasts.all(spark.sparkContext)
+    val (bTrie, bKb, bG) = Broadcasts.all(spark.sparkContext, cfg)
+    // plain values ship with the closures, never the config (it holds the KB)
+    val contextPolicy = cfg.contextPolicy
+    val overrideSpecies = cfg.overrideSpecies
     val bidi = contextPolicy == ConvProcessor.PolicyBidirectional
     if (bidi && idleTimeout.isEmpty)
       System.err.println("[graft] WARNING: Policy4 streaming without an " +
@@ -130,7 +136,7 @@ object StreamingPipeline {
             state.remove()
             if (!bidi) Iterator.empty
             else pending.map(flushPending(convId, _, bKb.value,
-              contextPolicy)).getOrElse(Iterator.empty)
+              contextPolicy, overrideSpecies)).getOrElse(Iterator.empty)
           } else {
             val incoming = it.toSeq.sortBy(_.turn_idx)
             val prior = state.getOption.map(_.mentions).getOrElse(Seq.empty)
@@ -143,26 +149,28 @@ object StreamingPipeline {
               }
               BioRules.extractTurn(at, defs, bG.value)
             }
-            val newMinTurn =
-              if (incoming.isEmpty) Int.MaxValue
-              else incoming.map(_.turn_idx).min
+            val incomingTurns = incoming.map(_.turn_idx).toSet
             val all = prior ++ newMentions
             val maxTurn =
               if (all.isEmpty) state.getOption.map(_.maxTurn).getOrElse(0)
               else all.map(_.turn_idx).max
             val folded = ConvProcessor.process(convId, all, bKb.value,
-              contextPolicy).flatMap(_.triple)
+              contextPolicy, overrideSpecies = overrideSpecies)
+              .flatMap(_.triple)
             val (out, emittedThrough) =
-              if (!bidi) (folded.filter(_.turn_idx >= newMinTurn),
+              if (!bidi) (folded.filter(t => incomingTurns(t.turn_idx)),
                 Int.MaxValue)
               else {
                 // delayed emission: seal turns whose full forward window
-                // (contextBound further turns) has arrived
+                // (contextBound further turns) has arrived; a late turn
+                // behind the sealed frontier emits now, as it will never
+                // seal again
                 val prevEmitted = state.getOption.map(_.emittedThrough)
                   .getOrElse(-1)
                 val seal = maxTurn - ConvProcessor.contextBound
-                (folded.filter(t => t.turn_idx > prevEmitted &&
-                  t.turn_idx <= seal), math.max(prevEmitted, seal))
+                (folded.filter(t =>
+                  if (t.turn_idx <= prevEmitted) incomingTurns(t.turn_idx)
+                  else t.turn_idx <= seal), math.max(prevEmitted, seal))
               }
             state.update(ConvState(
               all.filter(_.turn_idx > maxTurn - keepTurns), defs, maxTurn,

@@ -14,13 +14,14 @@ class ConvProcessorSpec extends AnyFunSuite {
   private def run(texts: String*): Seq[StageBRow] =
     runPolicy(ConvProcessor.PolicyBackward, texts: _*)
 
-  private def runPolicy(policy: String, texts: String*): Seq[StageBRow] = {
-    val mentions = texts.zipWithIndex.flatMap { case (t, i) =>
+  private def runPolicy(policy: String, texts: String*): Seq[StageBRow] =
+    ConvProcessor.process("c", mentionsOf(texts), kb, policy)
+
+  private def mentionsOf(texts: Seq[String]): Seq[MentionRow] =
+    texts.zipWithIndex.flatMap { case (t, i) =>
       BioRules.extractTurn(AnnotatedTurn("c", i, "user",
         Annotate.annotateText(trie, t)))
     }
-    ConvProcessor.process("c", mentions, kb, policy)
-  }
   private def triples(rows: Seq[StageBRow]): Seq[PreTriple] =
     rows.filter(_.kind == "triple").flatMap(_.triple)
 
@@ -155,17 +156,14 @@ class ConvProcessorSpec extends AnyFunSuite {
 
   test("grounding.overrideSpecies = true ignores species context " +
        "(ReachGrounder.scala:38, the reference's shipped default)") {
-    val saved = Link.overrideSpecies
-    try {
-      Link.overrideSpecies = true
-      // the mouse context is present but ignored: groundAsHuman ordering
-      // (human > no-species > non-human) keeps the human ERK2
-      val ts = triples(run(
+    // the mouse context is present but ignored: groundAsHuman ordering
+    // (human > no-species > non-human) keeps the human ERK2
+    val ts = triples(ConvProcessor.process("c", mentionsOf(Seq(
         "We studied mouse fibroblasts.",
-        "ERK2 was phosphorylated at T669."))
-      assert(ts.exists(_.obj_gid == "uniprot:P28482"), ts.map(_.obj_gid))
-      assert(!ts.exists(_.obj_gid == "uniprot:P63085"))
-    } finally Link.overrideSpecies = saved
+        "ERK2 was phosphorylated at T669.")), kb,
+      overrideSpecies = true))
+    assert(ts.exists(_.obj_gid == "uniprot:P28482"), ts.map(_.obj_gid))
+    assert(!ts.exists(_.obj_gid == "uniprot:P63085"))
   }
 
   test("plural coref: 'Both' expands the event over two antecedents") {

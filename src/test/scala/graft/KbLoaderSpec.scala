@@ -232,11 +232,11 @@ class KbLoaderSpec extends AnyFunSuite {
     val turns = spark.createDataset(Seq(
       Transcripts.mkTurn("kb1", 0, "user", "AKT1 phosphorylates FOXO3.")))
 
-    // before the reload: FOXO3 is not a known surface -> no grounded object
+    // built-in KB: FOXO3 is not a known surface -> no grounded object
     val before = Pipeline.extract(spark, turns).edges
       .where(col("pred") === "Phosphorylation").collect()
     assert(!before.exists(_.getAs[String]("obj") == "uniprot:O43524"),
-      "FOXO3 must be unknown before the KB reload")
+      "FOXO3 must be unknown to the built-in KB")
 
     val dir = tmpDir("kbdata")
     write(dir, "lexicon.tsv",
@@ -245,40 +245,39 @@ class KbLoaderSpec extends AnyFunSuite {
       "FOXO3\tO43524\thuman\tuniprot\t0\tGene_or_gene_product\ttrue\tfalse\n")
     write(dir, "stoplist.txt", "hope\n")
     write(dir, "taxonomy.yml", "AddModification:\n  Palmitoylation:\n")
-    try {
-      val data = Pipeline.reloadKb(spark, dir) // extend built-ins
-      assert(data.lexicon.size == KbData.builtin.lexicon.size + 2)
+    val cfg = KgConfig.default.withKb(dir) // extend built-ins
+    assert(cfg.kb.lexicon.size == KbData.builtin.lexicon.size + 2)
 
-      // the new surface grounds through the normal first-hit path and the
-      // triples come out of the FULL pipeline run: "A phosphorylates B"
-      // decomposes into a subject-less Phosphorylation of B plus A's
-      // Positive_regulation of it (the reference's transitive-verb shape)
-      val after = Pipeline.extract(spark, turns).edges.collect()
-      def row(p: String) = after.filter(_.getAs[String]("pred") == p)
-      assert(row("Phosphorylation")
-        .exists(_.getAs[String]("obj") == "uniprot:O43524"),
-        s"expected Phosphorylation of FOXO3(uniprot:O43524), got " +
-          after.map(r => (r.getAs[String]("subj"), r.getAs[String]("pred"),
-            r.getAs[String]("obj"))).mkString(", "))
-      assert(row("Positive_regulation").exists(r =>
-        r.getAs[String]("subj") == "uniprot:P31749" &&
-          r.getAs[String]("obj").contains("uniprot:O43524")),
-        "expected AKT1(uniprot:P31749) positively regulating the " +
-          "phosphorylation of the data-added FOXO3")
+    // the new surface grounds through the normal first-hit path and the
+    // triples come out of the FULL pipeline run: "A phosphorylates B"
+    // decomposes into a subject-less Phosphorylation of B plus A's
+    // Positive_regulation of it (the reference's transitive-verb shape)
+    val after = Pipeline.extract(spark, turns, cfg).edges.collect()
+    def row(p: String) = after.filter(_.getAs[String]("pred") == p)
+    assert(row("Phosphorylation")
+      .exists(_.getAs[String]("obj") == "uniprot:O43524"),
+      s"expected Phosphorylation of FOXO3(uniprot:O43524), got " +
+        after.map(r => (r.getAs[String]("subj"), r.getAs[String]("pred"),
+          r.getAs[String]("obj"))).mkString(", "))
+    assert(row("Positive_regulation").exists(r =>
+      r.getAs[String]("subj") == "uniprot:P31749" &&
+        r.getAs[String]("obj").contains("uniprot:O43524")),
+      "expected AKT1(uniprot:P31749) positively regulating the " +
+        "phosphorylation of the data-added FOXO3")
 
-      // stop-list-as-data: "HOPE" matches case-sensitively, but the stop
-      // word blocks the auto title-case variant ("Hope" stays a word)
-      val trie = Broadcasts.get(sc)._1.value
-      assert(trie.scan(Array("HOPE")).nonEmpty)
-      assert(trie.scan(Array("Hope")).isEmpty)
+    // stop-list-as-data: "HOPE" matches case-sensitively, but the stop
+    // word blocks the auto title-case variant ("Hope" stays a word)
+    val (bTrie, _, bG) = Broadcasts.all(sc, cfg)
+    val trie = bTrie.value
+    assert(trie.scan(Array("HOPE")).nonEmpty)
+    assert(trie.scan(Array("Hope")).isEmpty)
 
-      // taxonomy-as-data rides the grammar broadcast: the new label's
-      // closure reaches Event through the data-added parent edge
-      val tax = Broadcasts.grammar(sc).value.taxonomy
-      assert(tax.closure("Palmitoylation").contains("Event"))
-    } finally Pipeline.resetKb(spark)
+    // taxonomy-as-data rides the grammar broadcast: the new label's
+    // closure reaches Event through the data-added parent edge
+    val tax = bG.value.taxonomy
+    assert(tax.closure("Palmitoylation").contains("Event"))
 
-    // after reset, built-in behavior is restored
+    // the default config still runs on the built-in KB
     val reset = Pipeline.extract(spark, turns).edges
       .where(col("pred") === "Phosphorylation").collect()
     assert(!reset.exists(_.getAs[String]("obj") == "uniprot:O43524"))

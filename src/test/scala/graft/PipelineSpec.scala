@@ -83,21 +83,19 @@ class PipelineSpec extends AnyFunSuite {
     val turns = Transcripts.goldenTurns(spark)
     val broadcastEdges =
       Score.keysOf(Pipeline.extract(spark, turns).edges).collect().toSet
-    val n = Pipeline.aliasDefsDs(spark, turns).count()
+    val (bTrie, _, bG) = Broadcasts.all(spark.sparkContext)
+    val n = Pipeline.aliasDefsDs(spark, turns, bTrie, bG).count()
     assert(n > 0)
-    val saved = Pipeline.aliasJoinThreshold
-    try {
-      // 0 and n - 1 force the distributed join fallback; n is the largest
-      // set the broadcast path still takes whole from the limit probe
-      for (thr <- Seq(0L, n - 1, n)) {
-        Pipeline.aliasJoinThreshold = thr
-        val edges =
-          Score.keysOf(Pipeline.extract(spark, turns).edges).collect().toSet
-        assert(edges == broadcastEdges,
-          s"edges at alias threshold $thr (of $n defs) diverged from the " +
-            "broadcast-path edges")
-      }
-    } finally Pipeline.aliasJoinThreshold = saved
+    // 0 and n - 1 force the distributed join fallback; n is the largest
+    // set the broadcast path still takes whole from the limit probe
+    for (thr <- Seq(0L, n - 1, n)) {
+      val edges = Score.keysOf(
+        Pipeline.extract(spark, turns, KgConfig.default, thr).edges)
+        .collect().toSet
+      assert(edges == broadcastEdges,
+        s"edges at alias threshold $thr (of $n defs) diverged from the " +
+          "broadcast-path edges")
+    }
   }
 
   test("lineage rows_out sums equal the stage table counts (run, extract)") {
@@ -137,19 +135,16 @@ class PipelineSpec extends AnyFunSuite {
       .collect().toSet
     assert(off == Set(("", "Phosphorylation", "uniprot:P28482")),
       s"per-conv scope must not see the alias, got $off")
-    val saved = Pipeline.crossConvAliases
-    try {
-      Pipeline.crossConvAliases = true
-      val edges = Pipeline.extract(spark, turns).edges
-        .filter(col("conv_id") === "cB")
-        .select("subj", "pred", "obj").as[(String, String, String)]
-        .collect().toSet
-      // the injected 23peM mention grounds to ASPP1 through the alias edge
-      // (global CC collapses the nonce's failsafe id onto uniprot:Q96KQ4)
-      assert(edges.contains(("", "Phosphorylation", "uniprot:P28482")), edges)
-      assert(edges.contains(("uniprot:Q96KQ4", "Positive_regulation",
-        "Phosphorylation(uniprot:P28482)")), edges)
-    } finally Pipeline.crossConvAliases = saved
+    val edges = Pipeline.extract(spark, turns,
+        KgConfig(crossConvAliases = true)).edges
+      .filter(col("conv_id") === "cB")
+      .select("subj", "pred", "obj").as[(String, String, String)]
+      .collect().toSet
+    // the injected 23peM mention grounds to ASPP1 through the alias edge
+    // (global CC collapses the nonce's failsafe id onto uniprot:Q96KQ4)
+    assert(edges.contains(("", "Phosphorylation", "uniprot:P28482")), edges)
+    assert(edges.contains(("uniprot:Q96KQ4", "Positive_regulation",
+      "Phosphorylation(uniprot:P28482)")), edges)
   }
 
   test("mega-conversation chunking preserves non-boundary semantics") {

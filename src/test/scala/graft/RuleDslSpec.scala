@@ -13,6 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * grammar broadcast.
   */
 class RuleDslSpec extends AnyFunSuite {
+  import RuleDslSpec._
   private lazy val spark = TestSpark.spark
   private lazy val trie = Annotate.buildTrie(Lexicon.nerLexicon)
   private lazy val kb = new Link.KbIndex(Lexicon.kb)
@@ -36,17 +37,6 @@ class RuleDslSpec extends AnyFunSuite {
     assert(RuleDsl.render(parsed) == text)
   }
 
-  // the demo corpus: no built-in rule matches "hyperphosphorylates" (the
-  // quantity prefixes are mono/poly/di/multi only and trigger regexes are
-  // token-anchored), so the built-in grammar extracts nothing from it
-  private val newRuleDsl =
-    """# a brand-new event rule, defined purely as data
-      |rule dsl_hyperphos
-      |  priority: 7
-      |  kind: simplemod
-      |  pattern: m:cause:BioChemicalEntity t:/hyper-?phosphorylat(e|es|ed|ing)/ m:theme:BioChemicalEntity
-      |""".stripMargin
-
   test("a NEW event rule defined as data extracts a triple no built-in " +
        "rule produces (extractSentence level)") {
     val sent = Annotate.annotateText(trie, "MEK1 hyperphosphorylates ERK2.")
@@ -64,29 +54,25 @@ class RuleDslSpec extends AnyFunSuite {
       m.labels.head == "Positive_regulation"))
   }
 
-  test("reloadRules rebuilds the broadcast matcher tables and the full " +
+  test("a data-rule KgConfig gets its own matcher broadcast and the full " +
        "pipeline emits the golden-pinned data-rule triple") {
     import spark.implicits._
     val turns = Seq(
       Turn("dslconv", 0, "user", "MEK1 hyperphosphorylates ERK2.", "", null))
       .toDS()
     // built-in grammar: nothing
-    Pipeline.resetRules(spark)
     val before = Pipeline.extract(spark, turns).edges.collect()
     assert(before.isEmpty, before.map(_.toString).toSeq)
-    try {
-      // grammar reload from data — the ApiRuler per-request analogue
-      Pipeline.reloadRules(spark, newRuleDsl)
-      val after = Pipeline.extract(spark, turns).edges
-        .select("subj", "pred", "obj", "conv_id").collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-      // golden pin: exact triples for the data-defined rule
-      assert(after == Set(
-        ("", "Phosphorylation", "uniprot:P28482"),
-        ("uniprot:Q02750", "Positive_regulation",
-          "Phosphorylation(uniprot:P28482)")), after)
-    } finally Pipeline.resetRules(spark)
-    // after reset the built-in behavior is restored
+    // the grammar as data, one config per request — the ApiRuler analogue
+    val cfg = KgConfig.default.withRules(RuleDsl.parse(newRuleDsl))
+    assert(Broadcasts.all(spark.sparkContext, cfg)._3 ne
+      Broadcasts.all(spark.sparkContext)._3)
+    val after = Pipeline.extract(spark, turns, cfg).edges
+      .select("subj", "pred", "obj", "conv_id").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    // golden pin: exact triples for the data-defined rule
+    assert(after == dslTriples, after)
+    // the default config is untouched by the data-rule run
     assert(Pipeline.extract(spark, turns).edges.count() == 0)
   }
 
@@ -223,4 +209,25 @@ class RuleDslSpec extends AnyFunSuite {
     assert(t.contains("a\\/b|c"))
     assert(RuleDsl.parse(t) == g)
   }
+}
+
+object RuleDslSpec {
+  // the demo corpus: no built-in rule matches "hyperphosphorylates" (the
+  // quantity prefixes are mono/poly/di/multi only and trigger regexes are
+  // token-anchored), so the built-in grammar extracts nothing from it
+  val newRuleDsl: String =
+    """# a brand-new event rule, defined purely as data
+      |rule dsl_hyperphos
+      |  priority: 7
+      |  kind: simplemod
+      |  pattern: m:cause:BioChemicalEntity t:/hyper-?phosphorylat(e|es|ed|ing)/ m:theme:BioChemicalEntity
+      |""".stripMargin
+
+  /** The pipeline's exact triples for "MEK1 hyperphosphorylates ERK2."
+    * under a config carrying [[newRuleDsl]].
+    */
+  val dslTriples: Set[(String, String, String)] = Set(
+    ("", "Phosphorylation", "uniprot:P28482"),
+    ("uniprot:Q02750", "Positive_regulation",
+      "Phosphorylation(uniprot:P28482)"))
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.kg.{KbData, KgConfig}
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,8 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class ServeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def withServer[T](f: Int => T): T = {
-    val server = Serve.start(spark, 0)
+  private def withServer[T](f: Int => T): T = withServer(KgConfig.default)(f)
+
+  private def withServer[T](cfg: KgConfig)(f: Int => T): T = {
+    val server = Serve.start(spark, 0, cfg)
     try f(server.getAddress.getPort)
     finally server.stop(0)
   }
@@ -77,6 +80,96 @@ class ServeSpec extends AnyFunSuite {
           "$.resultJson.sentences.object-type"))
         .as[String].head()
       assert(parsed == "frame-collection")
+    }
+  }
+
+  // request ids differ per call, and so do the frame ids hashed from them:
+  // number the frame ids in order of appearance instead
+  private def sansIds(body: String): String = {
+    val ids = scala.collection.mutable.Map.empty[String, Int]
+    "(\"frame-id\"|\"arg\"):(-?\\d+)".r.replaceAllIn(
+      body.replaceAll("api\\d+", "apiN"),
+      m => s"${m.group(1)}:${ids.getOrElseUpdate(m.group(2), ids.size)}")
+  }
+
+  test("concurrent POSTs each return their serial response") {
+    withServer { port =>
+      val reqs = Seq(
+        "/api/text" -> "MEK1 phosphorylates ERK2.",
+        "/api/text?output=indexcard" -> "AKT1 binds MEK1.")
+      val serial = reqs.map { case (path, text) =>
+        sansIds(post(port, path, text).body()) }
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val inFlight = reqs.map { case (path, text) =>
+        java.util.concurrent.CompletableFuture.supplyAsync { () =>
+          start.await()
+          sansIds(post(port, path, text).body())
+        }
+      }
+      start.countDown()
+      val concurrent = inFlight.map(_.get())
+      serial.foreach(b => assert(b.contains("\"hasError\":false"), b))
+      assert(concurrent == serial)
+    }
+  }
+
+  test("requests run on one handler thread per processor: a request " +
+       "stalled in its body does not hold up another") {
+    val cores = Runtime.getRuntime.availableProcessors()
+    val server = Serve.start(spark, 0)
+    try {
+      server.getExecutor match {
+        case p: java.util.concurrent.ThreadPoolExecutor =>
+          assert(p.getCorePoolSize == cores && p.getMaximumPoolSize == cores)
+        case e => fail(s"executor $e")
+      }
+      assume(cores >= 2, "overlap needs two handler threads")
+      val port = server.getAddress.getPort
+      val sock = new java.net.Socket("127.0.0.1", port)
+      try {
+        sock.setSoTimeout(30000)
+        val out = sock.getOutputStream
+        val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+          sock.getInputStream, java.nio.charset.StandardCharsets.US_ASCII))
+        // the server answers "100 Continue" from the handler thread that
+        // took the exchange; that thread then waits for the second byte
+        out.write(("POST /api/text HTTP/1.1\r\nHost: 127.0.0.1\r\n" +
+          "Expect: 100-continue\r\nContent-Length: 2\r\n\r\n").getBytes("US-ASCII"))
+        out.flush()
+        assert(in.readLine().startsWith("HTTP/1.1 100"))
+        out.write(' '.toInt)
+        out.flush()
+        val ping = client.send(
+          HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/api/ping"))
+            .timeout(java.time.Duration.ofSeconds(30)).GET().build(),
+          HttpResponse.BodyHandlers.ofString())
+        assert(ping.statusCode() == 200)
+        // finish the stalled request: a blank body answers 400
+        out.write(' '.toInt)
+        out.flush()
+        val status = Iterator.continually(in.readLine())
+          .find(l => l == null || l.startsWith("HTTP/1.1 4"))
+        assert(status.exists(l => l != null && l.startsWith("HTTP/1.1 400")),
+          status)
+      } finally sock.close()
+    } finally server.stop(0)
+  }
+
+  test("an internal failure answers 500 with the request id only; the " +
+       "exception text never reaches the client") {
+    val body = Serve.internalError("api7",
+      new IllegalStateException("secret detail"))
+    assert(body == """{"hasError":true,"errorMessage":"internal error (api7)"}""")
+    // end to end: a KB whose lexicon holds a null surface fails inside the
+    // request with a NullPointerException
+    val broken = KgConfig(kb = KbData.builtin.copy(
+      lexicon = KbData.builtin.lexicon :+ ((null, "Gene_or_gene_product"))))
+    withServer(broken) { port =>
+      val r = post(port, "/api/text", "MEK1 phosphorylates ERK2.")
+      assert(r.statusCode() == 500, r.body())
+      assert(r.body().matches(
+        "\\{\"hasError\":true,\"errorMessage\":\"internal error \\(api\\d+\\)\"\\}"),
+        r.body())
     }
   }
 }

@@ -12,6 +12,24 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+  private val bidi = KgConfig(contextPolicy = ConvProcessor.PolicyBidirectional)
+
+  /** Everything a streaming query emits when fed `batches` as successive
+    * micro-batches.
+    */
+  private def streamed(name: String, cfg: KgConfig,
+                       batches: Seq[Seq[Turn]]): Seq[PreTriple] = {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val stream = MemoryStream[Turn]
+    val q = StreamingPipeline.triples(spark, stream.toDS(), cfg = cfg)
+      .writeStream.outputMode("append").format("memory").queryName(name)
+      .start()
+    try {
+      batches.foreach { b => stream.addData(b); q.processAllAvailable() }
+      spark.table(name).as[PreTriple].collect().toSeq
+    } finally q.stop()
+  }
 
   test("streaming triples match batch pipeline across micro-batches") {
     import spark.implicits._
@@ -63,21 +81,16 @@ class StreamingSpec extends AnyFunSuite {
       Transcripts.mkTurn("p4", 4, "user", "JAK3 phosphorylates HuR."))
 
     // batch Policy4 reference output
-    val saved = Pipeline.contextPolicy
-    val batch = try {
-      Pipeline.contextPolicy = ConvProcessor.PolicyBidirectional
-      Pipeline.extract(spark, spark.createDataset(turns)).edges
-        .select("turn_idx", "pred", "ctx_species")
-        .as[(Int, String, String)].collect().toSet
-    } finally Pipeline.contextPolicy = saved
+    val batch = Pipeline.extract(spark, spark.createDataset(turns), bidi)
+      .edges.select("turn_idx", "pred", "ctx_species")
+      .as[(Int, String, String)].collect().toSet
 
     // no idleTimeout in the streamed part: processing-time timeouts spin
     // continuous timeout-check micro-batches that defeat
     // processAllAvailable in a deterministic test — the flush body is
     // exercised directly below with the exact state the handler holds
     val stream = MemoryStream[Turn]
-    val out = StreamingPipeline.triples(spark, stream.toDS(),
-      contextPolicy = ConvProcessor.PolicyBidirectional)
+    val out = StreamingPipeline.triples(spark, stream.toDS(), cfg = bidi)
     val q = out.writeStream.outputMode("append")
       .format("memory").queryName("triples_p4d").start()
     val sealedOut =
@@ -114,44 +127,59 @@ class StreamingSpec extends AnyFunSuite {
       s"missing=${batch -- streamedTotal}\nspurious=${streamedTotal -- batch}")
   }
 
-  test("streaming defaults to the backward policy and never consults the " +
-       "session Pipeline.contextPolicy (a streaming query outlives driver " +
-       "mutations; Policy4 is opted into via the explicit parameter)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
+  test("streaming defaults to the backward policy; Policy4 is opted into " +
+       "via the config") {
     // with the DEFAULT (backward) policy the turn-0 triple emits in the
     // micro-batch that processes turn 0, before the species arrives, so
-    // its ctx_species stays "" even when the session global is flipped to
-    // bidirectional — delayed emission happens only via the explicit
-    // contextPolicy parameter (previous test)
+    // its ctx_species stays "" — delayed emission happens only under a
+    // bidirectional config (previous test)
     val turns = Seq(
       Transcripts.mkTurn("sp4", 0, "user", "ERK2 was phosphorylated at T669."),
       Transcripts.mkTurn("sp4", 1, "assistant", "We studied mouse fibroblasts."))
-    val saved = Pipeline.contextPolicy
-    try {
-      Pipeline.contextPolicy = ConvProcessor.PolicyBidirectional
-      val stream = MemoryStream[Turn]
-      val out = StreamingPipeline.triples(spark, stream.toDS())
-      val q = out.writeStream.outputMode("append")
-        .format("memory").queryName("triples_p4")
-        .start()
-      try {
-        stream.addData(turns.take(1))
-        q.processAllAvailable()
-        stream.addData(turns.drop(1))
-        q.processAllAvailable()
-        val got = spark.table("triples_p4")
-          .select("pred", "ctx_species").as[(String, String)].collect()
-        val ph = got.filter(_._1 == "Phosphorylation")
-        assert(ph.nonEmpty && ph.forall(_._2 == ""),
-          s"streaming must stay backward-policy: $got")
-      } finally q.stop()
-      // batch under the same session setting DOES fill the slot — the
-      // deviation is observable and exactly the forward half
-      val batch = Pipeline.extract(spark, spark.createDataset(turns)).edges
-        .select("pred", "ctx_species").as[(String, String)].collect()
-        .filter(_._1 == "Phosphorylation")
-      assert(batch.nonEmpty && batch.forall(_._2 == "taxonomy:10090"))
-    } finally Pipeline.contextPolicy = saved
+    val got = streamed("triples_p4", KgConfig.default,
+      Seq(turns.take(1), turns.drop(1)))
+      .map(t => (t.pred, t.ctx_species))
+    val ph = got.filter(_._1 == "Phosphorylation")
+    assert(ph.nonEmpty && ph.forall(_._2 == ""),
+      s"streaming must stay backward-policy: $got")
+    // batch under the bidirectional config DOES fill the slot — the
+    // deviation is observable and exactly the forward half
+    import spark.implicits._
+    val batch = Pipeline.extract(spark, spark.createDataset(turns), bidi)
+      .edges.select("pred", "ctx_species").as[(String, String)].collect()
+      .filter(_._1 == "Phosphorylation")
+    assert(batch.nonEmpty && batch.forall(_._2 == "taxonomy:10090"))
+  }
+
+  test("a late turn emits its batch triples exactly once under either " +
+       "policy") {
+    import spark.implicits._
+    val turns = Seq(
+      "MEK1 phosphorylates ERK2.",
+      "JAK3 phosphorylates HuR.",
+      "We studied mouse fibroblasts.",
+      "Data handling followed procedures.",
+      "Additional runs were recorded.",
+      "AKT1 binds MEK1.").zipWithIndex.map { case (t, i) =>
+      Transcripts.mkTurn("late", i, "user", t) }
+    // turn 1 arrives after turns 0 and 2-5 have been processed
+    val (late, onTime) = turns.partition(_.turn_idx == 1)
+    for (cfg <- Seq(KgConfig.default, bidi)) {
+      val batch = Pipeline.extract(spark, spark.createDataset(turns), cfg)
+        .edges.filter(col("turn_idx") === 1)
+        .select("subj", "pred", "ctx_species")
+        .as[(String, String, String)].collect().toSet
+      assert(batch.nonEmpty)
+      val got = streamed("triples_late", cfg, Seq(onTime, late))
+      val lateOut = got.filter(_.turn_idx == 1)
+        .map(t => (t.subj_gid, t.pred, t.ctx_species)).toSet
+      assert(lateOut == batch, s"${cfg.contextPolicy}: late turn emitted " +
+        s"$lateOut, batch has $batch")
+      val keys = got.map(t => (t.turn_idx, t.pred, t.obj_pred, t.obj_gid,
+        t.obj_gid2))
+      assert(keys.distinct.size == keys.size,
+        s"${cfg.contextPolicy}: triples emitted twice: " +
+          keys.diff(keys.distinct))
+    }
   }
 }
