@@ -35,7 +35,9 @@ object Serve {
 
   private val reqCounter = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private def jsonEscape(s: String): String =
+  /** JSON string-body escape: backslash, quote and ALL control chars
+    * (< 0x20). [[Verify]] writes `oracle_sql.json` through it too. */
+  private[graft] def jsonEscape(s: String): String =
     s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

@@ -376,11 +376,13 @@ object SparkEntry {
           col("occurrences"))
     },
     "kg_link_firsthit" -> { (s, dir) =>
-      implicit val sp = s
-      val mentions = s.createDataFrame(linkMentions)
-        .toDF("mention_key", "text", "label")
-      Link.linkDF(s, mentions, s.createDataFrame(Lexicon.kb))
-        .select(col("mention_key"), col("ns"), col("ns_id"))
+      import s.implicits._
+      // the fold's own lookup, on the session's KB-index broadcast
+      val (_, bKb, _) = Broadcasts.all(s.sparkContext)
+      linkMentions.toDS().map { case (k, txt, lbl) =>
+        val g = bKb.value.resolve(txt, lbl, "")
+        (k, g.namespace, g.id)
+      }.toDF("mention_key", "ns", "ns_id")
     },
     "kg_context_window" -> { (s, dir) =>
       implicit val sp = s

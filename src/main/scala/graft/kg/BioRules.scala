@@ -310,6 +310,18 @@ object BioRules {
     Seq(W("called|termed|named")),
     // "a.k.a." tokenizes as "a.k.a" + a dangling "." token
     Seq(W("alias|a\\.k\\.a\\.?|aka"), OptG(W("\\."))))
+
+  private val aliasCueText = Pattern.compile(
+    "\\(|\\b(?:referred|known|designated|called|termed|named|alias|aka|a\\.k\\.a)\\b",
+    Pattern.CASE_INSENSITIVE)
+
+  /** Alias pre-filter: whole-word, case-insensitive `(` or `aliasCue`
+    * word ("unknown" does not match). Every alias rule needs one, so the
+    * batch and streaming alias pre-passes annotate only text that has one.
+    */
+  def hasAliasCue(text: String): Boolean =
+    text != null && aliasCueText.matcher(text).find()
+
   private val sitePrep = OptG(AltG(
     Seq(W("on|at"), OptG(W("a|an|the")), ML("site", "Site", commaOk = true)),
     Seq(W("on|at"), W("residues?|sites?"), ML("site", "Site", commaOk = true))))

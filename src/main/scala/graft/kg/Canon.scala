@@ -1,21 +1,23 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Canonicalization: alias/coref equivalence edges -> connected components ->
   * canonical node ids (reference: assembly/AssemblyManager.scala:1355-1377
   * equivalence-hash dedup + alias sharing across the batch, Alias.scala:46-75).
   *
-  * Components are computed with the alternating large-star/small-star
-  * map-reduce algorithm (Kiveris et al., "Connected Components in MapReduce
-  * and Beyond", SoCC 2014) expressed as DataFrame self-joins — scales to
-  * billions of edges; converges in O(log^2 n) rounds. For small edge sets the
-  * driver union-find fast path avoids iterative shuffles.
+  * [[components]] is the one connected-components implementation in graft:
+  * canonicalization and `graft.ops.Dedup.clusters` both call it, and differ
+  * only in the node ordering that picks each component's name. Small edge
+  * sets take a driver union-find (no iterative shuffles); above
+  * `driverThreshold` edges, distributed min-label propagation — O(component
+  * diameter) rounds of join + partial-agg groupBy, capped at 50 rounds with
+  * a warning when a component is still merging.
   *
-  * Node ordering: non-failsafe (KB-grounded) ids win over `uaz:` failsafe ids,
-  * then lexicographic — so a component containing a real grounding is named by
-  * it.
+  * Canon's node ordering: non-failsafe (KB-grounded) ids win over `uaz:`
+  * failsafe ids, then lexicographic — so a component containing a real
+  * grounding is named by it.
   */
 object Canon {
 
@@ -25,17 +27,31 @@ object Canon {
 
   /** edges: DataFrame(a: String, b: String) -> DataFrame(gid, canon_id). */
   def connectedComponents(spark: SparkSession, edges: DataFrame,
-                          driverThreshold: Long = 100000L): DataFrame = {
-    import spark.implicits._
-    val cnt = edges.count()
-    if (cnt == 0) {
-      spark.emptyDataset[(String, String)].toDF("gid", "canon_id")
-    } else if (cnt <= driverThreshold) {
-      // small path: driver union-find (alias edge sets are tiny relative to
-      // the corpus; avoids log^2-n shuffle rounds)
-      val es = edges.as[(String, String)].collect()
-      val parent = scala.collection.mutable.Map.empty[String, String]
-      def find(x: String): String = {
+                          driverThreshold: Long = 100000L): DataFrame =
+    components(edges, driverThreshold, Ordering.by(rankKey),
+      _.startsWith("uaz:"))(Encoders.STRING).toDF("gid", "canon_id")
+
+  /** Connected components of the undirected edge set `edges(a, b)`: one
+    * `(node, root)` row per node of a non-self-loop edge (the driver path
+    * also keeps self-loop-only nodes), `root` being the least node of its
+    * component under `order`. `key` is the leading Catalyst sort key of the
+    * same order (ties break on the node itself), used above
+    * `driverThreshold` edges.
+    *
+    * `edges` is read twice (the threshold count, then the driver collect or
+    * the propagation base); a caller with an expensive upstream persists it.
+    */
+  private[graft] def components[N](edges: DataFrame, driverThreshold: Long,
+                                   order: Ordering[N], key: Column => Column)
+                                  (implicit enc: Encoder[N]): Dataset[(N, N)] = {
+    val spark = edges.sparkSession
+    val pairEnc = Encoders.tuple(enc, enc)
+    val es = edges.select(col("a"), col("b"))
+    val cnt = es.count()
+    if (cnt <= driverThreshold) {
+      val edgeSeq = if (cnt == 0) Nil else es.as(pairEnc).collect().toSeq
+      val parent = scala.collection.mutable.Map.empty[N, N]
+      def find(x: N): N = {
         var r = x
         while (parent.getOrElse(r, r) != r) r = parent(r)
         var c = x
@@ -44,61 +60,45 @@ object Canon {
         }
         r
       }
-      es.foreach { case (a, b) =>
+      edgeSeq.foreach { case (a, b) =>
         val (ra, rb) = (find(a), find(b))
         if (ra != rb) {
-          if (rankKey(ra) <= rankKey(rb)) parent(rb) = ra
-          else parent(ra) = rb
+          if (order.lteq(ra, rb)) parent(rb) = ra else parent(ra) = rb
         }
       }
-      val all = es.flatMap { case (a, b) => Seq(a, b) }.distinct
-      spark.createDataset(all.toSeq.map(g => (g, find(g))))
-        .toDF("gid", "canon_id")
+      val nodes = edgeSeq.flatMap { case (a, b) => Seq(a, b) }.distinct
+      spark.createDataset(nodes.map(n => (n, find(n))))(pairEnc)
     } else {
-      ccLabelProp(spark, edges)
+      val und = es.select(col("a").as("u"), col("b").as("v"))
+        .union(es.select(col("b").as("u"), col("a").as("v")))
+        .where(col("u") =!= col("v")).distinct()
+        .localCheckpoint(true)
+      var labels = und.select(col("u").as("n")).distinct()
+        .select(col("n"), struct(key(col("n")).as("k"), col("n")).as("lbl"))
+        .localCheckpoint(true)
+      var changed = 1L
+      var iter = 0
+      while (changed > 0 && iter < 50) {
+        val nbr = und.join(labels.withColumnRenamed("n", "v"), "v")
+          .select(col("u").as("n"), col("lbl"))
+        val next = labels.union(nbr).groupBy("n").agg(min("lbl").as("nl"))
+        val merged = labels.join(next, "n")
+          .select(col("n"), least(col("lbl"), col("nl")).as("lbl2"),
+            (col("nl") < col("lbl")).cast("long").as("chg"))
+          .localCheckpoint(true)
+        changed = merged.agg(sum("chg")).as[Long](Encoders.scalaLong).head()
+        labels = merged.select(col("n"), col("lbl2").as("lbl"))
+          .localCheckpoint(true)
+        iter += 1
+      }
+      // components are expected shallow (alias stars, near-dup cliques); a
+      // deeper one is surfaced rather than silently left partially merged
+      if (changed > 0)
+        System.err.println(s"[graft] WARNING: connected-components label " +
+          s"propagation did not converge in $iter iterations " +
+          s"($changed labels still changing) — components with diameter " +
+          s"> $iter are partially merged")
+      labels.select(col("n"), col("lbl.n").as("root")).as(pairEnc)
     }
-  }
-
-  /** Distributed min-label propagation CC over the undirected edge set:
-    * every node repeatedly adopts the minimum rank-key label among itself and
-    * its neighbors; converges in O(component diameter) rounds. Alias
-    * components are shallow stars (surface-form <-> grounding), so this beats
-    * large-star/small-star's constant factors while remaining fully
-    * distributed (two shuffles per round: join + groupBy).
-    */
-  private def ccLabelProp(spark: SparkSession, edges0: DataFrame): DataFrame = {
-    import spark.implicits._
-    val und = edges0.select(col("a").as("u"), col("b").as("v"))
-      .union(edges0.select(col("b").as("u"), col("a").as("v")))
-      .where($"u" =!= $"v")
-      .select($"u", $"v").distinct()
-      .localCheckpoint(true)
-    var labels = und.select($"u".as("gid")).distinct()
-      .select($"gid", expr(s"concat(case when gid like 'uaz:%' then '1|' else '0|' end, gid)").as("lbl"))
-      .localCheckpoint(true)
-    var changedCnt = 1L
-    var iter = 0
-    while (changedCnt > 0 && iter < 30) {
-      val nbrLbl = und.join(labels.withColumnRenamed("gid", "v"), "v")
-        .select($"u".as("gid"), $"lbl")
-      val next = labels.union(nbrLbl)
-        .groupBy($"gid").agg(min($"lbl").as("newLbl"))
-      val merged = labels.join(next, "gid")
-        .select($"gid", least($"lbl", $"newLbl").as("lbl2"),
-          ($"newLbl" < $"lbl").cast("long").as("changed"))
-      val mergedC = merged.localCheckpoint(true)
-      changedCnt = mergedC.agg(sum($"changed")).as[Long].head()
-      labels = mergedC.select($"gid", $"lbl2".as("lbl")).localCheckpoint(true)
-      iter += 1
-    }
-    // alias components are shallow stars; a >30-diameter component means the
-    // input is not the expected shape — surface it rather than silently
-    // emitting a partially-merged labeling
-    if (changedCnt > 0)
-      System.err.println(s"[graft] WARNING: connected-components label " +
-        s"propagation did not converge in $iter iterations " +
-        s"($changedCnt labels still changing) — components with diameter " +
-        s"> $iter are partially merged")
-    labels.select($"gid", expr("substring(lbl, 3)").as("canon_id"))
   }
 }

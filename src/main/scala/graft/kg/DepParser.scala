@@ -525,8 +525,6 @@ object DepParser {
     var inRelcl = false
     var relOuter: (Int, Int, Boolean, Int) = (-1, -1, false, -1) // pendingSubj, curVerb, passive, chainBase
 
-    def npHeadOrSelf(h: Int): Int = h
-
     while (i < n) {
       val t = tags(i)
       if (t == "PUNCT" && words(i) == "(") {

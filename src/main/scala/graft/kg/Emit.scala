@@ -240,6 +240,32 @@ object Emit {
           .otherwise(lit(""))
       ).as("line"))
 
+  /** Modification event labels (reference: ReachConstants MODIFICATION_EVENTS). */
+  private val modEventLabels = Seq("Phosphorylation", "Dephosphorylation",
+    "Ubiquitination", "Deubiquitination", "Hydroxylation", "Dehydroxylation",
+    "Sumoylation", "Desumoylation", "Glycosylation", "Deglycosylation",
+    "Acetylation", "Deacetylation", "Farnesylation", "Defarnesylation",
+    "Ribosylation", "Deribosylation", "Methylation", "Demethylation")
+
+  /** OUTPUT of the Arizona and assembly exports: the theme, plus a
+    * ".label@site" PTM suffix for modifications or ".a" for positive
+    * activations (createOutput:143-165). */
+  private val eventOutput: Column =
+    when(col("pred").isin(modEventLabels: _*), concat(col("obj"), lit("."),
+      lower(substring(col("pred"), 1, 1)),
+      when(col("site") =!= "", concat(lit("@"), col("site")))
+        .otherwise(lit(""))))
+    .when(col("pred") === "Positive_activation", concat(col("obj"), lit(".a")))
+    .otherwise(col("obj"))
+
+  /** INDIRECT of the Arizona and assembly exports (AssemblyRow.isIndirect:
+    * 80-98): activations and regulation-over-regulation. */
+  private val eventIndirect: Column =
+    when(col("pred").rlike("activation$"), lit(true))
+    .when(col("pred").rlike("regulation$") &&
+      col("obj").rlike("regulation\\("), lit(true))
+    .otherwise(lit(false))
+
   /** Arizona-style flat tabular export (reference: export/.../arizona/
     * ArizonaOutputter.scala:14-50 column set; row semantics from
     * assembly/.../export/AssemblyExporter.scala:112-170 and
@@ -259,32 +285,11 @@ object Emit {
     *  - SEEN = evidence count (arizonaFilter keeps rows with seen > 0:
     *    ArizonaOutputter.scala:40-46; every edge here has evidence)
     */
-  /** Modification event labels (reference: ReachConstants MODIFICATION_EVENTS). */
-  private val modEventLabels = Seq("Phosphorylation", "Dephosphorylation",
-    "Ubiquitination", "Deubiquitination", "Hydroxylation", "Dehydroxylation",
-    "Sumoylation", "Desumoylation", "Glycosylation", "Deglycosylation",
-    "Acetylation", "Deacetylation", "Farnesylation", "Defarnesylation",
-    "Ribosylation", "Deribosylation", "Methylation", "Demethylation")
-
   def arizonaTsv(edges: DataFrame): DataFrame = {
-    val isMod = col("pred").isin(modEventLabels: _*)
-    val output =
-      when(isMod, concat(col("obj"), lit("."),
-        lower(substring(col("pred"), 1, 1)),
-        when(col("site") =!= "", concat(lit("@"), col("site")))
-          .otherwise(lit(""))))
-      .when(col("pred") === "Positive_activation", concat(col("obj"), lit(".a")))
-      .when(col("pred") === "Binding", col("obj"))
-      .otherwise(col("obj"))
-    val indirect =
-      when(col("pred").rlike("activation$"), lit(true))
-      .when(col("pred").rlike("regulation$") &&
-        col("obj").rlike("regulation\\("), lit(true))
-      .otherwise(lit(false))
     capListCols(
       edges
-        .withColumn("OUTPUT", output)
-        .withColumn("INDIRECT", indirect),
+        .withColumn("OUTPUT", eventOutput)
+        .withColumn("INDIRECT", eventIndirect),
       keys = Seq(col("obj"), col("OUTPUT"), col("subj"), col("pred"),
         col("site"), col("negated"), col("INDIRECT"), col("hypothesis")),
       order = Seq(col("evidence_text"), col("conv_id"), col("turn_idx")),
@@ -388,28 +393,14 @@ object Emit {
     */
   def assemblyTsv(edges: DataFrame, stageB: DataFrame, canonMap: DataFrame,
                   mitre: Boolean = false): DataFrame = {
-    val isMod = col("pred").isin(modEventLabels: _*)
-    val output =
-      when(isMod, concat(col("obj"), lit("."),
-        lower(substring(col("pred"), 1, 1)),
-        when(col("site") =!= "", concat(lit("@"), col("site")))
-          .otherwise(lit(""))))
-      .when(col("pred") === "Positive_activation", concat(col("obj"), lit(".a")))
-      .otherwise(col("obj"))
-    val indirect =
-      when(col("pred").rlike("activation$"), lit(true))
-      .when(col("pred").rlike("regulation$") &&
-        col("obj").rlike("regulation\\("), lit(true))
-      .otherwise(lit(false))
-
     val perEdge = edges
       .withColumn("INPUT", col("obj"))
-      .withColumn("OUTPUT", output)
+      .withColumn("OUTPUT", eventOutput)
       .withColumn("CONTROLLER",
         when(col("subj") === "", lit("NONE")).otherwise(col("subj")))
       .withColumn("EVENT_LABEL", col("pred"))
       .withColumn("NEGATED", col("negated"))
-      .withColumn("INDIRECT", indirect)
+      .withColumn("INDIRECT", eventIndirect)
       .withColumn("EVENT_ID", assemblyEventId)
 
     // predecessor ids: precedence pairs resolved to row ids by

@@ -1,23 +1,19 @@
 package graft.kg
 
 import graft.model._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Entity-link stage: candidate-key generation (the reference's key-transform
   * cascade, grounding/ReachKBKeyTransforms.scala:20-139) + first-hit-wins KB
   * search (ReachEntityLookup.scala:40-69, InMemoryKB.scala:121-143) + species
   * context re-rank (ReachGrounder.scala:68-95).
   *
-  * Two equivalent implementations:
-  *  - [[KbIndex.resolve]] — broadcast hash-map lookup used inside the
-  *    per-conversation stage (map-side join: the KB is MBs, mentions are TBs;
-  *    broadcasting the small side and probing in-row is the only shape with
-  *    ZERO shuffle — the classic Spark broadcast-join, hand-held so the
-  *    first-hit-wins ordering is explicit and deterministic).
-  *  - [[linkDF]] — pure DataFrame/Catalyst version (explode keys × broadcast
-  *    join × window first-hit) used by the verification queries; demonstrates
-  *    that the semantics are relational and DuckDB-checkable.
+  * One implementation, [[KbIndex.resolve]]: a broadcast hash-map lookup
+  * probed inside the per-conversation stage (map-side join: the KB is MBs,
+  * mentions are TBs; broadcasting the small side and probing in-row is the
+  * only shape with ZERO shuffle — the classic Spark broadcast-join,
+  * hand-held so the first-hit-wins ordering is explicit and deterministic).
+  * The `kg_link_firsthit` contract query runs the same lookup, so its
+  * DuckDB oracle checks the code the pipeline executes. Spark-free.
   */
 object Link {
 
@@ -162,63 +158,6 @@ object Link {
       .filter(_.nonEmpty).distinct
   }
 
-  /** Same cascade as a Catalyst column array — UDF-free builtin-function
-    * chain (regexp + array HOFs), fully codegen'd and push-down friendly
-    * (SURVEY.md F1-F3). Label-aware, mirroring [[candidateKeys]] exactly.
-    */
-  def candidateKeysCol(text: Column, label: Column): Column = {
-    def canon(c: Column): Column =
-      regexp_replace(lower(trim(regexp_replace(trim(c), "(?i)(.*)_human$", "$1"))),
-        "[ '/\\-]", "")
-    val t = trim(text)
-    // family: "_family" forms are protected (same as base), else strip the
-    // post-attributive
-    val fam = when(t.rlike("(?i)^.*_family$"), t)
-      .when(t.rlike("(?i)^.*(?: protein family|family)$"),
-        regexp_extract(t, "(?i)^(.*?)(?: protein family|family)$", 1))
-    // protein post-attributive
-    val ppa = when(t.rlike("(?i)^.*(?: mutant protein|protein)$"),
-      regexp_extract(t, "(?i)^(.*?)(?: mutant protein|protein)$", 1))
-    // mutant-protein phrases
-    val mut = when(t.rlike("(?i)^phosphorylated\\s+.*\\s+\\w+\\s+mutant$"),
-        regexp_extract(t, "(?i)^phosphorylated\\s+(.*)\\s+\\w+\\s+mutant$", 1))
-      .when(t.rlike("(?i)^.*\\s+\\w+\\s+mutant$"),
-        regexp_extract(t, "(?i)^(.*)\\s+\\w+\\s+mutant$", 1))
-      .when(t.rlike("(?i)^mutant(?: |-)+.*$"),
-        regexp_extract(t, "(?i)^mutant(?: |-)+(.*)$", 1))
-    // protein domain: NAME-DOMAIN with a known domain short name
-    val domains = array(proteinDomainShortNames.toSeq.sorted.map(lit): _*)
-    val pd = when(t.rlike("(?i)^\\w+-\\w+$") &&
-        array_contains(domains,
-          lower(regexp_extract(t, "(?i)^(\\w+)-(\\w+)$", 2))),
-      regexp_extract(t, "(?i)^(\\w+)-(\\w+)$", 1))
-    // gene-name affixes: strip trailing (e)GFP runs, then drop hyphen-
-    // separated prefixes; all-affix strings keep the last part
-    val prefixes = array(geneNamePrefixes.toSeq.sorted.map(lit): _*)
-    val sansSuf = trim(regexp_replace(t, "(?i)(-?e?gfp)+$", ""))
-    val parts = split(sansSuf, "-")
-    val sansAff = array_join(
-      filter(parts, p => !array_contains(prefixes, lower(p))), "-")
-    val gna = when(sansAff === t, lit(null))
-      .when(sansAff === "", element_at(parts, -1))
-      .when(sansAff =!= sansSuf, sansAff)
-      .when(sansSuf === t, lit(null))
-      .otherwise(sansSuf)
-    // fused p/u PTM prefix (case-sensitive)
-    val ptm = when(t.rlike("^(p|u)[A-Z0-9_-][A-Za-z0-9_-]*$"),
-      regexp_extract(t, "^(p|u)([A-Z0-9_-][A-Za-z0-9_-]*)$", 2))
-    // organ post-attributives
-    val organ = when(t.rlike("(?i)^.*(?: cells?| tissues?| fluids?)+$"),
-      regexp_extract(t, "(?i)^(.*?)((?: cells?| tissues?| fluids?))+$", 1))
-    val raws = when(label === "Family", array(t, fam))
-      .when(label === "Gene_or_gene_product" || label === "Complex",
-        array(t, ppa, mut, pd, gna, ptm))
-      .when(label === "Organ", array(t, organ))
-      .otherwise(array(t))
-    array_distinct(filter(transform(raws, r => canon(r)),
-      k => k.isNotNull && length(k) > 0))
-  }
-
   /** Deterministic failsafe grounding (replaces the reference's stateful
     * counter, AzFailsafeKBML.scala:18-27): ns `uaz`, id = canonical key.
     */
@@ -277,35 +216,5 @@ object Link {
     else if (labels.contains("Context") || labels.contains("BioChemicalEntity") ||
              head == "Site" || head == "BioProcess") Some(head)
     else None
-  }
-
-  /** DataFrame variant: mentions(text, label) -> first-hit grounding.
-    * explode(keys) ⋈ broadcast(kb) + window-first. Used by verification
-    * queries; semantics identical to [[KbIndex.resolve]] with empty context.
-    */
-  def linkDF(spark: SparkSession, mentions: DataFrame, kb: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val keyed = mentions
-      .withColumn("keys", candidateKeysCol(col("text"), col("label")))
-      .select(col("*"), posexplode(col("keys")).as(Seq("key_rank", "key")))
-    val kbKeyed = kb.withColumn("kb_key", regexp_replace(lower(trim(col("text"))), "[ '/\\-]", ""))
-      .select(col("kb_key"), col("label").as("kb_label"), col("namespace"),
-        col("id"), col("species"), col("kb_rank"))
-    val joined = keyed.join(broadcast(kbKeyed),
-      keyed("key") === kbKeyed("kb_key") && keyed("label") === kbKeyed("kb_label"),
-      "left")
-    val spRank = when(col("species") === "human", 1)
-      .when(col("species") === "" || col("species").isNull, 2).otherwise(3)
-    val w = Window.partitionBy(col("mention_key"))
-      .orderBy(col("kb_rank").asc_nulls_last, col("key_rank").asc,
-        spRank.asc, col("id").asc_nulls_last)
-    joined
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .withColumn("ns", coalesce(col("namespace"), lit("uaz")))
-      .withColumn("ns_id", coalesce(col("id"),
-        concat(lit("UAZ:"), regexp_replace(lower(trim(col("text"))), "[ '/\\-]", ""))))
-      .drop("rn", "keys", "key_rank", "key", "kb_key", "kb_label",
-        "namespace", "id", "kb_rank")
   }
 }

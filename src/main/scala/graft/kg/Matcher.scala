@@ -241,14 +241,6 @@ object Matcher {
         }
     }
 
-  /** List-returning wrapper (tests / small callers). */
-  def tryMatch(pats: List[PE], words: Array[String], state: State,
-               pos: Int, b: Bind): List[(Int, Bind)] = {
-    val buf = mutable.ListBuffer.empty[(Int, Bind)]
-    tryMatchCb(pats, words, state, pos, b)((e, bb) => buf += ((e, bb)))
-    buf.toList
-  }
-
   /** Coordinated list: longest lists first, then shorter (backtracking). */
   private def mlMatchCb(ml: ML, words: Array[String], state: State,
                         pos: Int, b: Bind)(emit: (Int, Bind) => Unit): Unit =

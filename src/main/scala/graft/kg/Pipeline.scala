@@ -99,11 +99,10 @@ object Pipeline {
                                  bG: Broadcast[BioRules.Grammar])
       : Dataset[(String, String, String)] = {
     import spark.implicits._
-    // cheap candidate pre-filter: the alias patterns all carry a parenthesis
-    // or "known as" — the pre-pass annotates only those turns, so the extra
+    // cheap candidate pre-filter: every alias pattern carries a parenthesis
+    // or a cue word — the pre-pass annotates only those turns, so the extra
     // scan reads text once and tokenizes almost nothing
-    val cands = turns.filter(t => t.text != null &&
-      (t.text.contains("(") || t.text.contains("known as")))
+    val cands = turns.filter(t => BioRules.hasAliasCue(t.text))
     Annotate(spark, cands, bTrie)
       .flatMap(at => BioRules.aliasDefsTurn(at, bG.value)).distinct()
   }

@@ -18,13 +18,29 @@ object Similarity {
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, v) => acc + v)
 
-  private def l2(a: Column): Column = sqrt(dot(a, a))
+  /** `vec_id` and `embedding` as `idAs`, the double-cast vector `vecAs` and
+    * its L2 norm `nAs`. */
+  private def prep(df: DataFrame, idAs: String, vecAs: String,
+                   nAs: String): DataFrame = {
+    val d = transform(col("embedding"), x => x.cast("double"))
+    df.select(col("vec_id").as(idAs), d.as(vecAs),
+      sqrt(aggregate(transform(d, x => x * x), lit(0.0d), (a, v) => a + v))
+        .as(nAs))
+  }
 
-  /** Adds `unit` = embedding normalized to unit length (double precision). */
-  def withUnitNorm(df: DataFrame, colName: String): DataFrame = {
-    val d = transform(col(colName), x => x.cast("double"))
-    df.withColumn("unit",
-      transform(d, x => x / l2(d)))
+  /** The exact tail every search shares: cosine of each (qid, neighbor_id)
+    * row's query vector `qv`/`qn` and corpus vector `cv`/`cn`, rounded to
+    * 4dp, then the top `k` per query (ties by neighbor id).
+    */
+  private def topK(pairs: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("qid"))
+      .orderBy(col("sim").desc, col("neighbor_id").asc)
+    pairs
+      .withColumn("sim",
+        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 4))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("qid"), col("neighbor_id"), col("rank"))
   }
 
   /** Brute-force cosine top-k: queries x corpus cross join (broadcast the
@@ -34,25 +50,10 @@ object Similarity {
     * oracle) and rounded to 4dp before ranking so cross-engine float
     * accumulation jitter (~1e-15) cannot flip ranks; ties break by id.
     */
-  def bruteTopK(embeddings: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    def prep(df: DataFrame, idAs: String, vecAs: String, nAs: String) = {
-      val d = transform(col("embedding"), x => x.cast("double"))
-      df.select(col("vec_id").as(idAs), d.as(vecAs),
-        sqrt(aggregate(transform(d, x => x * x), lit(0.0d), (a, v) => a + v))
-          .as(nAs))
-    }
-    val corpus = prep(embeddings, "neighbor_id", "cv", "cn")
-    val qs = prep(queries, "qid", "qv", "qn")
-    val scored = corpus.crossJoin(broadcast(qs))
-      .filter(col("qid") =!= col("neighbor_id"))
-      .withColumn("sim",
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 4))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("neighbor_id"), col("rank"))
-  }
+  def bruteTopK(embeddings: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    topK(prep(embeddings, "neighbor_id", "cv", "cn")
+      .crossJoin(broadcast(prep(queries, "qid", "qv", "qn")))
+      .filter(col("qid") =!= col("neighbor_id")), k)
 
   private def splitmix64(x0: Long): Long = Dedup.splitmix64(x0)
 
@@ -307,25 +308,12 @@ object Similarity {
       .flatMap { case (id, v) =>
         topCents(bc.value, unit(v), nprobe).map(l => (id, l)) }
       .toDF("qid", "list")
-    def prep(df: DataFrame, idAs: String, vecAs: String, nAs: String) = {
-      val d = transform(col("embedding"), x => x.cast("double"))
-      df.select(col("vec_id").as(idAs), d.as(vecAs),
-        sqrt(aggregate(transform(d, x => x * x), lit(0.0d), (a, v) => a + v))
-          .as(nAs))
-    }
     val cand = lists.join(probes, Seq("list"))
       .filter(col("qid") =!= col("neighbor_id"))
       .select("qid", "neighbor_id").distinct()
-    val scored = cand
+    topK(cand
       .join(prep(embeddings, "neighbor_id", "cv", "cn"), "neighbor_id")
-      .join(prep(queries, "qid", "qv", "qn"), "qid")
-      .withColumn("sim",
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 4))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("neighbor_id"), col("rank"))
+      .join(prep(queries, "qid", "qv", "qn"), "qid"), k)
   }
 
   /** One-shot build + search (the contract/oracle entry point; production
@@ -354,25 +342,12 @@ object Similarity {
             (id, t, bk)
           }
         }.toDF(idAs, "table", "bucket")
-    def prep(df: DataFrame, idAs: String, vecAs: String, nAs: String) = {
-      val d = transform(col("embedding"), x => x.cast("double"))
-      df.select(col("vec_id").as(idAs), d.as(vecAs),
-        sqrt(aggregate(transform(d, x => x * x), lit(0.0d), (a, v) => a + v))
-          .as(nAs))
-    }
     val cand = buckets(embeddings, "neighbor_id")
       .join(buckets(queries, "qid"), Seq("table", "bucket"))
       .filter(col("qid") =!= col("neighbor_id"))
       .select("qid", "neighbor_id").distinct()
-    val scored = cand
+    topK(cand
       .join(prep(embeddings, "neighbor_id", "cv", "cn"), "neighbor_id")
-      .join(prep(queries, "qid", "qv", "qn"), "qid")
-      .withColumn("sim",
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 4))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("neighbor_id"), col("rank"))
+      .join(prep(queries, "qid", "qv", "qn"), "qid"), k)
   }
 }

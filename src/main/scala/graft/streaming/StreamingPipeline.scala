@@ -82,13 +82,6 @@ object StreamingPipeline {
       .filter(_.turn_idx > st.emittedThrough)
       .iterator
 
-  // cheap token guard: only turns that can possibly DEFINE an alias pay the
-  // defs pre-scan (mirrors the batch pre-filter in Pipeline.aliasDefsDs)
-  private def mayDefineAlias(at: AnnotatedTurn): Boolean =
-    at.sents.exists(s => s.words.exists(w =>
-      w == "(" || w == "known" || w == "called" || w == "referred" ||
-        w == "designated" || w == "termed" || w == "named"))
-
   def triples(spark: SparkSession, turns: Dataset[Turn],
               idleTimeout: Option[String] = None,
               cfg: KgConfig = KgConfig.default): Dataset[PreTriple] = {
@@ -142,7 +135,8 @@ object StreamingPipeline {
             val prior = state.getOption.map(_.mentions).getOrElse(Seq.empty)
             var defs = state.getOption.map(_.aliasDefs).getOrElse(Seq.empty)
             val newMentions = incoming.flatMap { at =>
-              if (mayDefineAlias(at)) {
+              // the batch pre-pass's filter (Pipeline.aliasDefsDs)
+              if (at.sents.exists(s => BioRules.hasAliasCue(s.text))) {
                 val d = BioRules.aliasDefsTurn(at, bG.value)
                   .map(x => (x._2, x._3))
                 if (d.nonEmpty) defs = (defs ++ d).distinct.sorted

@@ -3,10 +3,11 @@ package graft
 import graft.kg._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Link-stage semantics (no Spark): key-transform cascade, first-hit-wins
-  * ordering, species re-rank, deterministic failsafe — pins the semantics the
-  * DataFrame variant and the SQL oracle must both reproduce
-  * (reference: TestKBKeyTransforms, TestIMKB, TestReachGrounder).
+/** Link-stage semantics: key-transform cascade, first-hit-wins ordering,
+  * species re-rank, deterministic failsafe — pins the semantics the
+  * `KbIndex` lookup and the SQL oracle must both reproduce (reference:
+  * TestKBKeyTransforms, TestIMKB, TestReachGrounder). Only the last case
+  * starts Spark.
   */
 class LinkSpec extends AnyFunSuite {
   private lazy val kb = new Link.KbIndex(Lexicon.kb)
@@ -192,5 +193,31 @@ class LinkSpec extends AnyFunSuite {
     assert(fam.namespace == "pfam")
     val sp = kb.resolve("mouse", "Species", "")
     assert(sp.namespace == "taxonomy" && sp.id == "10090")
+  }
+
+  test("kg_link_firsthit returns the pinned 25 groundings") {
+    // the rows the query's DuckDB oracle accepts (tools/oracle_check.py
+    // runs outside this suite)
+    val expect = Seq(
+      ("m01", "uniprot", "P31749"), ("m02", "uniprot", "P31749"),
+      ("m03", "uniprot", "P04637"), ("m04", "uaz", "UAZ:phosphorylatederk2"),
+      ("m05", "pfam", "PF02196"), ("m06", "pfam", "PF00071"),
+      ("m07", "uniprot", "P28482"), ("m08", "uaz", "UAZ:xyz123"),
+      ("m09", "uniprot", "P24385"), ("m10", "taxonomy", "10090"),
+      ("m11", "uaz", "UAZ:thenucleus"), ("m12", "pubchem", "CID5284616"),
+      ("m13", "uniprot", "P31749"), ("m14", "uniprot", "P28482"),
+      ("m15", "uniprot", "P31749"), ("m16", "uniprot", "P31749"),
+      ("m17", "uniprot", "P28482"), ("m18", "uniprot", "Q02750"),
+      ("m19", "uberon", "UBERON:0000955"), ("m20", "uniprot", "P01116"),
+      ("m21", "uniprot", "P04637"), ("m22", "pfam", "PF01017"),
+      ("m23", "bepc", "AMPK"), ("m24", "bepc", "ACTIVIN_A"),
+      ("m25", "uaz", "UAZ:activinafamily"))
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val got = SparkEntry.queries("kg_link_firsthit")(spark,
+      "/root/testdata/sf0.001")
+      .select("mention_key", "ns", "ns_id").as[(String, String, String)]
+      .collect().sortBy(_._1).toSeq
+    assert(got == expect)
   }
 }

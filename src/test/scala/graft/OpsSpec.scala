@@ -56,6 +56,15 @@ class OpsSpec extends AnyFunSuite {
     assert(perCluster.forall(c => c._2 == 1L && c._3 == c._1))
   }
 
+  test("dedup clusters order doc ids numerically on both paths") {
+    // as decimal strings "10" < "9"; the numeric survivor is 9
+    val pairs = Seq((9L, 10L), (10L, 11L)).toDF("a", "b")
+    val expect = Set((9L, 9L, 1), (9L, 10L, 0), (9L, 11L, 0))
+    for (thr <- Seq(100000L, 0L))
+      assert(Dedup.clusters(pairs, driverThreshold = thr)
+        .as[(Long, Long, Int)].collect().toSet == expect, s"threshold $thr")
+  }
+
   test("decontamination flags quoted eval items, spares clean docs") {
     val eval = Seq((100L, "alpha beta gamma delta epsilon zeta eta theta"))
       .toDF("doc_id", "text")

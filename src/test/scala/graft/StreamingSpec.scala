@@ -182,4 +182,39 @@ class StreamingSpec extends AnyFunSuite {
           keys.diff(keys.distinct))
     }
   }
+
+  test("a comma-form alias definition reaches the alias pre-pass in batch " +
+       "and streaming") {
+    import spark.implicits._
+    def conv(id: String, definition: String): Seq[Turn] =
+      Seq("MEK1 phosphorylates ERK2.", definition,
+        "Zorp1 phosphorylates MEK1.").zipWithIndex.map { case (t, i) =>
+        Transcripts.mkTurn(id, i, "user", t) }
+    val comma = conv("alias_comma", "Zorp1, also called AKT1, phosphorylates ERK2.")
+    val paren = conv("alias_paren", "Zorp1 (also called AKT1) phosphorylates ERK2.")
+    def batch(turns: Seq[Turn]): Set[(Int, String, String, String)] =
+      Pipeline.extract(spark, spark.createDataset(turns)).edges
+        .select("turn_idx", "subj", "pred", "obj")
+        .as[(Int, String, String, String)].collect().toSet
+    val fromComma = batch(comma)
+    assert(fromComma == batch(paren))
+    // the alias surface is used after its definition turn
+    assert(fromComma((2, "uniprot:P31749", "Positive_regulation",
+      "Phosphorylation(uniprot:Q02750)")))
+    // one turn per micro-batch; streaming rescans forward from the
+    // definition, so from the defining turn on it emits batch's
+    // conversation-fold triples (streaming emits before canonicalization)
+    def key(t: PreTriple) = (t.turn_idx, t.subj_gid, t.pred, t.obj_pred,
+      t.obj_gid, t.obj_gid2, t.site)
+    val acc = new org.apache.spark.util.CollectionAccumulator[Lineage]
+    spark.sparkContext.register(acc)
+    val folded = Pipeline.stageB(spark, Pipeline.stageMentions(spark,
+        spark.createDataset(comma), "t", acc), "t", acc)
+      .filter(col("kind") === "triple").select("triple.*").as[PreTriple]
+      .collect().map(key).filter(_._1 >= 1).toSet
+    assert(folded.exists(_._2 == "uaz:UAZ:zorp1"))
+    val got = streamed("triples_alias_comma", KgConfig.default,
+      comma.map(Seq(_))).map(key).filter(_._1 >= 1).toSet
+    assert(got == folded)
+  }
 }
