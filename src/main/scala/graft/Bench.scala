@@ -150,11 +150,14 @@ object Bench {
     }
 
     // KG pipeline throughput: generated corpus incl. skewed mega-conversation.
-    // All rep timings + adjacent control readings are emitted.
+    // All timed rep timings + adjacent control readings are emitted.
     val (turns, _) = Transcripts.corpus(spark, 2000, seed = 42, megaTurns = 10000)
     val turnsC = turns.cache()
     val nTurns = turnsC.count()
     var nEdges = 0L
+    // untimed warmup rep: the first rep pays JIT for the matcher and the
+    // fold (reps read 12.5 / 6.9 / 5.9 s on a 4-core host without it)
+    Pipeline.extract(spark, turnsC).edges.count()
     val kgControls = scala.collection.mutable.ArrayBuffer.empty[Double]
     val kgReps = (1 to math.max(reps, 3)).map { _ =>
       kgControls += control()

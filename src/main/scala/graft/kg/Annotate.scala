@@ -291,9 +291,6 @@ object Annotate {
   def apply(spark: SparkSession, turns: Dataset[Turn],
             bTrie: Broadcast[Trie]): Dataset[AnnotatedTurn] = {
     import spark.implicits._
-    turns
-      .filter(t => t.role != "tool" && t.text != null && t.text.nonEmpty)
-      .map(t => AnnotatedTurn(t.conv_id, t.turn_idx, t.role,
-        annotateText(bTrie.value, t.text)))
+    turns.filter(t => KgCore.keep(t)).map(KgCore.annotate(bTrie.value, _))
   }
 }

@@ -35,10 +35,11 @@ object Broadcasts {
       val app = sc.applicationId
       val live = memo.filter(_.app == app)
       val e = live.find(e => (e.grammar eq cfg.grammar) && (e.kb eq cfg.kb))
-        .getOrElse(Entry(app, cfg.grammar, cfg.kb, (
-          sc.broadcast(Annotate.buildTrie(cfg.kb.lexicon, cfg.kb.stopList)),
-          sc.broadcast(new Link.KbIndex(cfg.kb.kb)),
-          sc.broadcast(cfg.effectiveGrammar))))
+        .getOrElse {
+          val p = KgCore.compile(cfg)
+          Entry(app, cfg.grammar, cfg.kb, (sc.broadcast(p.trie),
+            sc.broadcast(p.kb), sc.broadcast(p.grammar)))
+        }
       memo = (e :: live.filterNot(_ eq e)).take(MaxEntries)
       e.all
     }

@@ -20,6 +20,9 @@ import org.apache.spark.util.CollectionAccumulator
   * Checkpoint-resumable at every stage boundary via TableIO manifests
   * (mention -> link -> canonicalize -> materialize, per the north rule).
   *
+  * The per-turn and per-group work inside these stages is [[KgCore]]'s;
+  * `KgCore.stageB` runs the same functions in-process.
+  *
   * Skew: the conv grouping key is salted with `turn_idx / chunkTurns`, so a
   * mega-conversation fans out across tasks in chunkTurns-sized spans; the
   * backward-looking context (3 turns) and coref (<=3 sentences) windows only
@@ -28,7 +31,7 @@ import org.apache.spark.util.CollectionAccumulator
   */
 object Pipeline {
 
-  val chunkTurns = 1000
+  val chunkTurns: Int = KgCore.chunkTurns
 
   final case class Result(edges: DataFrame, nodes: DataFrame,
                           lineage: DataFrame)
@@ -135,8 +138,7 @@ object Pipeline {
           if (useJoin) defs.sort("_2", "_3")
             .limit(math.min(thr, Int.MaxValue.toLong).toInt).collect()
           else head
-        val pooled =
-          capped.map(x => (x._2, x._3)).distinct.sortBy(identity).toSeq
+        val pooled = KgCore.surfaces(capped)
         if (useJoin)
           System.err.println(s"[graft] WARNING: crossConvAliases pool " +
             s"truncated to $thr definitions (deterministic sort order)")
@@ -146,11 +148,9 @@ object Pipeline {
           BioRules.extractTurn(at, bPool.value, bG.value)
         }
       } else if (!useJoin) {
-        // broadcast path: surfaces sorted per conv so injection order (which
-        // resolves overlapping-surface conflicts) is deterministic and
-        // identical to the join path's
+        // broadcast path: the same per-conv surfaces as the join path's
         val aliasMap = head.groupBy(_._1).map { case (conv, xs) =>
-          conv -> xs.map(x => (x._2, x._3)).sortBy(identity).toSeq
+          conv -> KgCore.surfaces(xs)
         }
         val bAliases = spark.sparkContext.broadcast(aliasMap)
         annotated.flatMap { at =>
@@ -160,7 +160,7 @@ object Pipeline {
         }
       } else {
         val defsByConv = defs.groupByKey(_._1).mapGroups { (conv, it) =>
-          (conv, it.map(x => (x._2, x._3)).toArray.sortBy(identity).toSeq)
+          (conv, KgCore.surfaces(it.toSeq))
         }
         annotated
           .joinWith(defsByConv, annotated("conv_id") === defsByConv("_1"),
@@ -186,18 +186,11 @@ object Pipeline {
     // through the conv_id exchange made the fold stage shuffle-bandwidth
     // bound (measured 1.44x per-task inflation 2->8 cores); send only the
     // head and rebuild on the reduce side
-    val compact = mentions.map(m => m.copy(labels = Array(m.labels.head)))
-    val grouped = compact
-      .groupByKey(m => (m.conv_id, m.turn_idx / chunkTurns))
+    val grouped = mentions.map(KgCore.compact)
+      .groupByKey(KgCore.groupKey)
       .flatMapGroups { (key, it) =>
-        Lexicon.withTaxonomy(bG.value.taxonomy) {
-          val ms = it.map { m =>
-            InCount.inc()
-            m.copy(labels = Lexicon.labelClosure(m.labels.head))
-          }.toSeq
-          ConvProcessor.process(key._1, ms, bKb.value, policy,
-            overrideSpecies = overrideSpecies).iterator
-        }
+        KgCore.fold(key._1, it.map { m => InCount.inc(); m }, bKb.value,
+          bG.value.taxonomy, policy, overrideSpecies).iterator
       }
     instrument(grouped, "link_coref_emit", runId, acc)
   }

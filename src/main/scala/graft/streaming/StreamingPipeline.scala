@@ -108,9 +108,7 @@ object StreamingPipeline {
     // earlier — or the same — turn) inject rescan surfaces exactly as the
     // batch pre-pass does; only the BACKWARD rescan stays batch-only.
     val annotated: Dataset[AnnotatedTurn] = turns
-      .filter(t => t.role != "tool" && t.text != null && t.text.nonEmpty)
-      .map(t => AnnotatedTurn(t.conv_id, t.turn_idx, t.role,
-        Annotate.annotateText(bTrie.value, t.text)))
+      .filter(t => KgCore.keep(t)).map(KgCore.annotate(bTrie.value, _))
 
     // stage 2 (stateful): bounded-lookback conversation fold; state carries
     // the last `lookback` turns' mentions plus ALL alias defs seen so far

@@ -1,9 +1,13 @@
 package graft
 
-import graft.kg.{KbData, KgConfig}
+import graft.kg._
+import graft.model.Lineage
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.util.CollectionAccumulator
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** REST serving face (S11 — ApiRuler semantics): POST text → the export
   * JSON inside the reference's {resultJson, hasError} envelope.
@@ -153,6 +157,93 @@ class ServeSpec extends AnyFunSuite {
           status)
       } finally sock.close()
     } finally server.stop(0)
+  }
+
+  /** The Spark-staged form of one request: the pipeline's stages over the
+    * same one-turn corpus, then the same exporter.
+    */
+  private def staged(text: String, outFormat: String, convId: String): String = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val turns = spark.createDataset(Seq(
+      Transcripts.mkTurn(convId, 0, "user", text)))
+    val acc = new CollectionAccumulator[Lineage]
+    spark.sparkContext.register(acc)
+    val b = Pipeline.stageB(spark,
+      Pipeline.stageMentions(spark, turns, convId, acc), convId, acc).cache()
+    try outFormat match {
+      case "fries" =>
+        Emit.friesFrameGraph(b.toDF(), Some(turns.toDF()))
+          .select(col("fries")).as[String].collect().headOption.getOrElse("{}")
+      case "indexcard" =>
+        val (edges, nodes) = Pipeline.stageMaterialize(spark, b,
+          Pipeline.stageCanon(spark, b))
+        Emit.indexCardJson(Emit.indexCardFlat(edges, nodes))
+          .as[String].collect().mkString("[", ",", "]")
+    } finally b.unpersist()
+  }
+
+  test("annotateText in both formats is byte-identical to the Spark-staged " +
+       "exporters on the same one-turn corpus") {
+    val texts = Seq(
+      "MEK1 phosphorylates ERK2. AKT1 binds MEK1 in human cells.",
+      "AKT4H (alias AKT1) phosphorylates ERK2. ERK2 is not ubiquitinated.",
+      "RAS activates RAF. MEK1 increases the amount of ERK2.")
+    texts.zipWithIndex.foreach { case (text, i) =>
+      Seq("fries", "indexcard").foreach { f =>
+        val got = Serve.annotateText(spark, text, f, s"api9$i")
+        assert(got == staged(text, f, s"api9$i"), s"$f on text $i")
+        assert(got.length > 2, s"$f on text $i is empty")
+      }
+    }
+  }
+
+  test("an unknown output format answers 400 before any extraction: no " +
+       "Spark job starts") {
+    val sc = spark.sparkContext
+    val group = "serve-spec-format"
+    val marker = "graft.spec.marker"
+    // every job of the group, in start order; the marker job's entry is
+    // "marker", so once it is seen every earlier job has been seen too
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(p => seen.add(Option(p.getProperty(marker)).getOrElse("job")))
+    }
+    def jobsDuring(f: => Any): Int = {
+      seen.clear()
+      f
+      sc.setLocalProperty(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(marker, null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.contains("marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains("marker"), "the listener missed the marker job")
+      seen.asScala.count(_ == "job")
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "ServeSpec")
+    try {
+      val text = "MEK1 phosphorylates ERK2."
+      assert(jobsDuring(Serve.annotateText(spark, text, "indexcard", "api1")) > 0)
+      assert(jobsDuring(intercept[IllegalArgumentException](
+        Serve.annotateText(spark, text, "bogus", "api2"))) == 0)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    // over HTTP: a KB that fails extraction (a null lexicon surface) still
+    // answers 400 for an unknown format, as the format is checked first
+    val broken = KgConfig(kb = KbData.builtin.copy(
+      lexicon = KbData.builtin.lexicon :+ ((null, "Gene_or_gene_product"))))
+    withServer(broken) { port =>
+      val r = post(port, "/api/text?output=bogus", "MEK1 phosphorylates ERK2.")
+      assert(r.statusCode() == 400, r.body())
+      assert(r.body().contains("unknown output format"), r.body())
+    }
   }
 
   test("an internal failure answers 500 with the request id only; the " +
