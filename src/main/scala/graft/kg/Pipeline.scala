@@ -8,6 +8,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
 
+import scala.jdk.CollectionConverters._
+
 /** The stage DAG (reference: ReachSystem.extractFrom, ReachSystem.scala:75-106,
   * re-planned for Spark's execution model — SURVEY.md §3.1):
   *
@@ -19,6 +21,8 @@ import org.apache.spark.util.CollectionAccumulator
   *
   * Checkpoint-resumable at every stage boundary via TableIO manifests
   * (mention -> link -> canonicalize -> materialize, per the north rule).
+  * One private stage sequence serves [[run]] (writes and reads back every
+  * table) and [[extract]] (holds stage_b in memory, the rest lazy).
   *
   * The per-turn and per-group work inside these stages is [[KgCore]]'s;
   * `KgCore.stageB` runs the same functions in-process.
@@ -33,8 +37,12 @@ object Pipeline {
 
   val chunkTurns: Int = KgCore.chunkTurns
 
+  /** A run's tables: edges, nodes and lineage, plus the stage_b rows and
+    * the canon map the exporters read.
+    */
   final case class Result(edges: DataFrame, nodes: DataFrame,
-                          lineage: DataFrame)
+                          lineage: DataFrame, stageB: Dataset[StageBRow],
+                          canonMap: DataFrame)
 
   /** Thread-local rows_in counter. The stage transform (flatMap /
     * flatMapGroups) and the [[instrument]] wrapper are pipelined into the SAME
@@ -130,35 +138,7 @@ object Pipeline {
       .collect()
     val useJoin = head.length > thr
     val extracted =
-      if (cfg.crossConvAliases) {
-        // multi-document batch semantics (sent61): pool every conversation's
-        // alias surfaces and rescan ALL conversations with them. Capped —
-        // an unbounded pool is a corpus-sized broadcast.
-        val capped =
-          if (useJoin) defs.sort("_2", "_3")
-            .limit(math.min(thr, Int.MaxValue.toLong).toInt).collect()
-          else head
-        val pooled = KgCore.surfaces(capped)
-        if (useJoin)
-          System.err.println(s"[graft] WARNING: crossConvAliases pool " +
-            s"truncated to $thr definitions (deterministic sort order)")
-        val bPool = spark.sparkContext.broadcast(pooled)
-        annotated.flatMap { at =>
-          InCount.inc()
-          BioRules.extractTurn(at, bPool.value, bG.value)
-        }
-      } else if (!useJoin) {
-        // broadcast path: the same per-conv surfaces as the join path's
-        val aliasMap = head.groupBy(_._1).map { case (conv, xs) =>
-          conv -> KgCore.surfaces(xs)
-        }
-        val bAliases = spark.sparkContext.broadcast(aliasMap)
-        annotated.flatMap { at =>
-          InCount.inc()
-          BioRules.extractTurn(at, bAliases.value.getOrElse(at.conv_id, Nil),
-            bG.value)
-        }
-      } else {
+      if (useJoin && !cfg.crossConvAliases) {
         val defsByConv = defs.groupByKey(_._1).mapGroups { (conv, it) =>
           (conv, KgCore.surfaces(it.toSeq))
         }
@@ -169,6 +149,30 @@ object Pipeline {
             InCount.inc()
             BioRules.extractTurn(at, if (d == null) Nil else d._2, bG.value)
           }
+      } else {
+        // broadcast path: conv_id -> the conversation's own surfaces (the
+        // join path's), else the pool. With crossConvAliases (multi-document
+        // batch semantics, sent61) the map is empty and the pool holds every
+        // conversation's surfaces, so ALL conversations are rescanned with
+        // them. Capped — an unbounded pool is a corpus-sized broadcast.
+        val aliases: (Map[String, Seq[(String, String)]], Seq[(String, String)]) =
+          if (!cfg.crossConvAliases)
+            (head.groupBy(_._1).map { case (c, xs) => c -> KgCore.surfaces(xs) },
+              Nil)
+          else if (!useJoin) (Map.empty, KgCore.surfaces(head))
+          else {
+            val capped = defs.sort("_2", "_3")
+              .limit(math.min(thr, Int.MaxValue.toLong).toInt).collect()
+            System.err.println(s"[graft] WARNING: crossConvAliases pool " +
+              s"truncated to $thr definitions (deterministic sort order)")
+            (Map.empty, KgCore.surfaces(capped))
+          }
+        val bAliases = spark.sparkContext.broadcast(aliases)
+        annotated.flatMap { at =>
+          InCount.inc()
+          val (byConv, pool) = bAliases.value
+          BioRules.extractTurn(at, byConv.getOrElse(at.conv_id, pool), bG.value)
+        }
       }
     instrument(extracted, "mentions", runId, acc)
   }
@@ -281,60 +285,70 @@ object Pipeline {
     (edges, nodes)
   }
 
+  // ---- the one stage sequence ---------------------------------------------
+
+  /** The only code that orders the stages (mentions_raw -> stage_b ->
+    * canon_map -> edges, nodes) and creates a run's lineage accumulator.
+    * `hold(table, build)` is what the next stage reads in place of the
+    * built table; `lineage` turns the accumulated rows into the lineage
+    * table once every stage is held.
+    */
+  private def stages(spark: SparkSession, turns: Dataset[Turn], cfg: KgConfig,
+                     aliasJoinThreshold: Long, runId: String,
+                     hold: (String, => DataFrame) => DataFrame,
+                     lineage: Seq[Lineage] => DataFrame): Result = {
+    import spark.implicits._
+    val acc = new CollectionAccumulator[Lineage]
+    spark.sparkContext.register(acc, "lineage")
+    val mentions = hold("mentions_raw", stageMentions(spark, turns, runId,
+      acc, cfg, aliasJoinThreshold).toDF()).as[MentionRow]
+    val b = hold("stage_b", stageB(spark, mentions, runId, acc, cfg).toDF())
+      .as[StageBRow]
+    val canonMap = hold("canon_map", stageCanon(spark, b))
+    val (edges, nodes) = stageMaterialize(spark, b, canonMap)
+    Result(hold("edges", edges), hold("nodes", nodes),
+      lineage(acc.value.asScala.toSeq), b, canonMap)
+  }
+
   // ---- checkpointed run (spark-submit path, resumable) -------------------
 
+  /** Each table is written to `workDir` unless `resume` finds it complete,
+    * then read back for the next stage.
+    */
   def run(spark: SparkSession, turns: Dataset[Turn], workDir: String,
           resume: Boolean = true, cfg: KgConfig = KgConfig.default): Result = {
     import spark.implicits._
     val io = TableIO(workDir)
-    val runId = java.util.UUID.randomUUID().toString.take(8)
-    val acc = new CollectionAccumulator[Lineage]
-    spark.sparkContext.register(acc, "lineage")
-
-    if (!(resume && io.isComplete("mentions_raw"))) {
-      io.write(stageMentions(spark, turns, runId, acc, cfg).toDF(),
-        "mentions_raw")
+    def checkpoint(name: String, build: => DataFrame): DataFrame = {
+      if (!(resume && io.isComplete(name))) io.write(build, name)
+      io.read(spark, name)
     }
-    val mentionsRaw = io.read(spark, "mentions_raw").as[MentionRow]
-
-    if (!(resume && io.isComplete("stage_b"))) {
-      io.write(stageB(spark, mentionsRaw, runId, acc, cfg).toDF(), "stage_b")
-    }
-    val b = io.read(spark, "stage_b").as[StageBRow]
-
-    if (!(resume && io.isComplete("canon_map"))) {
-      io.write(stageCanon(spark, b), "canon_map")
-    }
-    val canonMap = io.read(spark, "canon_map")
-
-    if (!(resume && io.isComplete("edges") && io.isComplete("nodes"))) {
-      val (edges, nodes) = stageMaterialize(spark, b, canonMap)
-      io.write(edges, "edges")
-      io.write(nodes, "nodes")
-    }
-
     // merge lineage across resumes: a fully-resumed run must not destroy the
     // prior run's per-partition metrics (ADVICE r1); rows are keyed by run_id
-    val newRows =
-      scala.jdk.CollectionConverters.ListHasAsScala(acc.value).asScala.toSeq
-    if (newRows.nonEmpty) {
-      val fresh = spark.createDataset(newRows).toDF()
-      val merged =
-        if (io.isComplete("lineage"))
-          io.read(spark, "lineage").unionByName(fresh)
-        else fresh
-      // lineage is tiny (one row per task); localCheckpoint breaks the
-      // self-referential read-then-overwrite plan
-      io.write(merged.localCheckpoint(true), "lineage")
-    } else if (!io.isComplete("lineage")) {
-      io.write(spark.createDataset(Seq.empty[Lineage]).toDF(), "lineage")
+    def lineage(newRows: Seq[Lineage]): DataFrame = {
+      if (newRows.nonEmpty) {
+        val fresh = spark.createDataset(newRows).toDF()
+        val merged =
+          if (io.isComplete("lineage"))
+            io.read(spark, "lineage").unionByName(fresh)
+          else fresh
+        // lineage is tiny (one row per task); localCheckpoint breaks the
+        // self-referential read-then-overwrite plan
+        io.write(merged.localCheckpoint(true), "lineage")
+      } else if (!io.isComplete("lineage")) {
+        io.write(spark.createDataset(Seq.empty[Lineage]).toDF(), "lineage")
+      }
+      io.read(spark, "lineage")
     }
-    Result(io.read(spark, "edges"), io.read(spark, "nodes"),
-      io.read(spark, "lineage"))
+    stages(spark, turns, cfg, AliasJoinThreshold,
+      java.util.UUID.randomUUID().toString.take(8), checkpoint, lineage)
   }
 
-  /** In-memory path for tests and small corpora — same stage functions, no
-    * checkpoint I/O.
+  /** In-memory path for tests and small corpora: the same stage sequence
+    * with no checkpoint I/O. Only stage_b, which canon and materialize both
+    * read, is held, as an eager local checkpoint; the other tables stay lazy.
+    * A local checkpoint is no session cache entry: the ContextCleaner frees
+    * its blocks once the [[Result]] is unreachable.
     */
   def extract(spark: SparkSession, turns: Dataset[Turn],
               cfg: KgConfig = KgConfig.default): Result =
@@ -342,18 +356,9 @@ object Pipeline {
 
   private[graft] def extract(spark: SparkSession, turns: Dataset[Turn],
                              cfg: KgConfig, aliasJoinThreshold: Long): Result = {
-    val runId = "mem"
-    val acc = new CollectionAccumulator[Lineage]
-    spark.sparkContext.register(acc, "lineage-mem")
-    val mentions =
-      stageMentions(spark, turns, runId, acc, cfg, aliasJoinThreshold)
-    val b = stageB(spark, mentions, runId, acc, cfg)
     import spark.implicits._
-    val bCached = b.cache()
-    val canonMap = stageCanon(spark, bCached)
-    val (edges, nodes) = stageMaterialize(spark, bCached, canonMap)
-    val lineage = spark.createDataset(
-      scala.jdk.CollectionConverters.ListHasAsScala(acc.value).asScala.toSeq).toDF()
-    Result(edges, nodes, lineage)
+    stages(spark, turns, cfg, aliasJoinThreshold, "mem",
+      (name, build) => if (name == "stage_b") build.localCheckpoint() else build,
+      rows => spark.createDataset(rows).toDF())
   }
 }

@@ -24,6 +24,15 @@ object Transcripts {
              tool: String = null): Turn =
     Turn(conv, idx, role, text, tool, new Timestamp(epochMs + idx * 60000L))
 
+  /** A `(conv_id, turn_idx, text)` fixture as turns, the user's on even turns. */
+  def fixtureTurns(spark: SparkSession, rows: Seq[(String, Int, String)])
+      : Dataset[Turn] = {
+    import spark.implicits._
+    spark.createDataset(rows.map { case (c, i, text) =>
+      mkTurn(c, i, if (i % 2 == 0) "user" else "assistant", text)
+    })
+  }
+
   private def tri(conv: String, turn: Int, subj: String, pred: String,
                   obj: String, site: String = "", neg: Boolean = false,
                   hyp: Boolean = false): Triple =

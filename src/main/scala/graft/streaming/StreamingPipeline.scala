@@ -107,8 +107,7 @@ object StreamingPipeline {
     // moves into the stateful fold so FORWARD alias uses (definition in an
     // earlier — or the same — turn) inject rescan surfaces exactly as the
     // batch pre-pass does; only the BACKWARD rescan stays batch-only.
-    val annotated: Dataset[AnnotatedTurn] = turns
-      .filter(t => KgCore.keep(t)).map(KgCore.annotate(bTrie.value, _))
+    val annotated: Dataset[AnnotatedTurn] = Annotate(spark, turns, bTrie)
 
     // stage 2 (stateful): bounded-lookback conversation fold; state carries
     // the last `lookback` turns' mentions plus ALL alias defs seen so far
@@ -136,8 +135,8 @@ object StreamingPipeline {
               // the batch pre-pass's filter (Pipeline.aliasDefsDs)
               if (at.sents.exists(s => BioRules.hasAliasCue(s.text))) {
                 val d = BioRules.aliasDefsTurn(at, bG.value)
-                  .map(x => (x._2, x._3))
-                if (d.nonEmpty) defs = (defs ++ d).distinct.sorted
+                if (d.nonEmpty) defs = KgCore.surfaces(
+                  d ++ defs.map { case (sf, label) => (convId, sf, label) })
               }
               BioRules.extractTurn(at, defs, bG.value)
             }

@@ -12,17 +12,8 @@ class EmitSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def pipe(turns: Seq[(String, Int, String)]) = {
-    import spark.implicits._
-    val acc = new org.apache.spark.util.CollectionAccumulator[graft.model.Lineage]
-    spark.sparkContext.register(acc)
-    val ds = spark.createDataset(turns.map { case (c, i, t) =>
-      Transcripts.mkTurn(c, i, if (i % 2 == 0) "user" else "assistant", t)
-    })
-    val b = Pipeline.stageB(spark,
-      Pipeline.stageMentions(spark, ds, "t", acc), "t", acc)
-    val canon = Pipeline.stageCanon(spark, b)
-    val (edges, _) = Pipeline.stageMaterialize(spark, b, canon)
-    (edges, b.toDF(), canon)
+    val r = Pipeline.extract(spark, Transcripts.fixtureTurns(spark, turns))
+    (r.edges, r.stageB.toDF(), r.canonMap)
   }
 
   test("assembly tsv: event + entity rows with reference column set") {
@@ -129,8 +120,6 @@ class EmitSpec extends AnyFunSuite {
   test("indexcard: regulation in one conversation must not suppress a bare " +
        "modification in another (conv-scoped anti-join regression)") {
     import spark.implicits._
-    val acc = new org.apache.spark.util.CollectionAccumulator[graft.model.Lineage]
-    spark.sparkContext.register(acc)
     val turns = spark.createDataset(Seq(
       Transcripts.mkTurn("bare", 0, "user", "ERK2 is phosphorylated."),
       Transcripts.mkTurn("reg", 0, "user", "MEK1 phosphorylates ERK2.")))

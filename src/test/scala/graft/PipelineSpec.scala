@@ -46,19 +46,29 @@ class PipelineSpec extends AnyFunSuite {
   test("resume from every stage boundary reproduces the cold run") {
     val dir = java.nio.file.Files.createTempDirectory("kgresume").toString
     val (turns, _) = Transcripts.corpus(spark, 30, seed = 3)
+    // nodes carry a collect_set column: compare it sorted
+    def nodeRows(r: Pipeline.Result) = r.nodes
+      .withColumn("alias_surface_forms", sort_array(col("alias_surface_forms")))
+      .collect().map(_.toSeq).toSet
     val cold = Pipeline.run(spark, turns, s"$dir/cold", resume = false)
     val coldKeys = Score.keysOf(cold.edges).collect().toSet
+    val coldNodes = nodeRows(cold)
+    assert(coldNodes.nonEmpty)
     val io = graft.io.TableIO(s"$dir/warm")
     // cold-populate the warm dir once
     Pipeline.run(spark, turns, s"$dir/warm", resume = false)
-    for (stage <- Seq("edges", "canon_map", "stage_b")) {
-      // simulate a kill after the preceding stage: wipe this stage and all
-      // later ones, then resume
+    for (stage <- Seq("nodes", "edges", "canon_map", "stage_b",
+                      "mentions_raw")) {
+      // simulate a kill after the preceding stage: wipe this stage and the
+      // materialized tables, then resume. A nodes-only wipe leaves edges
+      // complete; the materialize stage must still rewrite both.
       io.delete(stage)
-      io.delete("edges"); io.delete("nodes")
+      if (stage != "nodes") { io.delete("edges"); io.delete("nodes") }
       val resumed = Pipeline.run(spark, turns, s"$dir/warm", resume = true)
       assert(Score.keysOf(resumed.edges).collect().toSet == coldKeys,
         s"resume after wiping $stage diverged")
+      assert(nodeRows(resumed) == coldNodes,
+        s"nodes after wiping $stage diverged")
       // lineage completeness: a resumed run must keep the prior runs'
       // lineage (not overwrite with only the current accumulator) and record
       // real rows_in for the extraction stage
@@ -68,12 +78,28 @@ class PipelineSpec extends AnyFunSuite {
       assert(lin.exists(r => r.getAs[String]("stage") == "mentions" &&
         r.getAs[Long]("rows_in") > 0),
         "mentions lineage must track rows_in")
-      // the last iteration wiped stage_b, so the fold re-ran under a NEW
-      // run_id — the merged table must now hold rows from both runs
+      // wiping stage_b re-runs the fold under a NEW run_id — the merged
+      // table must now hold rows from both runs
       if (stage == "stage_b")
         assert(lin.map(_.getAs[String]("run_id")).distinct.size >= 2,
           "lineage must retain rows from more than one run after a resume " +
             "that re-executes a stage")
+    }
+  }
+
+  test("repeated extract calls leave the session cache entry count " +
+       "unchanged") {
+    val (turns, _) = Transcripts.corpus(spark, 40, seed = 11)
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // numCachedEntries is private[sql] in Scala, public in the bytecode
+    def entries: Int = cache.getClass.getMethod("numCachedEntries")
+      .invoke(cache).asInstanceOf[Int]
+    val before = entries
+    for (i <- 1 to 3) {
+      assert(Pipeline.extract(spark, turns).edges.count() > 0)
+      assert(entries == before,
+        s"extract call $i left ${entries - before} cache entries behind")
     }
   }
 
@@ -99,8 +125,9 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("lineage rows_out sums equal the stage table counts (run, extract)") {
-    // extract's lineage is complete only because the canon stage runs an
-    // eager action before the accumulator is read; this pins that
+    // extract's lineage is complete only because stage_b's local checkpoint
+    // is eager: it runs both instrumented stages in full before the
+    // accumulator is read; this pins that
     val dir = java.nio.file.Files.createTempDirectory("kglineage").toString
     val (turns, _) = Transcripts.corpus(spark, 40, seed = 13)
     val io = graft.io.TableIO(dir)

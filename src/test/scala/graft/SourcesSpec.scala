@@ -105,11 +105,8 @@ class SourcesSpec extends AnyFunSuite {
   test("fries frame graph: event args reference entity frames in the same " +
        "document") {
     import spark.implicits._
-    val acc = new org.apache.spark.util.CollectionAccumulator[graft.model.Lineage]
-    spark.sparkContext.register(acc)
     val turns = Transcripts.goldenTurns(spark)
-    val b = Pipeline.stageB(spark,
-      Pipeline.stageMentions(spark, turns, "t", acc), "t", acc)
+    val b = Pipeline.extract(spark, turns).stageB
     val docs = Emit.friesFrameGraph(b.toDF())
       .select("conv_id", "fries").as[(String, String)].collect()
     assert(docs.nonEmpty)
@@ -129,14 +126,11 @@ class SourcesSpec extends AnyFunSuite {
        "(TestFriesOutput pins: 3 sections, meta, subtypes, argument types, " +
        "is-direct, xrefs)") {
     import spark.implicits._
-    val acc = new org.apache.spark.util.CollectionAccumulator[graft.model.Lineage]
-    spark.sparkContext.register(acc)
     // TestFriesOutput text1 ("AKT1 phosphorylates PTHR2") adapted to the
     // lexicon: 4 mentions = 2 proteins + 1 phospho + 1 pos-reg
     val turns = spark.createDataset(Seq(
       Transcripts.mkTurn("fr", 0, "user", "AKT1 phosphorylates ERK2")))
-    val b = Pipeline.stageB(spark,
-      Pipeline.stageMentions(spark, turns, "t", acc), "t", acc)
+    val b = Pipeline.extract(spark, turns).stageB
     val doc = Emit.friesFrameGraph(b.toDF(), Some(turns.toDF()))
       .as[(String, String)].collect().head._2
     def count(lit: String): Int =
@@ -178,11 +172,8 @@ class SourcesSpec extends AnyFunSuite {
 
   test("fries frame graph chunks mega-conversations into bounded documents") {
     import spark.implicits._
-    val acc = new org.apache.spark.util.CollectionAccumulator[graft.model.Lineage]
-    spark.sparkContext.register(acc)
     val turns = Transcripts.goldenTurns(spark)
-    val b = Pipeline.stageB(spark,
-      Pipeline.stageMentions(spark, turns, "t", acc), "t", acc).toDF().cache()
+    val b = Pipeline.extract(spark, turns).stageB.toDF()
     val whole = Emit.friesFrameGraph(b).as[(String, String)].collect()
     // tiny chunk size: conversations with turns past the boundary must split
     // into multiple part-documents, part 0 keeping the bare conv_id
@@ -205,11 +196,8 @@ class SourcesSpec extends AnyFunSuite {
 
   test("debug text sink renders one sorted line per linked mention") {
     import spark.implicits._
-    val acc = new org.apache.spark.util.CollectionAccumulator[graft.model.Lineage]
-    spark.sparkContext.register(acc)
     val turns = Transcripts.goldenTurns(spark)
-    val b = Pipeline.stageB(spark,
-      Pipeline.stageMentions(spark, turns, "t", acc), "t", acc)
+    val b = Pipeline.extract(spark, turns).stageB
     val lines = Emit.debugText(b.toDF()).as[String].collect()
     assert(lines.nonEmpty)
     assert(lines.exists(_.startsWith("EVENT ")))
