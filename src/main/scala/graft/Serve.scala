@@ -5,8 +5,7 @@ import graft.kg._
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
 /** REST serving face (SURVEY §2.1 S11 — the reference's export ApiRuler,
   * ApiRuler.scala:50-95: `annotateText(text, outFormat)` returning a
@@ -26,69 +25,47 @@ import org.apache.spark.sql.functions._
   *   GET  /api/ping → `{"status":"ok"}`
   *
   * Scale note: the reference runs a full ReachSystem per request. This
-  * face runs the narrow pass (annotate, alias pre-pass, rule match) and the
-  * fold (context, coref, link, emit) in-process on the handler thread,
-  * through [[KgCore.stageB]] — the functions the batch stages run — and
-  * only the exporters as Spark jobs, over the request's cached stage_b
-  * rows, on ONE shared session and a fixed pool of one handler thread per
-  * available processor. On a 4-core host (kgbench `serve_closed`, traced
-  * run, seed 42) a request takes 16 Spark jobs and 47 tasks, and p50
-  * latency is ~0.95 s for fries and ~2.3 s for indexcard; with the
-  * extraction as Spark stages it took 18 jobs, 163 tasks, ~1.6 s and
-  * ~2.9 s. It is the dev/eval serving shape; the 100 TB path is the batch
-  * pipeline.
+  * face runs the whole request in-process on the handler thread, with no
+  * Spark job: the narrow pass (annotate, alias pre-pass, rule match) and
+  * the fold (context, coref, link, emit) through [[KgCore.stageB]], then
+  * canonicalization, materialization and the exporter through
+  * [[KgExport]] — the functions the batch stages and the Spark exporters
+  * run — on a fixed pool of one handler thread per available processor.
+  * On a 4-core host (kgbench `serve_closed`, traced run, seed 42) a
+  * request takes 0 Spark jobs and 0 tasks, and p50 latency is ~5 ms for
+  * fries and ~47 ms for indexcard; with the exporters as Spark jobs it took
+  * 16 jobs, 47 tasks, ~1.4 s and ~3.6 s. The session is still needed for
+  * the KB and grammar broadcasts the batch path shares. It is the dev/eval
+  * serving shape; the 100 TB path is the batch pipeline.
   */
 object Serve {
 
   private val reqCounter = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** JSON string-body escape: backslash, quote and ALL control chars
-    * (< 0x20). [[Verify]] writes `oracle_sql.json` through it too. */
-  private[graft] def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
-  /** One request: the narrow pass and the fold run in-process on the
-    * calling thread ([[KgCore.stageB]]) over a one-turn conversation, then
-    * the requested Spark exporter runs over its stage_b rows. Returns the
-    * resultJson payload. An unknown format throws before any extraction.
+  /** One request, in-process on the calling thread: the narrow pass and the
+    * fold ([[KgCore.stageB]]) over a one-turn conversation, then the
+    * requested exporter over its stage_b rows ([[KgExport.friesDocs]], or
+    * [[KgExport.materialize]] and [[KgExport.indexCards]], cards in JSON
+    * order). Returns the resultJson payload and starts no Spark job. An
+    * unknown format throws before any extraction.
     */
   private[graft] def annotateText(spark: SparkSession, text: String,
                                   outFormat: String, convId: String,
                                   cfg: KgConfig = KgConfig.default): String = {
-    import spark.implicits._
     val turns = Seq(Transcripts.mkTurn(convId, 0, "user", text))
-    val render: Dataset[StageBRow] => String = outFormat match {
-      case "fries" => b =>
-        // the `fries` column is already the rendered JSON document
-        Emit.friesFrameGraph(b.toDF(), Some(spark.createDataset(turns).toDF()))
-          .select(col("fries")).as[String].collect()
-          .headOption.getOrElse("{}")
-      case "indexcard" => b =>
-        val canon = Pipeline.stageCanon(spark, b)
-        val (edges, nodes) = Pipeline.stageMaterialize(spark, b, canon)
-        Emit.indexCardJson(Emit.indexCardFlat(edges, nodes))
-          .as[String].collect().mkString("[", ",", "]")
+    val render: Seq[StageBRow] => String = outFormat match {
+      case "fries" => rows =>
+        KgExport.friesDocs(KgExport.linked(rows), Some(turns))
+          .headOption.map(_._2).getOrElse("{}")
+      case "indexcard" => rows =>
+        val (edges, nodes) = KgExport.materialize(rows)
+        KgExport.indexCards(edges, nodes).mkString("[", ",", "]")
       case f => throw new IllegalArgumentException(
         s"unknown output format '$f' (fries|indexcard)")
     }
     val (bTrie, bKb, bG) = Broadcasts.all(spark.sparkContext, cfg)
-    val rows = KgCore.stageB(turns,
-      KgCore.Parts(bTrie.value, bKb.value, bG.value), cfg)
-    // cached, not only because the indexcard path reads stage_b four times
-    // (canon count + collect, edges, nodes): over an uncached local
-    // relation Spark plans static broadcast joins, and each one builds a
-    // hashed relation with a 16 MB page that outlives the request
-    val b = spark.createDataset(rows).cache()
-    try render(b)
-    finally b.unpersist(blocking = false)
+    render(KgCore.stageB(turns,
+      KgCore.Parts(bTrie.value, bKb.value, bG.value), cfg))
   }
 
   /** The 500 response for a failed request: the exception and its stack
@@ -149,8 +126,9 @@ object Serve {
               try Right(annotateText(spark, text, outFormat, reqId, cfg))
               catch {
                 case e: IllegalArgumentException => Left((400,
-                  s"""{"hasError":true,"errorMessage":"${jsonEscape(
-                    Option(e.getMessage).getOrElse(e.toString))}"}"""))
+                  Json.render(Json.obj("hasError" -> Json.Bool(true),
+                    "errorMessage" -> Json.str(
+                      Option(e.getMessage).getOrElse(e.toString))))))
                 case e: Throwable => Left((500, internalError(reqId, e)))
               }
             json match {
@@ -174,8 +152,8 @@ object Serve {
     }.toMap
     val port = opts.getOrElse("--port", "8787").toInt
     val spark = Sessions.getOrCreate("graft-serve")
-    // warmup: JIT + codegen of both exporters, so the first real request
-    // of either format is not 10x
+    // warmup: JIT of the extraction and both exporters, so the first real
+    // request of either format is not 10x
     Seq("fries", "indexcard").foreach(
       annotateText(spark, "MEK1 phosphorylates ERK2.", _, "api0"))
     val server = start(spark, port)

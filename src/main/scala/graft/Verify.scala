@@ -14,13 +14,13 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // every control char is escaped — a tab or CR in builder-authored SQL
-    // would otherwise make the driver's json.load fail and silently zero
-    // the round's correctness
-    def q(s: String): String = "\"" + Serve.jsonEscape(s) + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // written by Jackson, which escapes every control char: a raw tab or CR
+    // in a query's SQL would make the file invalid JSON for its readers
+    // (tools/oracle_check.py among them)
+    val json = graft.kg.Json.Obj(SparkEntry.oracleSql.toSeq
+      .map { case (k, v) => k -> graft.kg.Json.str(v) })
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      graft.kg.Json.render(json))
     spark.stop()
   }
 }

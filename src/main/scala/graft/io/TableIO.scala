@@ -1,6 +1,8 @@
 package graft.io
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import java.nio.file.{Files, Paths, Path}
 
 /** Iceberg-shaped table layer (SURVEY.md §7.0: no Iceberg runtime jar in the
@@ -18,7 +20,9 @@ final case class TableIO(root: String) {
 
   /** Atomic-enough manifest write: parquet first, manifest last — a killed job
     * leaves no manifest, so resume re-runs the stage (exactly-once at stage
-    * granularity).
+    * granularity). The manifest also records the table's schema as parquet
+    * schema inference would read it back (every field nullable, partition
+    * columns last), so [[read]] starts no inference job.
     */
   def write(df: DataFrame, name: String,
             partitionBy: Seq[String] = Nil): Long = {
@@ -33,25 +37,54 @@ final case class TableIO(root: String) {
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(tablePath(name))
     val rows = obs.get("rows").asInstanceOf[Long]
-    val json =
-      s"""{"table":"$name","rows":$rows,"complete":true,"ts":${System.currentTimeMillis()}}"""
+    val (parts, data) = nullable(df.schema).asInstanceOf[StructType].fields
+      .partition(f => partitionBy.contains(f.name))
+    val schema = StructType(data ++
+      partitionBy.flatMap(p => parts.find(_.name == p)))
+    val json = s"""{"table":"$name","rows":$rows,"complete":true,""" +
+      s""""ts":${System.currentTimeMillis()},"schema":${schema.json}}"""
     Files.createDirectories(manifestPath(name).getParent)
     Files.writeString(manifestPath(name), json)
     rows
   }
 
-  def read(spark: SparkSession, name: String): DataFrame =
-    spark.read.parquet(tablePath(name))
+  /** `t` with every field, array element and map value nullable (Spark's
+    * `asNullable`, which is private to Spark). */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
 
-  /** A stage checkpoint is valid iff its manifest exists and says complete. */
+  /** The table, read with the schema its manifest records. */
+  def read(spark: SparkSession, name: String): DataFrame = {
+    val schema = manifest(name).map(_.path("schema")).filter(_.isObject)
+      .getOrElse(throw new IllegalStateException(
+        s"table $name at ${tablePath(name)} has no manifest schema"))
+    spark.read.schema(DataType.fromJson(schema.toString)
+      .asInstanceOf[StructType]).parquet(tablePath(name))
+  }
+
+  private def manifest(name: String): Option[JsonNode] =
+    if (!Files.exists(manifestPath(name))) None
+    else Some(new ObjectMapper().readTree(Files.readString(manifestPath(name))))
+
+  /** A stage checkpoint is valid iff its manifest exists, says complete and
+    * records the schema. */
   def isComplete(name: String): Boolean =
-    Files.exists(manifestPath(name)) &&
-      Files.readString(manifestPath(name)).contains("\"complete\":true")
+    manifest(name).exists(m =>
+      m.path("complete").asBoolean(false) && m.path("schema").isObject)
 
   def delete(name: String): Unit = {
     def rm(p: Path): Unit = {
-      if (Files.isDirectory(p))
-        Files.list(p).forEach(rm(_))
+      if (Files.isDirectory(p)) {
+        val entries = Files.list(p)
+        try entries.forEach(rm(_))
+        finally entries.close()
+      }
       Files.deleteIfExists(p)
     }
     val p = Paths.get(tablePath(name))

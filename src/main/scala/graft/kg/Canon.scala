@@ -10,10 +10,11 @@ import org.apache.spark.sql.functions._
   * [[components]] is the one connected-components implementation in graft:
   * canonicalization and `graft.ops.Dedup.clusters` both call it, and differ
   * only in the node ordering that picks each component's name. Small edge
-  * sets take a driver union-find (no iterative shuffles); above
-  * `driverThreshold` edges, distributed min-label propagation — O(component
-  * diameter) rounds of join + partial-agg groupBy, capped at 50 rounds with
-  * a warning when a component is still merging.
+  * sets take a driver union-find ([[unionFind]], no iterative shuffles;
+  * `graft.Serve` runs it in-process through [[KgExport.materialize]]);
+  * above `driverThreshold` edges, distributed min-label propagation —
+  * O(component diameter) rounds of join + partial-agg groupBy, capped at 50
+  * rounds with a warning when a component is still merging.
   *
   * Canon's node ordering: non-failsafe (KB-grounded) ids win over `uaz:`
   * failsafe ids, then lexicographic — so a component containing a real
@@ -25,11 +26,49 @@ object Canon {
   def rankKey(gid: String): String =
     (if (gid.startsWith("uaz:")) "1|" else "0|") + gid
 
+  /** Canon's node order: [[rankKey]]. */
+  val order: Ordering[String] = Ordering.by(rankKey)
+
+  /** Whether an alias edge takes part in canonicalization: only when one
+    * side is effectively ungrounded — the uaz failsafe namespace (reference
+    * Coref.scala:396-401: an ungrounded alias side ADOPTS the grounded
+    * side's candidates; a both-grounded pair keeps each side's own winner
+    * and only unions candidate lists, which the fold handles per
+    * conversation). Without this guard a known<->known alias in one
+    * conversation would rewrite the shared KB id corpus-wide.
+    */
+  def rewrites(a: String, b: String): Boolean =
+    a.startsWith("uaz:") || b.startsWith("uaz:")
+
   /** edges: DataFrame(a: String, b: String) -> DataFrame(gid, canon_id). */
   def connectedComponents(spark: SparkSession, edges: DataFrame,
                           driverThreshold: Long = 100000L): DataFrame =
-    components(edges, driverThreshold, Ordering.by(rankKey),
+    components(edges, driverThreshold, order,
       _.startsWith("uaz:"))(Encoders.STRING).toDF("gid", "canon_id")
+
+  /** Union-find over an in-memory edge list: one `(node, root)` pair per
+    * node of an edge (self-loop-only nodes included), in order of first
+    * appearance, `root` being the least node of its component under `order`.
+    */
+  def unionFind[N](edges: Seq[(N, N)], order: Ordering[N]): Seq[(N, N)] = {
+    val parent = scala.collection.mutable.Map.empty[N, N]
+    def find(x: N): N = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) {
+        val n = parent(c); parent(c) = r; c = n
+      }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) {
+        if (order.lteq(ra, rb)) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+    edges.flatMap { case (a, b) => Seq(a, b) }.distinct.map(n => (n, find(n)))
+  }
 
   /** Connected components of the undirected edge set `edges(a, b)`: one
     * `(node, root)` row per node of a non-self-loop edge (the driver path
@@ -38,8 +77,10 @@ object Canon {
     * same order (ties break on the node itself), used above
     * `driverThreshold` edges.
     *
-    * `edges` is read twice (the threshold count, then the driver collect or
-    * the propagation base); a caller with an expensive upstream persists it.
+    * One job collects up to `driverThreshold + 1` edges: at or below the
+    * threshold that is the whole set, and [[unionFind]] runs on the driver.
+    * Above it, `edges` is read again as the propagation base; a caller with
+    * an expensive upstream persists it.
     */
   private[graft] def components[N](edges: DataFrame, driverThreshold: Long,
                                    order: Ordering[N], key: Column => Column)
@@ -47,28 +88,11 @@ object Canon {
     val spark = edges.sparkSession
     val pairEnc = Encoders.tuple(enc, enc)
     val es = edges.select(col("a"), col("b"))
-    val cnt = es.count()
-    if (cnt <= driverThreshold) {
-      val edgeSeq = if (cnt == 0) Nil else es.as(pairEnc).collect().toSeq
-      val parent = scala.collection.mutable.Map.empty[N, N]
-      def find(x: N): N = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) {
-          val n = parent(c); parent(c) = r; c = n
-        }
-        r
-      }
-      edgeSeq.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) {
-          if (order.lteq(ra, rb)) parent(rb) = ra else parent(ra) = rb
-        }
-      }
-      val nodes = edgeSeq.flatMap { case (a, b) => Seq(a, b) }.distinct
-      spark.createDataset(nodes.map(n => (n, find(n))))(pairEnc)
-    } else {
+    val head = es.as(pairEnc)
+      .limit(math.min(driverThreshold + 1, Int.MaxValue.toLong).toInt).collect()
+    if (head.length <= driverThreshold)
+      spark.createDataset(unionFind(head.toSeq, order))(pairEnc)
+    else {
       val und = es.select(col("a").as("u"), col("b").as("v"))
         .union(es.select(col("b").as("u"), col("a").as("v")))
         .where(col("u") =!= col("v")).distinct()

@@ -1,22 +1,24 @@
 package graft.kg
 
+import graft.model.LinkedMention
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Export sinks beyond the primary edges/nodes tables (SURVEY.md §2.1 S8-S10).
+  * [[friesFrameGraph]], [[indexCardFlat]] and [[indexCardJson]] run
+  * [[KgExport]]'s functions, which `graft.Serve` runs in-process; the other
+  * sinks are Catalyst plans.
   */
 object Emit {
 
-  /** Per-key list-aggregation fan-in bound (scale guard for the
-    * interaction-level exports): a viral interaction ("MEK1 phosphorylates
-    * ERK2" across millions of conversations) or a ubiquitous entity would
-    * otherwise collect an unbounded evidence/conv-id set into ONE output
-    * row — the same unbounded-row class as the (fixed) pre-chunking FRIES
-    * frame graph. Far above anything the contract corpora produce, so
-    * oracle outputs are unchanged.
+  /** Per-key list-aggregation fan-in bound ([[KgExport.MaxListPerKey]]):
+    * a viral interaction ("MEK1 phosphorylates ERK2" across millions of
+    * conversations) or a ubiquitous entity would otherwise collect an
+    * unbounded evidence/conv-id set into ONE output row — the same
+    * unbounded-row class as the (fixed) pre-chunking FRIES frame graph.
     */
-  val MaxListPerKey = 1000
+  val MaxListPerKey: Int = KgExport.MaxListPerKey
 
   /** Null the list-contributing columns beyond rank [[MaxListPerKey]] within
     * each aggregation key (`collect_set` skips nulls), ordered
@@ -53,11 +55,6 @@ object Emit {
       col("found_by")
     )).as("frame"))
 
-  /** JsonOutputter.prettifyLabel (reference :176): FRIES types/subtypes are
-    * lowercase with hyphens ("Positive_regulation" -> "positive-regulation").
-    */
-  private def prettify(c: Column): Column = lower(regexp_replace(c, "_", "-"))
-
   /** FRIES frame graph (reference: FriesOutput.scala:524-660 — one document
     * per input unit whose frames reference each other by frame id: entity
     * mentions are frames, event mentions are frames whose arguments point at
@@ -72,145 +69,40 @@ object Emit {
     * an event or an entity (:382-420). `frame-id` is the deterministic
     * mention id; arrays are sorted so the JSON is deterministic.
     *
-    * Scale: the groupBy is salted with `turn_idx / chunkTurns` (the same span
-    * chunking stage B uses), so a mega-conversation becomes a sequence of
-    * bounded frame documents instead of one unbounded JSON row. Part 0 keeps
-    * the bare conv_id as its document name — single-chunk conversations (the
-    * overwhelmingly common case, and the whole golden corpus) are
-    * byte-identical to the unchunked output; later parts are suffixed
-    * `#<part>`. The argument-type lookup is a (conv_id, mention_id)-keyed
-    * self-join — conversation-scoped, never cross-document.
+    * Scale: documents are keyed `(conv_id, turn_idx / chunkTurns)` (the
+    * span chunking stage B uses), so a mega-conversation becomes a sequence
+    * of bounded frame documents instead of one unbounded JSON row. Part 0
+    * keeps the bare conv_id as its document name — single-chunk
+    * conversations (the overwhelmingly common case, and the whole golden
+    * corpus) are byte-identical to the unchunked output; later parts are
+    * suffixed `#<part>`. Each document is [[KgExport.fries]] over one
+    * `groupByKey` group of linked mentions, cogrouped with its turns; only
+    * parts with linked mentions get a document.
     */
   def friesFrameGraph(stageB: DataFrame, turns: Option[DataFrame] = None,
                       chunkTurns: Int = Pipeline.chunkTurns): DataFrame = {
-    val linked = stageB.filter(col("kind") === "linked").select("linked.*")
-
-    // argument-type of each frame reference: "event" when the referenced
-    // frame is an event mention, "entity" otherwise
-    val kinds = linked.select(col("conv_id").as("k_conv"),
-      col("mention_id").as("k_id"), col("is_event").as("k_ev")).distinct()
-    val argLists = linked
-      .select(col("conv_id"), col("mention_id"), explode(col("args")).as("a"))
-      .join(kinds, col("conv_id") === col("k_conv") &&
-        col("a.mention_id") === col("k_id"), "left")
-      .groupBy("conv_id", "mention_id")
-      .agg(sort_array(collect_list(struct(
-        col("a.role").as("type"),
-        col("a.mention_id").as("arg"),
-        when(coalesce(col("k_ev"), lit(false)), lit("event"))
-          .otherwise(lit("entity")).as("argument-type")))).as("arguments"))
-      .withColumnRenamed("conv_id", "al_conv")
-      .withColumnRenamed("mention_id", "al_id")
-    val withArgs0 = linked.join(argLists,
-        col("conv_id") === col("al_conv") && col("mention_id") === col("al_id"),
-        "left")
-      .drop("al_conv", "al_id")
-      .withColumn("arguments", coalesce(col("arguments"), expr(
-        "CAST(array() AS array<struct<type:string,arg:bigint,`argument-type`:string>>)")))
-    // events controlled by a split regulation are the cause-split simple
-    // events — BioEventMention(isDirect = true) in splitSimpleEvents
-    // (DarpaActions.scala:319); bindings are direct per mkBinding /
-    // mkNaryBinding (:219,259)
-    val splitControlled = linked
-      .filter(col("found_by").endsWith("_split"))
-      .select(col("conv_id").as("sc_conv"), explode(col("args")).as("sa"))
-      .filter(col("sa.role") === "controlled")
-      .select(col("sc_conv"), col("sa.mention_id").as("sc_id")).distinct()
-    val withArgs = withArgs0.join(splitControlled,
-        col("conv_id") === col("sc_conv") && col("mention_id") === col("sc_id"),
-        "left")
-      .withColumn("is_direct",
-        col("labels")(0) === "Binding" || col("sc_id").isNotNull)
-      .drop("sc_conv", "sc_id")
-
-    val modsT = transform(col("mods"),
-      m => struct(m.getField("kind").as("kind"),
-        m.getField("label").as("label"),
-        m.getField("site_text").as("site")))
-    val entFrame = struct(
-      col("turn_idx"), col("sent_idx"), col("start_tok"), col("end_tok"),
-      col("mention_id").as("frame-id"),
-      lit("entity-mention").as("frame-type"),
-      prettify(col("display_label")).as("type"),
-      col("text"),
-      array(struct(col("ns").as("namespace"),
-        lit("db-reference").as("object-type"),
-        col("ns_id").as("id"))).as("xrefs"),
-      modsT.as("modifications"),
-      col("negated").as("is-negated"),
-      col("hypothesis").as("is-hypothesis"))
-    // split regulations are BioRelationMentions in the reference — FRIES
-    // emits trigger / is-direct only for BioEventMentions
-    // (FriesOutput.scala:592-595), so those keys are NULLed here and
-    // to_json drops them
-    val isSplitReg = col("found_by").endsWith("_split")
-    val evFrame = struct(
-      col("turn_idx"), col("sent_idx"), col("start_tok"), col("end_tok"),
-      col("mention_id").as("frame-id"),
-      lit("event-mention").as("frame-type"),
-      prettify(col("labels")(0)).as("subtype"),
-      col("text"),
-      when(!isSplitReg, col("trigger_text")).as("trigger"),
-      col("arguments"),
-      when(!isSplitReg, col("is_direct")).as("is-direct"),
-      modsT.as("modifications"),
-      col("negated").as("is-negated"),
-      col("hypothesis").as("is-hypothesis"))
-
-    val mentionsAgg = withArgs
-      .withColumn("doc_part", floor(col("turn_idx") / chunkTurns))
-      .groupBy(col("conv_id"), col("doc_part"))
-      .agg(
-        sort_array(collect_list(when(!col("is_event"), entFrame)))
-          .as("entity_frames"),
-        sort_array(collect_list(when(col("is_event"), evFrame)))
-          .as("event_frames"))
-
-    // sentences section: passage frame per turn + sentence frames from the
-    // same deterministic splitter extraction uses (row-local kernel)
-    val withSents = turns match {
+    val spark = stageB.sparkSession
+    import spark.implicits._
+    val byPart = stageB.filter(col("kind") === "linked").select("linked.*")
+      .as[LinkedMention]
+      .groupByKey(m => (m.conv_id, KgExport.docPart(m.turn_idx, chunkTurns)))
+    val docs = turns match {
       case Some(t) =>
-        val sp = t.sparkSession
-        import sp.implicits._
-        val sentRows = t.select(col("conv_id"), col("turn_idx"), col("text"))
+        val turnsByPart = t.select("conv_id", "turn_idx", "text")
           .as[(String, Int, String)]
-          .flatMap { case (c, ti, tx) =>
-            ("passage", c, ti, -1, tx) +:
-              Annotate.Tokenizer.sentences(tx).zipWithIndex.toSeq
-                .map { case (s, si) => ("sentence", c, ti, si, s) }
+          .groupByKey(t => (t._1, KgExport.docPart(t._2, chunkTurns)))
+        byPart.cogroup(turnsByPart) { case ((conv, part), ms, ts) =>
+          if (ms.isEmpty) Iterator.empty
+          else {
+            val partTurns = ts.map(t => (t._2, t._3)).toSeq
+            Iterator((conv, KgExport.fries(conv, part, ms.toSeq,
+              if (partTurns.isEmpty) None else Some(partTurns))))
           }
-          .toDF("ftype", "conv_id", "turn_idx", "sent_idx", "stext")
-        val sentAgg = sentRows
-          .withColumn("doc_part", floor(col("turn_idx") / chunkTurns))
-          .groupBy(col("conv_id"), col("doc_part"))
-          .agg(sort_array(collect_list(struct(
-            col("turn_idx"), col("sent_idx"),
-            col("ftype").as("frame-type"),
-            col("stext").as("text")))).as("sentence_frames"))
-          .withColumnRenamed("conv_id", "s_conv")
-          .withColumnRenamed("doc_part", "s_part")
-        mentionsAgg.join(sentAgg,
-            col("conv_id") === col("s_conv") && col("doc_part") === col("s_part"),
-            "left")
-          .drop("s_conv", "s_part")
-      case None =>
-        mentionsAgg.withColumn("sentence_frames", expr(
-          "CAST(array() AS array<struct<turn_idx:int,sent_idx:int,`frame-type`:string,text:string>>)"))
+        }
+      case None => byPart.mapGroups((key, ms) =>
+        (key._1, KgExport.fries(key._1, key._2, ms.toSeq, Some(Nil))))
     }
-
-    val document = when(col("doc_part") === 0, col("conv_id"))
-      .otherwise(concat(col("conv_id"), lit("#"), col("doc_part")))
-    def section(frames: Column, doc: Column): Column = struct(
-      lit("frame-collection").as("object-type"),
-      struct(lit("graft-kg").as("component"), lit("graft").as("organization"),
-        doc.as("doc-id")).as("object-meta"),
-      frames.as("frames"))
-    withSents.select(col("conv_id"),
-      to_json(struct(
-        document.as("document"),
-        section(col("sentence_frames"), document).as("sentences"),
-        section(col("entity_frames"), document).as("entities"),
-        section(col("event_frames"), document).as("events"))).as("fries"))
+    docs.toDF("conv_id", "fries")
   }
 
   /** Debug text sink (reference: MentionManager.mentionToStrings,
@@ -240,12 +132,7 @@ object Emit {
           .otherwise(lit(""))
       ).as("line"))
 
-  /** Modification event labels (reference: ReachConstants MODIFICATION_EVENTS). */
-  private val modEventLabels = Seq("Phosphorylation", "Dephosphorylation",
-    "Ubiquitination", "Deubiquitination", "Hydroxylation", "Dehydroxylation",
-    "Sumoylation", "Desumoylation", "Glycosylation", "Deglycosylation",
-    "Acetylation", "Deacetylation", "Farnesylation", "Defarnesylation",
-    "Ribosylation", "Deribosylation", "Methylation", "Demethylation")
+  private val modEventLabels = KgExport.modEventLabels
 
   /** OUTPUT of the Arizona and assembly exports: the theme, plus a
     * ".label@site" PTM suffix for modifications or ".a" for positive
@@ -635,18 +522,7 @@ object Emit {
   /** IndexCard export, flat tabular form (reference: IndexCardOutput.scala
     * 95-135 two-pass card construction, 270-305/313-365 per-type cards).
     * One row per card; `indexCardJson` renders the reference's nested JSON.
-    *
-    * Faithful semantics:
-    *  - regulations whose controlled is a modification become
-    *    adds_modification / inhibits_modification cards with participant_a =
-    *    controller (mkRegulationIndexCard:323-362; non-modification
-    *    controlled returns None — the INDEX CARD LIMITATION);
-    *  - a modification that is some regulation's controlled in the same
-    *    conversation is suppressed as a standalone card
-    *    (simpleEventsInRegs:107-133);
-    *  - bindings/activations/translocations/amounts/transcription per
-    *    mkBindingIndexCard/mkActivationIndexCard/mkTranslocationIndexCard/
-    *    mkSimpleEventIndexCard;
+    * The card rules are [[KgExport.cards]]'s; besides them:
     *  - hedging = negative_information/hypothesis_information (mkHedging:308),
     *    context from the window+defaults engine (mkContext:165-168);
     *  - meta: pmc_id = conv_id, trigger, sorted evidence (addMeta:455-476;
@@ -656,153 +532,30 @@ object Emit {
     * Simplification (documented): participant PTM/Mutant feature lists
     * (mkFeatures:203-214) are not re-derivable from the flat edge table;
     * argument-level modifications are exported in the FRIES frame graph.
-    * Scale: modification-suppression is one left-anti join keyed
-    * (conv_id, event key); participant rendering is broadcast joins.
+    * Scale: the node catalog (display and display label per canonical id)
+    * is collected and broadcast; cards are built per conversation (the
+    * modification suppression is conversation-scoped), then merged per card
+    * key ([[KgExport.mergeCards]]).
     */
   def indexCardFlat(edges: DataFrame, nodes: DataFrame): DataFrame = {
-    val innerLabel = regexp_extract(col("obj"), "^([A-Za-z_]+)\\(", 1)
-    val innerGid = regexp_extract(col("obj"), "\\(([a-z]+:[^@)]+)", 1)
-    val isModLabel = (c: org.apache.spark.sql.Column) =>
-      regexp_replace(c, "^Auto", "").isin(modEventLabels: _*)
-
-    val base = Seq("interaction_type", "participant_a_gid", "participant_b_gid",
-      "modification_type", "position", "to_location_id",
-      "negative_information", "hypothesis_information",
-      "context_species", "context_organ", "context_cell_line",
-      "context_cell_type", "trigger", "evidence_text", "pmc_id")
-
-    def shape(df: DataFrame): DataFrame = df.select(
-      col("interaction_type"),
-      col("participant_a_gid"), col("participant_b_gid"),
-      col("modification_type"), col("position"), col("to_location_id"),
-      col("negated").as("negative_information"),
-      col("hypothesis").as("hypothesis_information"),
-      col("ctx_species").as("context_species"),
-      col("ctx_organ").as("context_organ"),
-      col("ctx_cell_line").as("context_cell_line"),
-      col("ctx_cell_type").as("context_cell_type"),
-      col("trigger_text").as("trigger"),
-      col("evidence_text"),
-      col("conv_id").as("pmc_id"))
-
-    val modRegs = edges
-      .filter(col("pred").rlike("_regulation$") && isModLabel(innerLabel))
-      .withColumn("interaction_type",
-        when(col("pred") === "Positive_regulation", lit("adds_modification"))
-          .otherwise(lit("inhibits_modification")))
-      .withColumn("participant_a_gid", col("subj"))
-      .withColumn("participant_b_gid", innerGid)
-      .withColumn("modification_type",
-        lower(regexp_replace(innerLabel, "^Auto", "")))
-      .withColumn("position", col("site"))
-      .withColumn("to_location_id", lit(""))
-
-    val consumed = edges.filter(col("pred").rlike("_regulation$"))
-      .select(col("conv_id").as("consumed_conv"),
-        col("obj").as("consumed_key")).distinct()
-
-    val simpleMods = edges
-      .filter(isModLabel(col("pred")) && col("subj") === "")
-      .withColumn("own_key", ownEventKey)
-      .join(consumed, col("own_key") === col("consumed_key") &&
-        col("conv_id") === col("consumed_conv"), "left_anti")
-      .withColumn("interaction_type", lit("adds_modification"))
-      .withColumn("participant_a_gid", lit(""))
-      .withColumn("participant_b_gid", col("obj"))
-      .withColumn("modification_type",
-        lower(regexp_replace(col("pred"), "^Auto", "")))
-      .withColumn("position", col("site"))
-      .withColumn("to_location_id", lit(""))
-
-    val bindings = edges.filter(col("pred") === "Binding")
-      .withColumn("interaction_type", lit("binds"))
-      .withColumn("participant_a_gid", split(col("obj"), "&")(0))
-      .withColumn("participant_b_gid", split(col("obj"), "&")(1))
-      .withColumn("modification_type", lit(""))
-      .withColumn("position", col("site"))
-      .withColumn("to_location_id", lit(""))
-
-    val activations = edges.filter(col("pred").rlike("_activation$"))
-      .withColumn("interaction_type",
-        when(col("pred") === "Positive_activation", lit("increases_activity"))
-          .otherwise(lit("decreases_activity")))
-      .withColumn("participant_a_gid", col("subj"))
-      .withColumn("participant_b_gid", col("obj"))
-      .withColumn("modification_type", lit(""))
-      .withColumn("position", lit(""))
-      .withColumn("to_location_id", lit(""))
-
-    val translocations = edges.filter(col("pred") === "Translocation")
-      .withColumn("interaction_type", lit("translocates"))
-      .withColumn("participant_a_gid", lit(""))
-      .withColumn("participant_b_gid", col("obj"))
-      .withColumn("modification_type", lit(""))
-      .withColumn("position", lit(""))
-      .withColumn("to_location_id", col("site"))
-
-    val amounts = edges
-      .filter(col("pred").isin("IncreaseAmount", "DecreaseAmount",
-        "Transcription"))
-      .withColumn("interaction_type",
-        when(col("pred") === "Transcription", lit("transcribes"))
-          .otherwise(col("pred")))
-      .withColumn("participant_a_gid", col("subj"))
-      .withColumn("participant_b_gid", col("obj"))
-      .withColumn("modification_type", lit(""))
-      .withColumn("position", lit(""))
-      .withColumn("to_location_id", lit(""))
-
-    val cards = Seq(modRegs, simpleMods, bindings, activations, amounts,
-      translocations).map(shape).reduce(_.unionByName(_))
-
-    val withB = withParticipant(
-      withParticipant(cards, nodes, "participant_a_gid", "participant_a"),
-      nodes, "participant_b_gid", "participant_b")
-    val icKeys = base.filterNot(_ == "evidence_text").map(col) ++ Seq(
-      col("participant_a_text"), col("participant_a_type"),
-      col("participant_a_identifier"), col("participant_b_text"),
-      col("participant_b_type"), col("participant_b_identifier"))
-    capListCols(withB, keys = icKeys,
-      order = Seq(col("evidence_text"), col("pmc_id")),
-      capped = Seq("evidence_text"))
-      .groupBy(icKeys: _*)
-      .agg(count(lit(1)).as("seen"),
-        concat_ws(" | ", array_sort(collect_set(col("evidence_text"))))
-          .as("evidence"))
-      .drop("participant_a_gid", "participant_b_gid")
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val meta = spark.sparkContext.broadcast[KgExport.NodeMeta](
+      nodes.select("canon_id", "display", "display_label")
+        .as[(String, String, String)].collect()
+        .map { case (id, display, label) => id -> (display, label) }.toMap)
+    edges.as[EdgeRow].groupByKey(_.conv_id)
+      .flatMapGroups((_, es) => KgExport.cards(es.toSeq, meta.value))
+      .groupByKey(KgExport.cardKey).mapGroups(KgExport.mergeCards).toDF()
   }
 
   /** Reference-shaped nested IndexCard JSON over the flat card rows
-    * (IndexCardOutput.writeJsonToString shape, meta per addMeta). */
-  def indexCardJson(flat: DataFrame): DataFrame =
-    flat.select(to_json(struct(
-      struct(
-        col("interaction_type"),
-        when(col("participant_a_identifier") =!= "", struct(
-          col("participant_a_text").as("entity_text"),
-          col("participant_a_type").as("entity_type"),
-          col("participant_a_identifier").as("identifier"))).as("participant_a"),
-        struct(
-          col("participant_b_text").as("entity_text"),
-          col("participant_b_type").as("entity_type"),
-          col("participant_b_identifier").as("identifier")).as("participant_b"),
-        when(col("modification_type") =!= "", array(struct(
-          lit("modification").as("feature_type"),
-          col("modification_type"),
-          col("position")))).as("modifications"),
-        when(col("to_location_id") =!= "",
-          col("to_location_id")).as("to_location_id"),
-        col("negative_information"),
-        col("hypothesis_information"),
-        struct(col("context_species").as("species"),
-          col("context_organ").as("organ"),
-          col("context_cell_line").as("cell_line"),
-          col("context_cell_type").as("cell_type")).as("context")
-      ).as("extracted_information"),
-      col("pmc_id"), col("trigger"), col("evidence"),
-      lit("machine").as("reader_type"),
-      lit("extension").as("model_relation")
-    )).as("card"))
+    * ([[KgExport.cardJson]]), one `card` string per row. */
+  def indexCardJson(flat: DataFrame): DataFrame = {
+    val spark = flat.sparkSession
+    import spark.implicits._
+    flat.as[IndexCard].map(KgExport.cardJson).toDF("card")
+  }
 
   // ---- CMU DyCE tabular sink (S9 companion; reference: export/.../cmu/
   // CMUExporter.scala + CMURow.scala) --------------------------------------

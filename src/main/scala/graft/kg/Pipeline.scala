@@ -17,15 +17,18 @@ import scala.jdk.CollectionConverters._
   *   mentions_raw --(ONE exchange: salted conv grouping; context+coref+link+emit
   *                   in a single partition-local fold)--> stage_b (linked/triples/aliases)
   *   aliases --(tiny; CC)--> canon_map
-  *   stage_b + broadcast(canon_map) --(broadcast join, narrow)--> edges, nodes
+  *   stage_b + broadcast(canon_map) --(typed map, narrow; dedup / node
+  *                   aggregation)--> edges, nodes
   *
   * Checkpoint-resumable at every stage boundary via TableIO manifests
   * (mention -> link -> canonicalize -> materialize, per the north rule).
   * One private stage sequence serves [[run]] (writes and reads back every
   * table) and [[extract]] (holds stage_b in memory, the rest lazy).
   *
-  * The per-turn and per-group work inside these stages is [[KgCore]]'s;
-  * `KgCore.stageB` runs the same functions in-process.
+  * The per-turn and per-group work inside these stages is [[KgCore]]'s
+  * (narrow pass, fold), [[Canon]]'s (alias predicate, driver union-find)
+  * and [[KgExport]]'s (edge, node); `KgCore.stageB` and
+  * `KgExport.materialize` run the same functions in-process.
   *
   * Skew: the conv grouping key is salted with `turn_idx / chunkTurns`, so a
   * mega-conversation fans out across tasks in chunkTurns-sized spans; the
@@ -199,90 +202,40 @@ object Pipeline {
     instrument(grouped, "link_coref_emit", runId, acc)
   }
 
+  /** The canon map `(gid, canon_id)`: connected components of the alias
+    * edges that [[Canon.rewrites]] admits. */
   def stageCanon(spark: SparkSession, b: Dataset[StageBRow]): DataFrame = {
+    import spark.implicits._
     val aliases = b.filter(col("kind") === "alias")
-      .select(col("alias.a").as("a"), col("alias.b").as("b"))
-      // identity (winner) rewrite only when one side is effectively
-      // ungrounded — the uaz failsafe namespace (reference Coref.scala:
-      // 396-401: an ungrounded alias side ADOPTS the grounded side's
-      // candidates; a both-grounded pair keeps each side's own winner and
-      // only unions candidate lists, which the fold handles per
-      // conversation). Without this guard a known<->known alias in one
-      // conversation would rewrite the shared KB id corpus-wide.
-      .where(col("a").startsWith("uaz:") || col("b").startsWith("uaz:"))
-    Canon.connectedComponents(spark, aliases)
+      .select(col("alias.a"), col("alias.b")).as[(String, String)]
+      .filter(e => Canon.rewrites(e._1, e._2))
+    Canon.connectedComponents(spark, aliases.toDF("a", "b"))
   }
 
+  /** Edges and nodes: [[KgExport.edge]] over every triple with the canon
+    * map broadcast, deduplicated on `edge_id` — content-level dedup
+    * (reference corefDistinct A4): the same semantic edge can be derived via
+    * multiple rule paths (entity-controller and flattened event-controller
+    * regulations); [[KgExport.node]] per canonical id over the Catalyst
+    * count of each surface ([[KgExport.surface]]). The canon map is
+    * collected here, once for both tables.
+    */
   def stageMaterialize(spark: SparkSession, b: Dataset[StageBRow],
                        canonMap: DataFrame): (DataFrame, DataFrame) = {
-    val canon = broadcast(canonMap)
-    def canonized(df: DataFrame, c: String): DataFrame =
-      df.join(canon.withColumnRenamed("gid", c)
-          .withColumnRenamed("canon_id", c + "_canon"), Seq(c), "left")
-        .withColumn(c, coalesce(col(c + "_canon"), col(c)))
-        .drop(c + "_canon")
-
-    val pre = b.filter(col("kind") === "triple").select("triple.*")
-    val canonized2 = canonized(canonized(canonized(pre, "subj_gid"), "obj_gid"), "obj_gid2")
-    val edges = canonized2
-      .withColumn("obj",
-        when(col("obj_pred") =!= "",
-          concat(col("obj_pred"), lit("("), col("obj_gid"),
-            when(col("site") =!= "", concat(lit("@"), col("site"))).otherwise(lit("")),
-            lit(")")))
-        .when(col("obj_gid2") =!= "",
-          concat_ws("&", array_sort(concat(
-            array(col("obj_gid"), col("obj_gid2")),
-            when(col("obj_rest") =!= "", split(col("obj_rest"), "&"))
-              .otherwise(array().cast("array<string>"))))))
-        .otherwise(col("obj_gid")))
-      .select(
-        col("subj_gid").as("subj"), col("pred"), col("obj"), col("site"),
-        col("negated"), col("hypothesis"), col("conv_id"), col("turn_idx"),
-        col("evidence_text"), col("found_by"), col("trigger_text"),
-        col("ctx_species"), col("ctx_organ"), col("ctx_cell_line"),
-        col("ctx_cell_type"), col("cue"), col("sent_idx"), col("trig_start"),
-        col("intra_cue"), col("tense"))
-      .withColumn("edge_id", xxhash64(col("subj"), col("pred"), col("obj"),
-        col("site"), col("negated"), col("hypothesis"), col("conv_id"),
-        col("turn_idx")))
-      // content-level dedup (reference corefDistinct A4): the same semantic
-      // edge can be derived via multiple rule paths (entity-controller and
-      // flattened event-controller regulations)
+    import spark.implicits._
+    val canon = spark.sparkContext.broadcast(canonMap
+      .select("gid", "canon_id").as[(String, String)].collect().toMap)
+    val edges = b.filter(col("kind") === "triple").select("triple.*")
+      .as[PreTriple].map(KgExport.edge(_, canon.value))
       .dropDuplicates("edge_id")
-
-    val linked = b.filter(col("kind") === "linked").select("linked.*")
-    val ents = linked.filter(col("is_event") === false && col("ns") =!= "")
-      .withColumn("gid", concat(col("ns"), lit(":"), col("ns_id")))
-    val entsCanon = canonized(ents.withColumnRenamed("gid", "canon_gid")
-      .withColumnRenamed("canon_gid", "gid"), "gid")
-      .withColumnRenamed("gid", "canon_id")
-    import org.apache.spark.sql.expressions.Window
-    val surfaceCounts = entsCanon.groupBy(col("canon_id"), col("text"),
-        col("ns"), col("ns_id"), col("species"), col("labels"),
-        col("display_label"))
-      .agg(count(lit(1)).as("n"))
-    val w = Window.partitionBy(col("canon_id"))
-      .orderBy(col("n").desc, col("text").asc, col("display_label").asc)
-    val nodes = surfaceCounts
-      .withColumn("rn", row_number().over(w))
-      .groupBy(col("canon_id"))
-      .agg(
-        max(when(col("rn") === 1, col("text"))).as("display"),
-        max(when(col("rn") === 1, col("labels")(0))).as("label"),
-        // resolveDisplay disambiguation (ReachSystem.scala:249-293) carried
-        // from the per-mention resolution: Family / Gene / Protein for GGPs
-        max(when(col("rn") === 1, col("display_label"))).as("display_label"),
-        max(when(col("rn") === 1, col("ns"))).as("ns"),
-        max(when(col("rn") === 1, col("ns_id"))).as("ns_id"),
-        max(when(col("rn") === 1, col("species"))).as("species"),
-        // fan-in bound (same class as Emit.MaxListPerKey): keep the 1000
-        // most-frequent surface forms — input is already distinct-per-form,
-        // but an alias-heavy corpus could still grow one node's form set
-        // without bound
-        collect_set(when(col("rn") <= 1000, col("text")))
-          .as("alias_surface_forms"))
-    (edges, nodes)
+    val surfaceKey = Seq("canon_id", "text", "ns", "ns_id", "species",
+      "labels", "display_label")
+    val nodes = b.filter(col("kind") === "linked").select("linked.*")
+      .as[LinkedMention].flatMap(KgExport.surface(_, canon.value))
+      .groupBy(surfaceKey.map(col): _*).agg(sum(col("n")).as("n"))
+      .as[Surface].groupByKey(_.canon_id)
+      .mapGroups((c, ss) => KgExport.node(c, ss.toSeq))
+    (edges.toDF(), nodes.toDF())
   }
 
   // ---- the one stage sequence ---------------------------------------------
@@ -305,8 +258,10 @@ object Pipeline {
     val b = hold("stage_b", stageB(spark, mentions, runId, acc, cfg).toDF())
       .as[StageBRow]
     val canonMap = hold("canon_map", stageCanon(spark, b))
-    val (edges, nodes) = stageMaterialize(spark, b, canonMap)
-    Result(hold("edges", edges), hold("nodes", nodes),
+    // lazy: materialize collects the canon map, which a run resuming both
+    // tables never needs
+    lazy val materialized = stageMaterialize(spark, b, canonMap)
+    Result(hold("edges", materialized._1), hold("nodes", materialized._2),
       lineage(acc.value.asScala.toSeq), b, canonMap)
   }
 

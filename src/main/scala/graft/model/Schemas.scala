@@ -190,11 +190,12 @@ final case class Triple(
     found_by: String
 )
 
-/** Canonical graph node (canonicalization output). */
+/** Canonical graph node (the nodes table's row). */
 final case class Node(
     canon_id: String,
     display: String,
     label: String,
+    display_label: String,
     ns: String,
     ns_id: String,
     species: String,

@@ -15,14 +15,16 @@ class PlanSpec extends AnyFunSuite {
   // ShuffleExchangeExec nodes per query, measured at the commit that
   // introduced this spec (kg_link_firsthit re-measured when it moved onto
   // the fold's broadcast KbIndex lookup; kg_precedence when extract began
-  // holding stage_b as a local checkpoint instead of a cache entry)
+  // holding stage_b as a local checkpoint instead of a cache entry;
+  // kg_emit_indexcard and kg_emit_assembly when edges and cards became
+  // typed functions over a broadcast canon map and node catalog)
   private val maxShuffles = Seq(
     "kg_mentions" -> 0,
     "kg_link_firsthit" -> 0,
     "kg_precedence" -> 17,
-    "kg_emit_assembly" -> 25,
+    "kg_emit_assembly" -> 13,
     "kg_emit_serial" -> 0,
-    "kg_emit_indexcard" -> 3)
+    "kg_emit_indexcard" -> 2)
 
   private def shuffles(name: String): Int =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan match {

@@ -4,10 +4,8 @@ import graft.kg._
 import graft.model.Lineage
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.util.CollectionAccumulator
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** REST serving face (S11 — ApiRuler semantics): POST text → the export
   * JSON inside the reference's {resultJson, hasError} envelope.
@@ -176,10 +174,11 @@ class ServeSpec extends AnyFunSuite {
         Emit.friesFrameGraph(b.toDF(), Some(turns.toDF()))
           .select(col("fries")).as[String].collect().headOption.getOrElse("{}")
       case "indexcard" =>
+        // in Serve's card order: sorted by card JSON
         val (edges, nodes) = Pipeline.stageMaterialize(spark, b,
           Pipeline.stageCanon(spark, b))
         Emit.indexCardJson(Emit.indexCardFlat(edges, nodes))
-          .as[String].collect().mkString("[", ",", "]")
+          .as[String].collect().sorted.mkString("[", ",", "]")
     } finally b.unpersist()
   }
 
@@ -201,40 +200,13 @@ class ServeSpec extends AnyFunSuite {
   test("an unknown output format answers 400 before any extraction: no " +
        "Spark job starts") {
     val sc = spark.sparkContext
-    val group = "serve-spec-format"
-    val marker = "graft.spec.marker"
-    // every job of the group, in start order; the marker job's entry is
-    // "marker", so once it is seen every earlier job has been seen too
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties)
-          .filter(_.getProperty("spark.jobGroup.id") == group)
-          .foreach(p => seen.add(Option(p.getProperty(marker)).getOrElse("job")))
-    }
-    def jobsDuring(f: => Any): Int = {
-      seen.clear()
-      f
-      sc.setLocalProperty(marker, "marker")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(marker, null)
-      val deadline = System.nanoTime() + 30000000000L
-      while (!seen.contains("marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains("marker"), "the listener missed the marker job")
-      seen.asScala.count(_ == "job")
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "ServeSpec")
-    try {
-      val text = "MEK1 phosphorylates ERK2."
-      assert(jobsDuring(Serve.annotateText(spark, text, "indexcard", "api1")) > 0)
-      assert(jobsDuring(intercept[IllegalArgumentException](
+    val text = "MEK1 phosphorylates ERK2."
+    // both formats run in-process: no Spark job either
+    Seq("fries", "indexcard").foreach(f => assert(SparkJobs.during(sc,
+      "serve-spec-format")(Serve.annotateText(spark, text, f, "api1")) == 0, f))
+    assert(SparkJobs.during(sc, "serve-spec-format")(
+      intercept[IllegalArgumentException](
         Serve.annotateText(spark, text, "bogus", "api2"))) == 0)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
     // over HTTP: a KB that fails extraction (a null lexicon surface) still
     // answers 400 for an unknown format, as the format is checked first
     val broken = KgConfig(kb = KbData.builtin.copy(
