@@ -1,7 +1,6 @@
 package graft
 
 import graft.kg._
-import graft.model.Turn
 
 /** Developer probes for hand-tracing rules and mining golden fixtures:
   *
@@ -9,10 +8,10 @@ import graft.model.Turn
   *     tokens, NER tags, POS tags, dependencies and rule mentions of each
   *     sentence; single-threaded, no Spark
   *   graft.Dev triples CONV...
-  *     the full pipeline over the given conversations: the emitted triples
-  *     per turn, then any causal-precedence rows. Each CONV is one
-  *     conversation whose turns are separated by `||`; `@FILE` stands for
-  *     one conversation per non-empty line of FILE.
+  *     the full pipeline over the given conversations, in-process with no
+  *     Spark: the emitted triples per turn, then any causal-precedence
+  *     rows. Each CONV is one conversation whose turns are separated by
+  *     `||`; `@FILE` stands for one conversation per non-empty line of FILE.
   */
 object Dev {
   def main(args: Array[String]): Unit = args.toList match {
@@ -64,30 +63,25 @@ object Dev {
         Transcripts.mkTurn(f"t$ci%02d", ti, "user", t.trim)
       }
     }
-    val spark = Sessions.getOrCreate("graft-dev")
-    import spark.implicits._
-    val edges = Pipeline.extract(spark, spark.createDataset[Turn](turns)).edges
-    val rows = edges
-      .select("conv_id", "turn_idx", "subj", "pred", "obj", "site",
-        "negated", "hypothesis")
-      .orderBy("conv_id", "turn_idx", "pred", "obj")
-      .collect()
+    val cfg = KgConfig.default
+    val (edges, _) = KgExport.materialize(
+      KgCore.stageB(turns, KgCore.compile(cfg), cfg))
+    val rows = edges.sortBy(e =>
+      (e.conv_id, e.turn_idx, e.pred, e.obj, e.site, e.subj))
     turns.foreach { t =>
       println(s"--- ${t.conv_id}[${t.turn_idx}]: ${t.text}")
-      rows.filter(r => r.getString(0) == t.conv_id && r.getInt(1) == t.turn_idx)
-        .foreach { r =>
-          println(s"    (${r.getString(2)}, ${r.getString(3)}, ${r.getString(4)}," +
-            s" site=${r.getString(5)}, neg=${r.getBoolean(6)}, hyp=${r.getBoolean(7)})")
+      rows.filter(e => e.conv_id == t.conv_id && e.turn_idx == t.turn_idx)
+        .foreach { e =>
+          println(s"    (${e.subj}, ${e.pred}, ${e.obj}, site=${e.site}," +
+            s" neg=${e.negated}, hyp=${e.hypothesis})")
         }
     }
-    val prec = Precedence.precedence(edges)
-      .select("conv_id", "before_pred", "before_obj", "after_pred",
-        "after_obj", "sieve")
-      .orderBy("conv_id", "before_pred", "before_obj")
-      .collect()
+    val prec = edges.groupBy(_.conv_id).values
+      .flatMap(Precedence.ofConversation(_)).toSeq
+      .sortBy(r => (r.conv_id, r.before_pred, r.before_obj, r.after_pred,
+        r.after_obj, r.sieve))
     if (prec.nonEmpty) println("=== precedence rows ===")
-    prec.foreach(r => println(s"  ${r.getString(0)}: ${r.getString(1)}(${r.getString(2)})" +
-      s" < ${r.getString(3)}(${r.getString(4)}) [${r.getString(5)}]"))
-    spark.stop()
+    prec.foreach(r => println(s"  ${r.conv_id}: ${r.before_pred}(" +
+      s"${r.before_obj}) < ${r.after_pred}(${r.after_obj}) [${r.sieve}]"))
   }
 }

@@ -251,7 +251,7 @@ object Emit {
     *    (createSimpleEntityText:68-92), CONTROLLER = NONE, EVENT_LABEL =
     *    first PTM label when PTM-featured else "entity"
     *    (getEventLabel:389-401), gid canonicalized through the alias CC map;
-    *  - PRECEDED_BY: predecessor row ids from the three precedence sieves
+    *  - PRECEDED_BY: predecessor row ids from the four precedence sieves
     *    ([[Precedence.precedence]]), matched by (conversation, event key) —
     *    the sieves identify events at (pred, obj) granularity, so every row
     *    sharing the key inherits the predecessor (the reference keys on EER
@@ -274,8 +274,8 @@ object Emit {
     * TISSUE_TYPE columns).
     *
     * Scale shape: event side is one groupBy on row-identity keys (map-side
-    * partial agg); precedence pairs are sieve-filtered (sparse) and join
-    * broadcast; entity side is one groupBy over linked entities + broadcast
+    * partial agg); precedence pairs come from one groupByKey over the edges
+    * (sparse) and join broadcast; entity side is one groupBy over linked entities + broadcast
     * canon join; MITRE pruning re-aggregates only the filtered survivors.
     */
   def assemblyTsv(edges: DataFrame, stageB: DataFrame, canonMap: DataFrame,

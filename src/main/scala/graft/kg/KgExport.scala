@@ -74,6 +74,11 @@ object KgExport {
       s(site, s(obj, s(pred, s(subj, 42L))))))))
   }
 
+  /** The key of the event `pred` over `obj` at `site` — what a regulation's
+    * object holds for its controlled event: `pred(obj[@site])`. */
+  def eventKey(pred: String, obj: String, site: String): String =
+    if (site.nonEmpty) s"$pred($obj@$site)" else s"$pred($obj)"
+
   /** One stage_b triple as an edge: `subj`/`obj`/`obj2` rewritten to their
     * canonical ids, then the object composed — `obj_pred(gid@site)` for a
     * regulation, the `&` join of the sorted themes for an n-ary binding.
@@ -82,7 +87,7 @@ object KgExport {
     def c(gid: String) = canon.getOrElse(gid, gid)
     val (subj, o1, o2) = (c(t.subj_gid), c(t.obj_gid), c(t.obj_gid2))
     val obj =
-      if (t.obj_pred.nonEmpty) s"${t.obj_pred}($o1${atSite(t.site)})"
+      if (t.obj_pred.nonEmpty) eventKey(t.obj_pred, o1, t.site)
       else if (o2.nonEmpty)
         (Seq(o1, o2) ++
           (if (t.obj_rest.nonEmpty) t.obj_rest.split("&", -1).toSeq else Nil))
@@ -275,19 +280,13 @@ object KgExport {
   private val InnerGid = "\\(([a-z]+:[^@)]+)".r
 
   /** Catalyst's `regexp_extract(s, re, 1)`: "" when nothing matches. */
-  private def group1(re: scala.util.matching.Regex, s: String): String =
+  private[kg] def group1(re: scala.util.matching.Regex, s: String): String =
     re.findFirstMatchIn(s).map(_.group(1)).getOrElse("")
 
   private val amountLabels =
     Set("IncreaseAmount", "DecreaseAmount", "Transcription")
 
   private def isRegulation(pred: String) = pred.endsWith("_regulation")
-
-  private def atSite(site: String) = if (site.nonEmpty) "@" + site else ""
-
-  /** The event key an edge has as another edge's controlled argument
-    * ([[edge]] composes `obj_pred(obj_gid[@site])`). */
-  private def ownEventKey(e: EdgeRow) = s"${e.pred}(${e.obj}${atSite(e.site)})"
 
   /** The display and display label of each node, by canonical id. */
   type NodeMeta = Map[String, (String, String)]
@@ -327,7 +326,7 @@ object KgExport {
             else "inhibits_modification", e.subj, group1(InnerGid, e.obj),
             sansAuto(inner).toLowerCase(Locale.ROOT), e.site, ""))
         else if (isModLabel(p) && e.subj == "" &&
-          !consumed((e.conv_id, ownEventKey(e))))
+          !consumed((e.conv_id, eventKey(e.pred, e.obj, e.site))))
           Some(("adds_modification", "", e.obj,
             sansAuto(p).toLowerCase(Locale.ROOT), e.site, ""))
         else if (p == "Binding") {

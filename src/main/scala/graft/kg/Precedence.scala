@@ -1,8 +1,14 @@
 package graft.kg
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+
+/** One causal-precedence relation: the `before` event precedes the `after`
+  * event, both identified by (pred, obj, turn) within one conversation, and
+  * the sieve that found it. */
+final case class PrecedenceRow(
+    conv_id: String, before_pred: String, before_obj: String,
+    before_turn: Int, after_pred: String, after_obj: String, after_turn: Int,
+    sieve: String)
 
 /** Causal-precedence sieves over the materialized edges (reference:
   * assembly/src/main/scala/org/clulab/reach/assembly/sieves/Sieves.scala):
@@ -29,6 +35,8 @@ import org.apache.spark.sql.functions._
   *     document; at 10^12 turns that is quadratic per conversation, so
   *     pairs are bounded to `lookback` turns (the TAM cues themselves are
   *     sentence-local, so long-range pairs add noise, not signal).
+  *  4. feature-based classifier with shared arguments (:302-322), see
+  *     [[candidates]] and [[PairClassifier]].
   *
   * Every sieve applies the reference's isValidRelationPair constraints
   * (Constraints.scala:127-160): the two events must be distinct, a
@@ -36,12 +44,20 @@ import org.apache.spark.sql.functions._
   * must not share their controlled. Earlier sieves win on duplicate pairs
   * in either direction (the reference's noExistingPrecedence guard).
   *
-  * Plan shape at scale: every sieve joins conv_id-keyed with the marked
-  * side filtered first — Catalyst pushes the marker filters below the
-  * joins and AQE broadcasts the small sides; the constraints are pure
-  * column expressions (no UDF).
+  * Plan shape: the sieves run over one conversation's edges at a time, as
+  * the reference's run over one document's mentions ([[ofConversation]]),
+  * so [[precedence]] is one `groupByKey(conv_id).flatMapGroups` — one
+  * shuffle exchange. Candidate partners are looked up through a turn
+  * index, so a conversation costs O(edges x window), not O(edges^2).
   */
 object Precedence {
+
+  /** Turns sieves 1 and 3 look back for a partner. */
+  private val lookback = 3
+
+  /** Sieve 4's sentential window (reference kWindow default 1,
+    * reference.conf:24). */
+  private val kWindow = 1
 
   /** Connectives whose marked (textually later) event PRECEDES the earlier
     * one (intrasentential.yml assembly-prep-syntax-2 "after|following",
@@ -49,7 +65,7 @@ object Precedence {
     * -syntax-3/surface-5 "result of", surface-3 "in response to",
     * -dependent-on).
     */
-  private val intraSwapCues = Seq("after", "following", "follows",
+  private val intraSwapCues = Set("after", "following", "follows",
     "followed", "due_to", "because_of", "in_response_to", "dependent_on",
     "result_of", "results_from")
 
@@ -58,7 +74,7 @@ object Precedence {
     * events; values: "before" (first precedes second) / "after" (second
     * precedes first).
     */
-  private val reichenbach: Seq[((String, String), String)] = Seq(
+  private val reichenbach: Map[(String, String), String] = Map(
     ("past|perf", "past") -> "before",
     ("past|perf", "present") -> "before",
     ("past|perf", "present|perf") -> "before",
@@ -80,29 +96,30 @@ object Precedence {
     ("future|perf", "past|perf") -> "after",
     ("future|perf", "present|perf") -> "after")
 
-  private def relExpr(t1: Column, t2: Column): Column =
-    reichenbach.foldLeft(lit("none")) { case (acc, ((a, b), rel)) =>
-      when(t1 === a && t2 === b, rel).otherwise(acc)
-    }
-
-  /** The composite event key a regulation's obj column uses for its
-    * controlled ("Phosphorylation(uniprot:X@S)").
-    */
-  private def composite(pred: Column, obj: Column, site: Column): Column =
-    concat(pred, lit("("), obj,
-      when(site =!= "", concat(lit("@"), site)).otherwise(lit("")), lit(")"))
-
   /** Constraints.isValidRelationPair (reference :127-160): distinct events;
     * a regulation never pairs with its own controlled; two activations
     * must not share their controlled.
     */
-  private def validPair(aPred: Column, aObj: Column, aSite: Column,
-                        bPred: Column, bObj: Column, bSite: Column): Column =
-    (aPred =!= bPred || aObj =!= bObj) &&
-      aObj =!= composite(bPred, bObj, bSite) &&
-      bObj =!= composite(aPred, aObj, aSite) &&
-      !(aPred.contains("activation") && bPred.contains("activation") &&
-        aObj === bObj)
+  private def validPair(a: EdgeRow, b: EdgeRow): Boolean =
+    (a.pred != b.pred || a.obj != b.obj) &&
+      a.obj != KgExport.eventKey(b.pred, b.obj, b.site) &&
+      b.obj != KgExport.eventKey(a.pred, a.obj, a.site) &&
+      !(a.pred.contains("activation") && b.pred.contains("activation") &&
+        a.obj == b.obj)
+
+  private def row(before: EdgeRow, after: EdgeRow, sieve: String) =
+    PrecedenceRow(before.conv_id, before.pred, before.obj, before.turn_idx,
+      after.pred, after.obj, after.turn_idx, sieve)
+
+  /** The edges of turns `from` until `until`, through a turn index. */
+  private def inTurns(byTurn: Map[Int, Seq[EdgeRow]], from: Int,
+                      until: Int): Seq[EdgeRow] =
+    (from until until).flatMap(byTurn.getOrElse(_, Nil))
+
+  /** Textual order within a turn. */
+  private def earlier(a: EdgeRow, b: EdgeRow): Boolean =
+    a.sent_idx < b.sent_idx ||
+      (a.sent_idx == b.sent_idx && a.trig_start < b.trig_start)
 
   // ---- sieve 4: feature-based classifier (shared-args variant) -----------
 
@@ -113,21 +130,39 @@ object Precedence {
   val E2PrecedesE1 = "E2PrecedesE1"
   val NEG = "NEG"
 
+  /** A gated sieve-4 pair, `a` textually before `b`, with its features: the
+    * subset of FeatureExtractor.mkFeatures computable exactly from the edge
+    * table (label pair, cross-sentence flag, turn/sentence/trigger
+    * distances, tense pair, the shared ids). Token-level surface features
+    * (interceding n-grams, syntactic paths) would ride the edge table as
+    * extra columns if a trained model needed them — the edge table
+    * deliberately does not carry sentence text.
+    */
+  final case class Candidate(a: EdgeRow, b: EdgeRow, sharedIds: Seq[String]) {
+    def labelPair: String = s"${a.pred}|${b.pred}"
+    def crossSent: Boolean =
+      a.turn_idx != b.turn_idx || a.sent_idx != b.sent_idx
+    def turnDist: Int = b.turn_idx - a.turn_idx
+    def sentDist: Int =
+      if (a.turn_idx == b.turn_idx) b.sent_idx - a.sent_idx else -1
+    def trigDist: Int = if (!crossSent) b.trig_start - a.trig_start else -1
+    def tensePair: String = s"${a.tense}|${b.tense}"
+  }
+
   /** Pluggable causal-precedence pair classifier — the reproducible face of
     * the reference's `featureBasedClassifierWithSharedArgs` sieve
     * (Sieves.scala:302-322). The trained model it loads (`fbc.model`,
     * named at assembly reference.conf:44) is NOT vendored in the reference
     * tree, so what is reproducible from public content is: the candidate
     * gating (withinWindow ∘ shareArg ∘ isValidRelationPair,
-    * Constraints.scala:43-160), the feature columns, and this interface —
-    * with a deterministic default standing in for the absent model.
-    * `classify` must add `label` (E1PrecedesE2 / E2PrecedesE1 / NEG) and
-    * `score` columns to the gated candidate-pair frame; implementations
-    * stay in Catalyst columns so the sieve remains UDF-free and codegen'd.
+    * Constraints.scala:43-160), the features of [[Candidate]], and this
+    * interface — with a deterministic default standing in for the absent
+    * model. `classify` returns a candidate's label (E1PrecedesE2 /
+    * E2PrecedesE1 / NEG) and score.
     */
   trait PairClassifier extends Serializable {
     def name: String
-    def classify(pairs: DataFrame): DataFrame
+    def classify(c: Candidate): (String, Double)
   }
 
   /** Deterministic default: a gated pair (within window, sharing an input
@@ -139,10 +174,10 @@ object Precedence {
     */
   object NarrativeOrderClassifier extends PairClassifier {
     val name = "narrative-order-default"
-    def classify(pairs: DataFrame): DataFrame =
-      pairs.withColumn("label", lit(E1PrecedesE2))
-        .withColumn("score", lit(0.5))
+    def classify(c: Candidate): (String, Double) = (E1PrecedesE2, 0.5)
   }
+
+  private val InnerIds = "\\(([^@)]+)".r
 
   /** Input-participant grounding ids of an edge (the reference's
     * `getInput`/EntityEventRepresentation.I, Constraints.scala:45-54): the
@@ -150,239 +185,133 @@ object Precedence {
     * regulation's composite "Pred(inner@site)" contributes its inner id)
     * plus the controller in `subj`.
     */
-  private def inputIds(subj: Column, obj: Column): Column = {
-    val inner = when(obj.contains("("),
-      regexp_extract(obj, "\\(([^@)]+)", 1)).otherwise(obj)
-    array_distinct(filter(concat(split(inner, "&"), array(subj)),
-      x => length(x) > 0))
+  private def inputIds(e: EdgeRow): Seq[String] = {
+    val inner =
+      if (e.obj.contains("(")) KgExport.group1(InnerIds, e.obj) else e.obj
+    (inner.split("&", -1).toSeq :+ e.subj).filter(_.nonEmpty).distinct
   }
 
-  /** Gated candidate pairs + feature columns. Gating =
+  /** The gated sieve-4 pairs of one conversation's edges. Gating =
     * `meetsRequirements` (Sieves.scala:304-310): within the sentential
-    * window (reference kWindow default 1, reference.conf:24 — interpreted
-    * over the (turn_idx, sent_idx) lattice: same turn and |Δsent| <=
-    * kWindow, or Δturn <= kWindow, since transcripts make the turn the
-    * sentence group), sharing an input participant by grounding id
-    * (Constraints.shareArg:43-67 fuzzyIntersects), and
-    * isValidRelationPair. Pairs are oriented textually (e1 strictly before
-    * e2), so every unordered pair appears once and classification is
-    * deterministic. Features are the subset of FeatureExtractor.mkFeatures
-    * computable exactly from the edge table (label pair, cross-sentence
-    * flag, turn/sentence/trigger distances, tense pair, the shared ids);
-    * token-level surface features (interceding n-grams, syntactic paths)
-    * would ride the edge table as extra columns if a trained model needed
-    * them — the edge table deliberately does not carry sentence text.
-    *
-    * Scale shape: one conv_id-keyed self-join with the window bound in the
-    * join condition (bounded fan-out per event), constraints as pure
-    * column expressions.
+    * window (interpreted over the (turn_idx, sent_idx) lattice: same turn
+    * and |Δsent| <= `kWindow`, or Δturn <= `kWindow`, since transcripts
+    * make the turn the sentence group), sharing an input participant by
+    * grounding id (Constraints.shareArg:43-67 fuzzyIntersects), and
+    * isValidRelationPair. Pairs are oriented textually, so every unordered
+    * pair appears once and classification is deterministic.
     */
-  def featureCandidates(edges: DataFrame, kWindow: Int = 1): DataFrame = {
-    require(kWindow >= 0, "window size must be >= 0")
-    def sideF(p: String): DataFrame = edges.select(
-      col("conv_id").as(p + "_conv"), col("turn_idx").as(p + "_turn"),
-      col("sent_idx").as(p + "_sent"), col("trig_start").as(p + "_trig"),
-      col("subj").as(p + "_subj"), col("pred").as(p + "_pred"),
-      col("obj").as(p + "_obj"), col("site").as(p + "_site"),
-      col("tense").as(p + "_tense"))
-    val a = sideF("a")
-    val b = sideF("b")
-    val textuallyOrdered =
-      col("a_turn") < col("b_turn") ||
-        (col("a_turn") === col("b_turn") &&
-          (col("a_sent") < col("b_sent") ||
-            (col("a_sent") === col("b_sent") &&
-              col("a_trig") < col("b_trig"))))
-    val withinWindow =
-      (col("a_turn") === col("b_turn") &&
-        abs(col("a_sent") - col("b_sent")) <= kWindow) ||
-        (col("b_turn") - col("a_turn")).between(1, kWindow)
-    a.join(b, col("a_conv") === col("b_conv") && textuallyOrdered &&
-        withinWindow)
-      .filter(validPair(col("a_pred"), col("a_obj"), col("a_site"),
-        col("b_pred"), col("b_obj"), col("b_site")))
-      .withColumn("f_shared_ids", array_intersect(
-        inputIds(col("a_subj"), col("a_obj")),
-        inputIds(col("b_subj"), col("b_obj"))))
-      .filter(size(col("f_shared_ids")) > 0) // Constraints.shareArg
-      .withColumn("f_label_pair", concat_ws("|", col("a_pred"), col("b_pred")))
-      .withColumn("f_cross_sent",
-        col("a_turn") =!= col("b_turn") || col("a_sent") =!= col("b_sent"))
-      .withColumn("f_turn_dist", col("b_turn") - col("a_turn"))
-      .withColumn("f_sent_dist", when(col("a_turn") === col("b_turn"),
-        col("b_sent") - col("a_sent")).otherwise(lit(-1)))
-      .withColumn("f_trig_dist", when(!col("f_cross_sent"),
-        col("b_trig") - col("a_trig")).otherwise(lit(-1)))
-      .withColumn("f_tense_pair",
-        concat_ws("|", col("a_tense"), col("b_tense")))
-      .withColumnRenamed("a_conv", "conv_id").drop("b_conv")
+  def candidates(convEdges: Seq[EdgeRow]): Seq[Candidate] = {
+    val byTurn = convEdges.groupBy(_.turn_idx)
+    convEdges.flatMap { b =>
+      val partners = inTurns(byTurn, b.turn_idx - kWindow, b.turn_idx) ++
+        byTurn(b.turn_idx).filter(a => earlier(a, b) &&
+          math.abs(a.sent_idx - b.sent_idx) <= kWindow)
+      partners.filter(validPair(_, b)).flatMap { a =>
+        val shared = inputIds(a).intersect(inputIds(b))
+        if (shared.nonEmpty) Some(Candidate(a, b, shared)) else None
+      }
+    }
   }
 
-  /** The feature-based sieve: gate, classify, keep non-NEG, orient by the
-    * label (classifyCausalPrecedencePairs:486-511 shape; the
-    * noExistingPrecedence guard is the cross-sieve dedup in
-    * [[precedence]]).
+  /** The feature-based sieve over one conversation's edges: gate, classify,
+    * keep non-NEG, orient by the label (classifyCausalPrecedencePairs:
+    * 486-511 shape; the noExistingPrecedence guard is the cross-sieve dedup
+    * in [[ofConversation]]). Each row comes with its score.
     */
-  def featureBased(edges: DataFrame,
-                   clf: PairClassifier = NarrativeOrderClassifier,
-                   kWindow: Int = 1): DataFrame = {
-    val classified = clf.classify(featureCandidates(edges, kWindow))
-      .filter(col("label") =!= NEG)
-    val e1First = col("label") === E1PrecedesE2
-    classified.select(
-      col("conv_id"),
-      when(e1First, col("a_pred")).otherwise(col("b_pred")).as("before_pred"),
-      when(e1First, col("a_obj")).otherwise(col("b_obj")).as("before_obj"),
-      when(e1First, col("a_turn")).otherwise(col("b_turn")).as("before_turn"),
-      when(e1First, col("b_pred")).otherwise(col("a_pred")).as("after_pred"),
-      when(e1First, col("b_obj")).otherwise(col("a_obj")).as("after_obj"),
-      when(e1First, col("b_turn")).otherwise(col("a_turn")).as("after_turn"),
-      concat(lit("feature-based-classifier:"), lit(clf.name)).as("sieve"),
-      col("score"))
+  def featureBased(convEdges: Seq[EdgeRow],
+                   clf: PairClassifier = NarrativeOrderClassifier)
+      : Seq[(PrecedenceRow, Double)] = {
+    val sieve = "feature-based-classifier:" + clf.name
+    candidates(convEdges).flatMap { c =>
+      val (label, score) = clf.classify(c)
+      if (label == NEG) None
+      else if (label == E1PrecedesE2) Some((row(c.a, c.b, sieve), score))
+      else Some((row(c.b, c.a, sieve), score))
+    }
   }
 
-  def precedence(edges: DataFrame, lookback: Int = 3,
-                 clf: PairClassifier = NarrativeOrderClassifier,
-                 kWindow: Int = 1): DataFrame = {
-    def side(prefix: String, extra: (String, String)*): DataFrame =
-      edges.select(
-        Seq(col("conv_id"), col("turn_idx").as(prefix + "_turn"),
-          col("sent_idx").as(prefix + "_sent"),
-          col("trig_start").as(prefix + "_trig"),
-          col("pred").as(prefix + "_pred"), col("obj").as(prefix + "_obj"),
-          col("site").as(prefix + "_site"),
-          col("tense").as(prefix + "_tense")) ++
-          extra.map { case (c, a) => col(c).as(a) }: _*)
+  // ---- the four sieves over one conversation ------------------------------
 
-    // ---- sieve 1: inter-sentential discourse cue -------------------------
-    // the cue-marked event pairs with every event of the nearest preceding
-    // event-bearing sentence (reference: rel.sentence - 1)
-    val marked = side("m", "cue" -> "cue").filter(col("cue") =!= "")
-      .withColumn("cue_dir", split(col("cue"), ":").getItem(0))
-      .withColumn("cue_name", split(col("cue"), ":").getItem(1))
-    val other = side("o").withColumnRenamed("conv_id", "o_conv")
-    val interPaired = marked.join(other,
-        col("conv_id") === col("o_conv") && (
-          (col("o_turn") === col("m_turn") && col("o_sent") < col("m_sent")) ||
-          (col("o_turn") < col("m_turn") &&
-            col("o_turn") >= col("m_turn") - lookback)))
-      .filter(validPair(col("m_pred"), col("m_obj"), col("m_site"),
-        col("o_pred"), col("o_obj"), col("o_site")))
-    val mw = Window.partitionBy(col("conv_id"), col("m_turn"), col("m_sent"),
-        col("m_trig"), col("m_pred"), col("m_obj"), col("m_site"))
-      .orderBy(col("o_turn").desc, col("o_sent").desc)
-    val interNearest = interPaired
-      .withColumn("rk", dense_rank().over(mw)).filter(col("rk") === 1)
-    val cueSwap = col("cue_dir") === "before"
-    val cueRows = interNearest.select(
-      col("conv_id"),
-      when(cueSwap, col("m_pred")).otherwise(col("o_pred")).as("before_pred"),
-      when(cueSwap, col("m_obj")).otherwise(col("o_obj")).as("before_obj"),
-      when(cueSwap, col("m_turn")).otherwise(col("o_turn")).as("before_turn"),
-      when(cueSwap, col("o_pred")).otherwise(col("m_pred")).as("after_pred"),
-      when(cueSwap, col("o_obj")).otherwise(col("m_obj")).as("after_obj"),
-      when(cueSwap, col("o_turn")).otherwise(col("m_turn")).as("after_turn"),
-      concat(lit("inter-sentential-rb:"), col("cue_name")).as("sieve"),
-      lit(1).as("sieve_rank"))
+  /** The precedence rows of one conversation's edges: the four sieves, then
+    * one row per unordered event pair — the lowest sieve rank wins, then
+    * the least sieve name.
+    */
+  def ofConversation(convEdges: Seq[EdgeRow],
+                     clf: PairClassifier = NarrativeOrderClassifier)
+      : Seq[PrecedenceRow] = {
+    val byTurn = convEdges.groupBy(_.turn_idx)
 
-    // ---- sieve 2: intra-sentential rule-based ----------------------------
-    // the connective-marked event pairs with every event at the nearest
-    // earlier trigger position of the same sentence (split regulations share
-    // their event's trigger, so ties are kept)
-    val imarked = side("m", "intra_cue" -> "icue")
-      .filter(col("icue") =!= "" && col("m_trig") >= 0)
-    val iother = side("o").filter(col("o_trig") >= 0)
-      .withColumnRenamed("conv_id", "o_conv")
-    val intraPaired = imarked.join(iother,
-        col("conv_id") === col("o_conv") &&
-          col("m_turn") === col("o_turn") && col("m_sent") === col("o_sent") &&
-          col("o_trig") < col("m_trig"))
-      .filter(validPair(col("m_pred"), col("m_obj"), col("m_site"),
-        col("o_pred"), col("o_obj"), col("o_site")))
-    val w = Window.partitionBy(col("conv_id"), col("m_turn"), col("m_sent"),
-        col("m_trig"), col("m_pred"), col("m_obj"), col("m_site"))
-      .orderBy(col("o_trig").desc)
-    val intraRanked = intraPaired.withColumn("rk", dense_rank().over(w))
-    val intraR1 = intraRanked.filter(col("rk") === 1).drop("rk")
-    // a regulation OVER a nearest event shares its anchor position in the
-    // reference's dep-anchored match ("E2-induced SRC-3 phosphorylation is
-    // dependent on ..." pairs the interaction with BOTH the phosphorylation
-    // and its regulation, TestAssemblySieves intraSent1) — its own trigger
-    // ("induced") sits earlier, so the trigger rank alone would drop it
-    val r1keys = intraR1.select(col("conv_id").as("k_conv"),
-        col("m_turn").as("k_turn"), col("m_sent").as("k_sent"),
-        col("m_trig").as("k_mtrig"), col("m_pred").as("k_mpred"),
-        col("m_obj").as("k_mobj"), col("m_site").as("k_msite"),
-        composite(col("o_pred"), col("o_obj"), col("o_site")).as("k_comp"))
-      .distinct()
-    val intraReg = intraRanked.filter(col("rk") > 1).drop("rk")
-      .join(r1keys,
-        col("conv_id") === col("k_conv") && col("m_turn") === col("k_turn") &&
-          col("m_sent") === col("k_sent") && col("m_trig") === col("k_mtrig") &&
-          col("m_pred") === col("k_mpred") && col("m_obj") === col("k_mobj") &&
-          col("m_site") === col("k_msite") && col("o_obj") === col("k_comp"))
-      .drop("k_conv", "k_turn", "k_sent", "k_mtrig", "k_mpred", "k_mobj",
-        "k_msite", "k_comp")
-    val intraNearest = intraR1.unionByName(intraReg)
-    val swap = col("icue").isin(intraSwapCues: _*)
-    val intraRows = intraNearest.select(
-      col("conv_id"),
-      when(swap, col("m_pred")).otherwise(col("o_pred")).as("before_pred"),
-      when(swap, col("m_obj")).otherwise(col("o_obj")).as("before_obj"),
-      col("m_turn").as("before_turn"),
-      when(swap, col("o_pred")).otherwise(col("m_pred")).as("after_pred"),
-      when(swap, col("o_obj")).otherwise(col("m_obj")).as("after_obj"),
-      col("m_turn").as("after_turn"),
-      concat(lit("intra-sentential-rb:"), col("icue")).as("sieve"),
-      lit(2).as("sieve_rank"))
+    // sieve 1: the cue-marked event pairs with every event of the nearest
+    // preceding event-bearing sentence (reference: rel.sentence - 1)
+    val cueRows = convEdges.filter(_.cue.nonEmpty).flatMap { m =>
+      val partners = (inTurns(byTurn, m.turn_idx - lookback, m.turn_idx) ++
+          byTurn(m.turn_idx).filter(_.sent_idx < m.sent_idx))
+        .filter(validPair(m, _))
+      val nearest =
+        partners.map(o => (o.turn_idx, o.sent_idx)).maxOption.toSet
+      // "dir:name", dir "after" or "before"
+      val cue = m.cue.split(":", -1)
+      val sieve = "inter-sentential-rb:" + cue(1)
+      partners.filter(o => nearest((o.turn_idx, o.sent_idx))).map(o =>
+        if (cue(0) == "before") row(m, o, sieve) else row(o, m, sieve))
+    }
 
-    // ---- sieve 3: Reichenbach tense/aspect -------------------------------
-    val a = side("a").filter(col("a_tense") =!= "")
-    val b = side("b").filter(col("b_tense") =!= "")
-      .withColumnRenamed("conv_id", "b_conv")
-    val ordered = a.join(b,
-        col("conv_id") === col("b_conv") && (
-          (col("a_turn") < col("b_turn") &&
-            col("a_turn") >= col("b_turn") - lookback) ||
-          (col("a_turn") === col("b_turn") &&
-            (col("a_sent") < col("b_sent") ||
-              (col("a_sent") === col("b_sent") &&
-                col("a_trig") < col("b_trig"))))))
-      .filter(validPair(col("a_pred"), col("a_obj"), col("a_site"),
-        col("b_pred"), col("b_obj"), col("b_site")))
-      .withColumn("rel", relExpr(col("a_tense"), col("b_tense")))
-      .filter(col("rel") =!= "none")
-    val relSwap = col("rel") === "after"
-    val tenseRows = ordered.select(
-      col("conv_id"),
-      when(relSwap, col("b_pred")).otherwise(col("a_pred")).as("before_pred"),
-      when(relSwap, col("b_obj")).otherwise(col("a_obj")).as("before_obj"),
-      when(relSwap, col("b_turn")).otherwise(col("a_turn")).as("before_turn"),
-      when(relSwap, col("a_pred")).otherwise(col("b_pred")).as("after_pred"),
-      when(relSwap, col("a_obj")).otherwise(col("b_obj")).as("after_obj"),
-      when(relSwap, col("a_turn")).otherwise(col("b_turn")).as("after_turn"),
-      lit("reichenbach-tense").as("sieve"),
-      lit(3).as("sieve_rank"))
+    // sieve 2: the connective-marked event pairs with every event at the
+    // nearest earlier trigger position of the same sentence (split
+    // regulations share their event's trigger, so ties are kept)
+    val intraRows = convEdges.filter(m => m.intra_cue.nonEmpty &&
+        m.trig_start >= 0).flatMap { m =>
+      val partners = byTurn(m.turn_idx).filter(o =>
+        o.sent_idx == m.sent_idx && o.trig_start >= 0 &&
+          o.trig_start < m.trig_start && validPair(m, o))
+      val top = partners.map(_.trig_start).maxOption
+      val (nearest, farther) =
+        partners.partition(o => top.contains(o.trig_start))
+      // a regulation OVER a nearest event shares its anchor position in the
+      // reference's dep-anchored match ("E2-induced SRC-3 phosphorylation is
+      // dependent on ..." pairs the interaction with BOTH the
+      // phosphorylation and its regulation, TestAssemblySieves intraSent1) —
+      // its own trigger ("induced") sits earlier, so the trigger rank alone
+      // would drop it
+      val nearestKeys =
+        nearest.map(o => KgExport.eventKey(o.pred, o.obj, o.site)).toSet
+      val sieve = "intra-sentential-rb:" + m.intra_cue
+      val swap = intraSwapCues(m.intra_cue)
+      (nearest ++ farther.filter(o => nearestKeys(o.obj))).map(o =>
+        if (swap) row(m, o, sieve) else row(o, m, sieve))
+    }
 
-    // ---- sieve 4: feature-based classifier (shared-args gating) ----------
-    // runs after the rule-based sieves, exactly as the reference's
+    // sieve 3: Reichenbach tense/aspect over textually-ordered pairs
+    val tenseRows = convEdges.filter(_.tense.nonEmpty).flatMap { b =>
+      val partners = inTurns(byTurn, b.turn_idx - lookback, b.turn_idx) ++
+        byTurn(b.turn_idx).filter(earlier(_, b))
+      partners.filter(a => a.tense.nonEmpty && validPair(a, b)).flatMap { a =>
+        reichenbach.get((a.tense, b.tense)).map { rel =>
+          if (rel == "after") row(b, a, "reichenbach-tense")
+          else row(a, b, "reichenbach-tense")
+        }
+      }
+    }
+
+    // sieve 4 runs after the rule-based sieves, exactly as the reference's
     // applySieves order ends with the classifier sieve (Assembler.scala:
-    // 137-152); the cross-sieve dedup below is its noExistingPrecedence
-    val featRows = featureBased(edges, clf, kWindow)
-      .drop("score").withColumn("sieve_rank", lit(4))
+    // 137-152); the dedup below is its noExistingPrecedence, which checks
+    // both directions
+    val ranked = cueRows.map((1, _)) ++ intraRows.map((2, _)) ++
+      tenseRows.map((3, _)) ++ featureBased(convEdges, clf).map(r => (4, r._1))
+    ranked.sortBy { case (rank, r) => (rank, r.sieve) }(
+        Ordering.Tuple2(Ordering.Int, Json.utf8))
+      .distinctBy { case (_, r) => Set((r.before_pred, r.before_obj,
+        r.before_turn), (r.after_pred, r.after_obj, r.after_turn)) }
+      .map(_._2)
+  }
 
-    // earlier sieves win on duplicate pairs in EITHER direction (the
-    // reference's noExistingPrecedence checks both)
-    val unioned = cueRows.unionByName(intraRows).unionByName(tenseRows)
-      .unionByName(featRows)
-    val beforeKey = concat_ws("|", col("before_pred"), col("before_obj"),
-      col("before_turn"))
-    val afterKey = concat_ws("|", col("after_pred"), col("after_obj"),
-      col("after_turn"))
-    val dw = Window.partitionBy(col("conv_id"),
-        least(beforeKey, afterKey), greatest(beforeKey, afterKey))
-      .orderBy(col("sieve_rank").asc, col("sieve").asc)
-    unioned.withColumn("rn", row_number().over(dw)).filter(col("rn") === 1)
-      .drop("rn", "sieve_rank")
+  /** The precedence rows of an edges table, one conversation per group. */
+  def precedence(edges: DataFrame,
+                 clf: PairClassifier = NarrativeOrderClassifier): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    edges.as[EdgeRow].groupByKey(_.conv_id)
+      .flatMapGroups((_, es) => ofConversation(es.toSeq, clf)).toDF()
   }
 }

@@ -349,18 +349,17 @@ class ModsSpec extends AnyFunSuite {
       Transcripts.mkTurn("f4", 1, "assistant",
         "As a result, ERK2 activates STAT3.")))
     val edges = Pipeline.extract(spark, turns).edges
+    val byConv = edges.as[EdgeRow].collect().toSeq.groupBy(_.conv_id).values
 
-    // gated candidates carry the feature columns
-    val cands = Precedence.featureCandidates(edges).collect()
-    assert(cands.forall(_.getAs[Seq[String]]("f_shared_ids").nonEmpty))
-    assert(!cands.exists(_.getAs[String]("conv_id") == "f2"), "no shared arg")
-    assert(!cands.exists(_.getAs[String]("conv_id") == "f3"), "outside window")
-    val f1 = cands.filter(r => r.getAs[String]("conv_id") == "f1" &&
-      r.getAs[String]("a_pred") == "Phosphorylation")
-    assert(f1.nonEmpty &&
-      f1.forall(_.getAs[Seq[String]]("f_shared_ids") == Seq("uniprot:Q92934")))
-    assert(f1.forall(r => r.getAs[Boolean]("f_cross_sent") &&
-      r.getAs[Int]("f_turn_dist") == 1))
+    // gated candidates carry the features
+    val cands = byConv.flatMap(Precedence.candidates).toSeq
+    assert(cands.forall(_.sharedIds.nonEmpty))
+    assert(!cands.exists(_.a.conv_id == "f2"), "no shared arg")
+    assert(!cands.exists(_.a.conv_id == "f3"), "outside window")
+    val f1 = cands.filter(c => c.a.conv_id == "f1" &&
+      c.a.pred == "Phosphorylation")
+    assert(f1.nonEmpty && f1.forall(_.sharedIds == Seq("uniprot:Q92934")))
+    assert(f1.forall(c => c.crossSent && c.turnDist == 1))
 
     val prec = Precedence.precedence(edges).collect()
     // f1 fires through the default narrative-order classifier
@@ -379,15 +378,28 @@ class ModsSpec extends AnyFunSuite {
     // pluggable classifier: an E2PrecedesE1 rule reverses the orientation
     object Reversed extends Precedence.PairClassifier {
       val name = "reversed"
-      def classify(pairs: org.apache.spark.sql.DataFrame) =
-        pairs.withColumn("label", lit(Precedence.E2PrecedesE1))
-          .withColumn("score", lit(0.9))
+      def classify(c: Precedence.Candidate) = (Precedence.E2PrecedesE1, 0.9)
     }
-    val rev = Precedence.featureBased(edges, Reversed).collect()
-    assert(rev.nonEmpty && rev.forall(r =>
-      r.getAs[Int]("before_turn") >= r.getAs[Int]("after_turn") &&
-        r.getAs[String]("sieve") == "feature-based-classifier:reversed" &&
-        r.getAs[Double]("score") == 0.9))
+    val rev = byConv.flatMap(Precedence.featureBased(_, Reversed)).toSeq
+    assert(rev.nonEmpty && rev.forall { case (r, score) =>
+      r.before_turn >= r.after_turn &&
+        r.sieve == "feature-based-classifier:reversed" && score == 0.9 })
+  }
+
+  test("precedence rows on the 200-conversation corpus with a 1,000-turn " +
+       "mega-conversation: row count and digest pinned") {
+    val (turns, _) = Transcripts.corpus(spark, 200, 42L, megaTurns = 1000)
+    val rows = Precedence.precedence(Pipeline.extract(spark, turns).edges)
+      .select("conv_id", "before_pred", "before_obj", "before_turn",
+        "after_pred", "after_obj", "after_turn", "sieve")
+      .collect().map(_.toSeq.mkString("\t")).sorted
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(rows.mkString("\n").getBytes("UTF-8")).take(8)
+      .map("%02x".format(_)).mkString
+    // measured on the Catalyst self-join sieves the per-conversation
+    // function replaced
+    assert(rows.length == 1168)
+    assert(digest == "c89f1a57e6f79509")
   }
 
   test("context columns: window assignment and conversation-default fill") {

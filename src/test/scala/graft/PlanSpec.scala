@@ -17,12 +17,14 @@ class PlanSpec extends AnyFunSuite {
   // the fold's broadcast KbIndex lookup; kg_precedence when extract began
   // holding stage_b as a local checkpoint instead of a cache entry;
   // kg_emit_indexcard and kg_emit_assembly when edges and cards became
-  // typed functions over a broadcast canon map and node catalog)
+  // typed functions over a broadcast canon map and node catalog;
+  // kg_precedence and kg_emit_assembly again when the precedence sieves
+  // became one per-conversation function behind a groupByKey)
   private val maxShuffles = Seq(
     "kg_mentions" -> 0,
     "kg_link_firsthit" -> 0,
-    "kg_precedence" -> 17,
-    "kg_emit_assembly" -> 13,
+    "kg_precedence" -> 2,
+    "kg_emit_assembly" -> 7,
     "kg_emit_serial" -> 0,
     "kg_emit_indexcard" -> 2)
 
