@@ -58,20 +58,17 @@ final case class StageBRow(
 /** Per-conversation ordered fold: context window -> coref sieves -> KB link ->
   * triple emission. This is the one inherently *sequential* operator of the
   * pipeline (SURVEY.md J4: coref sieves are order-dependent left-folds,
-  * DarpaLinks.scala:33-42) — it runs inside `groupByKey(conv_id)
-  * .flatMapGroups`, so the entire conversation is partition-local and the
-  * pipeline pays exactly ONE shuffle (the conv_id exchange) for context +
-  * coref + alias + link + emit together.
+  * DarpaLinks.scala:33-42). Batch fold groups, streaming micro-batches and
+  * `Serve` all run it through [[KgCore.step]].
   *
-  * Scale: per-conv state is O(mentions in conversation). Mega-conversations
-  * are handled by chunked processing ([[maxChunk]]) mirroring the reference's
-  * standoff grouping (ReachSystem.scala:143-145); context/coref never look
-  * forward under the default policy, so chunk boundaries only truncate
-  * lookback windows. Under [[PolicyBidirectional]] each chunk additionally
-  * receives a context-only overlap of the following chunks' context
-  * mentions within `contextBound` turns, so the Policy4 forward window is
-  * exact across chunk edges (the overlap is consulted by the context
-  * engine only and never re-emitted — still no cross-chunk fold state).
+  * A fold emits the rows of its own mentions' turns only. `context` holds
+  * mentions it consults but never emits: the backward halo of a fold group
+  * or micro-batch, the context entities near its turns and the mentions of
+  * the conversation's [[KgCore.Scope]] (aliases with their arguments, and
+  * the context entities their links read); `counts` carries the scope's
+  * context-entity counts. With them, the rows of the own turns equal those
+  * of a whole-conversation fold, so where a conversation is cut into
+  * groups never shows in the output.
   */
 object ConvProcessor {
 
@@ -90,7 +87,6 @@ object ConvProcessor {
   val PolicyBidirectional = "bidirectional"
   val pronounGap = 1 // sentence gap for pronominal anaphora (DarpaLinks.scala:210)
   val npGap = 3 // sentence gap for definite-NP anaphora
-  val maxChunk = 200000 // mentions per chunk for mega-conversations
 
   private def normSpecies(s: String): String = s.toLowerCase match {
     case "murine" => "mouse"
@@ -99,64 +95,42 @@ object ConvProcessor {
 
   def gidOf(g: Grounding): String = g.namespace + ":" + g.id
 
+  val ctxTypes = Seq("Species", "CellLine", "CellType", "Organ")
+  def isCtxLabel(h: String): Boolean =
+    h == "Species" || h == "CellLine" || h == "CellType" || h == "Organ"
+
+  /** How often a context-entity text (lowercased) of one type occurs in a
+    * conversation, and its first mention: the context default's input. */
+  final case class CtxCount(tpe: String, text: String, n: Int,
+                            first: MentionRow)
+
+  private def docOrder(m: MentionRow) =
+    (m.turn_idx, m.sent_idx, m.start_tok, m.end_tok, m.mention_id)
+
+  def ctxCounts(ms: Seq[MentionRow]): Seq[CtxCount] =
+    mergeCounts(Nil, ms.collect { case m if !m.is_event &&
+      isCtxLabel(m.labels.head) =>
+      CtxCount(m.labels.head, m.text.toLowerCase, 1, m) })
+
+  def mergeCounts(a: Seq[CtxCount], b: Seq[CtxCount]): Seq[CtxCount] =
+    (a ++ b).groupBy(c => (c.tpe, c.text)).values.map(_.reduce((x, y) =>
+      x.copy(n = x.n + y.n, first = Seq(x.first, y.first).minBy(docOrder))))
+      .toSeq.sortBy(c => (c.tpe, c.text))
+
+  /** `counts`, if given, are the conversation's; else the mentions are. */
   def process(convId: String, mentionsIn: Seq[MentionRow],
               kb: Link.KbIndex,
               contextPolicy: String = PolicyBackward,
-              chunkSize: Int = maxChunk,
-              overrideSpecies: Boolean = false): Seq[StageBRow] = {
-    if (mentionsIn.size <= chunkSize)
-      processChunk(convId, mentionsIn, kb, contextPolicy, overrideSpecies)
-    else {
-      // chunk on turn boundaries, preserving order
-      val sorted = sortMentions(mentionsIn)
-      val chunks = mutable.ArrayBuffer.empty[Seq[MentionRow]]
-      var cur = mutable.ArrayBuffer.empty[MentionRow]
-      var lastTurn = Int.MinValue
-      sorted.foreach { m =>
-        if (cur.size >= chunkSize && m.turn_idx != lastTurn) {
-          chunks += cur.toSeq; cur = mutable.ArrayBuffer.empty
-        }
-        cur += m; lastTurn = m.turn_idx
-      }
-      if (cur.nonEmpty) chunks += cur.toSeq
-      // Policy4's forward context half looks ahead up to contextBound
-      // turns, so give each chunk a CONTEXT-ONLY overlap of the following
-      // chunks' context mentions within the bound — the forward window is
-      // then exact across chunk edges (the overlap mentions are consulted
-      // by the context engine only, never re-emitted). Backward policy
-      // needs no overlap: it only truncates lookback, by design.
-      val tails: Seq[Seq[MentionRow]] =
-        if (contextPolicy != PolicyBidirectional) chunks.map(_ => Nil).toSeq
-        else {
-          var consumed = 0
-          chunks.map { c =>
-            consumed += c.size
-            val lastT = c.last.turn_idx
-            sorted.view.drop(consumed)
-              .takeWhile(_.turn_idx <= lastT + contextBound)
-              .filter(m => !m.is_event && isCtxLabel(m.labels.head))
-              .toSeq
-          }.toSeq
-        }
-      chunks.zip(tails).flatMap { case (c, tail) =>
-        processChunk(convId, c, kb, contextPolicy, overrideSpecies, tail)
-      }.toSeq
-    }
-  }
-
-  private val ctxTypes = Seq("Species", "CellLine", "CellType", "Organ")
-  private def isCtxLabel(h: String): Boolean =
-    h == "Species" || h == "CellLine" || h == "CellType" || h == "Organ"
-
-  private def sortMentions(ms: Seq[MentionRow]): Seq[MentionRow] =
-    ms.sortBy(m => (m.turn_idx, m.sent_idx, m.start_tok, m.end_tok, m.mention_id))
-
-  private def processChunk(convId: String, mentionsIn: Seq[MentionRow],
-                           kb: Link.KbIndex,
-                           contextPolicy: String,
-                           overrideSpecies: Boolean,
-                           ctxTail: Seq[MentionRow] = Nil): Seq[StageBRow] = {
-    val mentions = sortMentions(mentionsIn)
+              overrideSpecies: Boolean = false,
+              context: Seq[MentionRow] = Nil,
+              counts: Option[Seq[CtxCount]] = None): Seq[StageBRow] = {
+    // the own turns: a context mention of an own turn is a copy of an own
+    // one (a halo and a scope overlap), and only own turns emit
+    val own: Int => Boolean =
+      if (context.isEmpty) _ => true else mentionsIn.map(_.turn_idx).toSet
+    val mentions = (mentionsIn ++ context.filterNot(m => own(m.turn_idx))
+      .distinctBy(_.mention_id))
+      .sortBy(docOrder)
     val byId = mutable.Map.empty[Long, MentionRow]
     mentions.foreach(m => byId(m.mention_id) = m)
 
@@ -169,46 +143,35 @@ object ConvProcessor {
     // fast path: most conversations carry no context mentions at all — skip
     // every per-type structure then (this fold runs once per conversation;
     // per-conv constant allocations showed up as a 3x stage regression)
-    val hasCtx = ctxTail.nonEmpty ||
-      mentions.exists(m => !m.is_event && isCtxLabel(m.labels.head))
-    lazy val ctxByType: Map[String, Seq[MentionRow]] = ctxTypes.map { tpe =>
-      tpe -> mentions.filter(m => !m.is_event && m.labels.head == tpe)
-    }.toMap
+    val ctxCount = counts.getOrElse(ctxCounts(mentions))
+    val hasCtx = ctxCount.nonEmpty
+    // per type: the context mentions in document order and their turns
+    lazy val ctxByType: Map[String, (Array[MentionRow], Array[Int])] =
+      ctxTypes.map { tpe =>
+        val ms = mentions.filter(m => !m.is_event && m.labels.head == tpe).toArray
+        tpe -> (ms, ms.map(_.turn_idx))
+      }.toMap
     lazy val ctxDefault: Map[String, Option[MentionRow]] = ctxTypes.map { tpe =>
-      val grouped = ctxByType(tpe).groupBy(_.text.toLowerCase)
-      tpe -> (if (grouped.isEmpty) None
-              else {
-                val (_, ms) = grouped.minBy { case (k, v) => (-v.size, k) }
-                Some(ms.head)
-              })
+      val cs = ctxCount.filter(_.tpe == tpe)
+      tpe -> (if (cs.isEmpty) None else Some(cs.minBy(c => (-c.n, c.text)).first))
     }.toMap
     def nearestCtx(tpe: String, turn: Int): Option[MentionRow] = {
       if (!hasCtx) return None
-      var best: MentionRow = null
-      // the backward half also consults the ctxTail overlap: tail turns
-      // are all beyond this chunk's own query turns, so for CHUNK queries
-      // the <= turn bound excludes them — but a ctxSpecies probe AT a tail
-      // turn (ctxGid grounding a tail context mention) must see tail
-      // species at or before it, or the two sides of a chunk edge could
-      // ground the same mention under different contexts
-      (ctxByType(tpe).iterator ++
-        ctxTail.iterator.filter(_.labels.head == tpe)).foreach { m =>
-        if (m.turn_idx <= turn && turn - m.turn_idx <= contextBound &&
-            (best == null || m.turn_idx >= best.turn_idx)) best = m
+      val (ms, turns) = ctxByType(tpe)
+      // the first mention past `turn`: the one before it is the last
+      // mention of the nearest preceding turn, it is the first of the
+      // nearest following one — Policy4's forward half (Policies.scala:
+      // 94-98), whose forward scan takes the first value
+      var lo = 0
+      var hi = turns.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (turns(mid) <= turn) lo = mid + 1 else hi = mid
       }
-      if (best == null && contextPolicy == PolicyBidirectional) {
-        // Policy4 forward half (Policies.scala:94-98): nearest following
-        // turn within the bound; within it, the FIRST mention in document
-        // order (the reference's forward scan takes the first value). The
-        // ctxTail overlap extends the scan across a mega-conversation
-        // chunk edge, making the forward window exact there too.
-        (ctxByType(tpe).iterator ++
-          ctxTail.iterator.filter(_.labels.head == tpe)).foreach { m =>
-          if (m.turn_idx > turn && m.turn_idx - turn <= contextBound &&
-              (best == null || m.turn_idx < best.turn_idx)) best = m
-        }
-      }
-      Option(best).orElse(ctxDefault(tpe))
+      if (lo > 0 && turn - turns(lo - 1) <= contextBound) Some(ms(lo - 1))
+      else if (contextPolicy == PolicyBidirectional && lo < turns.length &&
+               turns(lo) - turn <= contextBound) Some(ms(lo))
+      else ctxDefault(tpe)
     }
     // grounding.overrideSpecies (reference: ReachGrounder.scala:22,38 +
     // application.conf:77): with the flag ON the species context is ignored
@@ -510,7 +473,7 @@ object ConvProcessor {
     }
     if (corefMap.nonEmpty) {
       finalEvents = finalEvents.groupBy(_.mention_id).map(_._2.head).toSeq
-        .sortBy(m => (m.turn_idx, m.sent_idx, m.start_tok, m.mention_id))
+        .sortBy(docOrder)
     }
     finalEvents.foreach(e => byId(e.mention_id) = e)
 
@@ -666,9 +629,11 @@ object ConvProcessor {
     }
 
     val out = mutable.ArrayBuffer.empty[StageBRow]
+    val (ownAliases, ownEvents) =
+      kept.filter(e => own(e.turn_idx)).partition(_.labels.head == "Alias")
 
     // ---- alias edges (J3/J5 — scoped per conversation) -------------------
-    kept.filter(_.labels.head == "Alias").foreach { al =>
+    ownAliases.foreach { al =>
       val a = al.args.find(_.role == "a").map(x => gid(x.mention_id)).getOrElse("")
       val b = al.args.find(_.role == "b").map(x => gid(x.mention_id)).getOrElse("")
       if (a.nonEmpty && b.nonEmpty && a != b)
@@ -677,7 +642,7 @@ object ConvProcessor {
 
     // ---- linked mentions (checkpoint payload) ----------------------------
     entityById.values.toSeq.sortBy(_.mention_id).foreach { m =>
-      if (m.labels.head != "Generic_entity" &&
+      if (own(m.turn_idx) && m.labels.head != "Generic_entity" &&
           m.labels.head != "Generic_event") {
         val g = groundings.getOrElse(m.mention_id, Grounding("", "", ""))
         // head label only: the closure is a pure function of the head
@@ -691,7 +656,7 @@ object ConvProcessor {
           displayLabel(m))), None, None)
       }
     }
-    kept.filter(_.labels.head != "Alias").foreach { e =>
+    ownEvents.foreach { e =>
       out += StageBRow("linked", Some(LinkedMention(
         e.mention_id, e.conv_id, e.turn_idx, e.sent_idx, e.start_tok,
         e.end_tok, Array(e.labels.head), e.text, e.found_by, true,
@@ -708,17 +673,13 @@ object ConvProcessor {
       if (!hasCtx) ""
       else ctxGidCache.getOrElseUpdate((tpe, turn),
         nearestCtx(tpe, turn).map { m =>
-          // a ctxTail overlap mention (next chunk, Policy4 forward window)
-          // is not in this chunk's grounding map — resolve it the same way
-          // the chunk grounds its own context mentions, including the
-          // species context visible at ITS turn (a multi-species surface
-          // must not re-rank differently on either side of a chunk edge)
+          // unlinked: resolve it under the species context of its turn
           gidOf(groundings.getOrElse(m.mention_id,
             kb.resolve(m.text, m.labels.head, ctxSpecies(m.turn_idx))))
         }.getOrElse(""))
 
     // ---- triple emission (S9 semantics) ----------------------------------
-    kept.filter(_.labels.head != "Alias").foreach { e =>
+    ownEvents.foreach { e =>
       val head = e.labels.head
       def argM(role: String): Option[MentionRow] =
         e.args.find(_.role == role).flatMap(a => byId.get(a.mention_id))

@@ -2,20 +2,20 @@ package graft.kg
 
 import graft.model._
 
-/** The Spark-free conversation core: the per-turn and per-group functions of
-  * the narrow pass and the fold, run by two executors. The Spark stages
-  * ([[Pipeline.stageMentions]], [[Pipeline.stageB]]) call them inside their
-  * `flatMap` / `flatMapGroups` closures; [[stageB]] calls them in-process
-  * on the calling thread, for a corpus small enough to answer one request
-  * (the reference's ApiRuler annotates each request in-process the same
-  * way, ApiRuler.scala:50-95).
+/** The Spark-free conversation core: the per-turn functions of the narrow
+  * pass and the one conversation step of the fold. The Spark stages
+  * ([[Pipeline.stageMentions]], [[Pipeline.stageB]]) and the streaming
+  * query call them in their closures; [[stageB]] calls them in-process, for
+  * a corpus small enough to answer one request (as the reference's ApiRuler
+  * does, ApiRuler.scala:50-95).
   *
   *   narrow pass, per turn: role/text filter -> annotate -> alias pre-pass
   *     (cue-filtered turns only) -> rule match with the conversation's
   *     distinct, sorted alias surfaces
-  *   fold, per (conv_id, turn_idx / chunkTurns) group: head-label
-  *     re-expansion under the taxonomy -> context + coref + link + emit
-  *     ([[ConvProcessor.process]])
+  *   fold, per (conv_id, turn_idx / chunkTurns) group: [[step]] over the
+  *     group's mentions, with its halo, nearby context entities and the
+  *     conversation's [[Scope]] as context; it emits what a whole-document
+  *     fold (RuleBasedEngine.scala:26-37) emits for the group's turns
   */
 object KgCore {
 
@@ -23,6 +23,18 @@ object KgCore {
     * spans, so its fold fans out across tasks (see [[Pipeline]]).
     */
   val chunkTurns = 1000
+
+  /** Turns of halo a step reads before its first own turn: the longest
+    * chain of backward coref windows, a generic-event anaphor one turn back
+    * (simpleEventMatch) to an event whose generic argument reaches
+    * [[ConvProcessor.npGap]] turns further (nounPhraseMatch). */
+  val haloTurns: Int = 1 + ConvProcessor.npGap
+
+  /** Turns either side of a group whose context entities its step reads: a
+    * halo turn's species window reaches [[ConvProcessor.contextBound]] turns
+    * past the halo; an own turn's window (either way under Policy4) reaches
+    * a context entity whose species window reaches as far again. */
+  val ctxReach: Int = haloTurns + ConvProcessor.contextBound
 
   /** What a [[KgConfig]] compiles to for extraction: the NER trie, the
     * grounding index and the matcher's effective grammar (which carries the
@@ -54,26 +66,77 @@ object KgCore {
     defs.map(d => (d._2, d._3)).toSeq.distinct.sorted
 
   /** Only the head label crosses the fold's exchange: the closure is a pure
-    * function of it ([[Lexicon.labelClosure]]) and [[fold]] rebuilds it.
+    * function of it ([[Lexicon.labelClosure]]) and [[step]] rebuilds it.
     */
   def compact(m: MentionRow): MentionRow =
     m.copy(labels = Array(m.labels.head))
 
-  def groupKey(m: MentionRow): (String, Int) =
-    (m.conv_id, m.turn_idx / chunkTurns)
+  /** The fold groups that read `m` in a conversation whose last group is
+    * `last`: its own first, then every later group starting within
+    * [[haloTurns]] turns after it, or, for a context entity, every group
+    * within [[ctxReach]] turns either side. */
+  def groups(m: MentionRow, groupTurns: Int, last: Int): Iterator[Int] = {
+    val own = m.turn_idx / groupTurns
+    val (back, ahead) = if (isCtx(m)) (ctxReach, ctxReach) else (0, haloTurns)
+    if (last == 0) Iterator(own)
+    else Iterator(own) ++ (math.max(0, Math.floorDiv(m.turn_idx - back, groupTurns))
+      to math.min(last.toLong, (m.turn_idx.toLong + ahead) / groupTurns).toInt)
+      .iterator.filter(_ != own)
+  }
 
-  /** One fold group: re-expand each [[compact]]ed mention's labels under
-    * `taxonomy`, then run the conversation processor over the group.
-    */
-  def fold(convId: String, compacted: Iterator[MentionRow],
-           kb: Link.KbIndex, taxonomy: Taxonomy, contextPolicy: String,
-           overrideSpecies: Boolean): Seq[StageBRow] =
-    Lexicon.withTaxonomy(taxonomy) {
-      val ms = compacted
-        .map(m => m.copy(labels = Lexicon.labelClosure(m.labels.head))).toSeq
-      ConvProcessor.process(convId, ms, kb, contextPolicy,
-        overrideSpecies = overrideSpecies)
+  /** What each group of a conversation cut into several reads besides its
+    * own turns' neighbours: the context-entity `counts` (the context
+    * default's input), every alias with its arguments, and the context
+    * entities within [[ConvProcessor.contextBound]] turns of a count's first
+    * mention or an alias argument (the species windows their links read).
+    * It grows with aliases and distinct context texts, not with turns. */
+  final case class Scope(counts: Seq[ConvProcessor.CtxCount],
+                         mentions: Seq[MentionRow])
+
+  /** The [[Scope]] with `counts`, its mentions picked from whole turns'. */
+  def scope(counts: Seq[ConvProcessor.CtxCount], ms: Seq[MentionRow]): Scope = {
+    val args = ms.filter(isAlias).flatMap(_.args.map(_.mention_id)).toSet
+    val anchors = scala.collection.immutable.TreeSet(
+      (counts.map(_.first) ++ ms.filter(m => args(m.mention_id))).map(_.turn_idx): _*)
+    def near(t: Int) = anchors.rangeFrom(t - ConvProcessor.contextBound)
+      .headOption.exists(_ <= t + ConvProcessor.contextBound)
+    Scope(counts, ms.filter(m => isAlias(m) || args(m.mention_id) ||
+      (isCtx(m) && near(m.turn_idx))).distinctBy(_.mention_id))
+  }
+
+  private def isAlias(m: MentionRow) = m.is_event && m.labels.head == "Alias"
+
+  /** A context entity: a species, cell line, cell type or organ. */
+  def isCtx(m: MentionRow): Boolean =
+    !m.is_event && ConvProcessor.isCtxLabel(m.labels.head)
+
+  /** One conversation step: fold the [[compact]]ed `own` mentions with the
+    * context-only `context` mentions (a halo, context entities) and, for a
+    * conversation cut into several steps, its `scope`, after re-expanding
+    * labels under `taxonomy`; return the rows of the own turns only:
+    * linked, triple and alias rows alike. Without a scope the step's
+    * mentions are the whole conversation's. */
+  def step(convId: String, own: Seq[MentionRow], context: Seq[MentionRow],
+           scope: Option[Scope], kb: Link.KbIndex, taxonomy: Taxonomy,
+           contextPolicy: String, overrideSpecies: Boolean): Seq[StageBRow] =
+    if (own.isEmpty) Nil
+    else Lexicon.withTaxonomy(taxonomy) {
+      def expand(ms: Seq[MentionRow]) =
+        ms.map(m => m.copy(labels = Lexicon.labelClosure(m.labels.head)))
+      ConvProcessor.process(convId, expand(own), kb, contextPolicy,
+        overrideSpecies, expand(context ++ scope.toSeq.flatMap(_.mentions)),
+        scope.map(_.counts))
     }
+
+  /** Fold group `g`: of what [[groups]] routes to it, its own turns'
+    * mentions are the step's own. */
+  def foldGroup(convId: String, g: Int, groupTurns: Int,
+                routed: Seq[MentionRow], scope: Option[Scope],
+                kb: Link.KbIndex, taxonomy: Taxonomy, contextPolicy: String,
+                overrideSpecies: Boolean): Seq[StageBRow] = {
+    val (own, context) = routed.partition(_.turn_idx / groupTurns == g)
+    step(convId, own, context, scope, kb, taxonomy, contextPolicy, overrideSpecies)
+  }
 
   /** In-process `stageB(stageMentions(turns))`: the stage_b rows the Spark
     * stages give for the same turns and config, in fold-group order. Every
@@ -81,7 +144,12 @@ object KgCore {
     * `crossConvAliases` the pool of all of them (uncapped: the Spark
     * stages cap the pool at [[Pipeline.AliasJoinThreshold]] definitions).
     */
-  def stageB(turns: Seq[Turn], parts: Parts, cfg: KgConfig): Seq[StageBRow] = {
+  def stageB(turns: Seq[Turn], parts: Parts, cfg: KgConfig): Seq[StageBRow] =
+    fold(mentions(turns, parts, cfg), parts, cfg, chunkTurns)
+
+  /** The narrow pass of [[stageB]]: every kept turn's mentions. */
+  private[graft] def mentions(turns: Seq[Turn], parts: Parts,
+                              cfg: KgConfig): Seq[MentionRow] = {
     val kept = turns.filter(keep)
     val annotated = kept.map(annotate(parts.trie, _))
     val defs = kept.zip(annotated).flatMap { case (t, at) =>
@@ -91,14 +159,25 @@ object KgCore {
     }
     val pooled = surfaces(defs)
     val byConv = defs.groupBy(_._1).map { case (c, ds) => c -> surfaces(ds) }
-    val mentions = annotated.flatMap { at =>
+    annotated.flatMap { at =>
       BioRules.extractTurn(at,
         if (cfg.crossConvAliases) pooled else byConv.getOrElse(at.conv_id, Nil),
         parts.grammar)
     }
-    mentions.map(compact).groupBy(groupKey).toSeq.sortBy(_._1).flatMap {
-      case ((conv, _), ms) => fold(conv, ms.iterator, parts.kb,
-        parts.grammar.taxonomy, cfg.contextPolicy, cfg.overrideSpecies)
-    }
   }
+
+  /** The fold of [[stageB]], in fold groups of `groupTurns` turns. */
+  private[graft] def fold(mentions: Seq[MentionRow], parts: Parts,
+                          cfg: KgConfig, groupTurns: Int): Seq[StageBRow] =
+    mentions.map(compact).groupBy(_.conv_id).toSeq.sortBy(_._1).flatMap {
+      case (conv, ms) =>
+        val last = ms.map(_.turn_idx).max / groupTurns
+        val sc =
+          if (last == 0) None else Some(scope(ConvProcessor.ctxCounts(ms), ms))
+        ms.flatMap(m => groups(m, groupTurns, last).map(_ -> m))
+          .groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (g, gms) =>
+            foldGroup(conv, g, groupTurns, gms.map(_._2), sc, parts.kb,
+              parts.grammar.taxonomy, cfg.contextPolicy, cfg.overrideSpecies)
+          }
+    }
 }

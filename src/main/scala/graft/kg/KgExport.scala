@@ -177,9 +177,8 @@ object KgExport {
     * frames (see `Emit.friesFrameGraph` for the layout). `turns` is None
     * when a turns table was given but holds no turn of this part: the
     * sentences section then has no `frames`. Argument types and `is-direct`
-    * are looked up within the document: a document's frames come from one
-    * fold group when `chunkTurns` is [[KgCore.chunkTurns]], so no argument
-    * points outside it.
+    * are looked up within the document: an argument that coref resolved
+    * into the part before (through the fold's halo) reads as an entity.
     */
   def fries(convId: String, part: Long, linked: Seq[LinkedMention],
             turns: Option[Seq[(Int, String)]]): String = {

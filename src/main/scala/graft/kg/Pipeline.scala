@@ -5,6 +5,7 @@ import graft.model._
 import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.ObjectProducer
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
 
@@ -31,10 +32,11 @@ import scala.jdk.CollectionConverters._
   * `KgExport.materialize` run the same functions in-process.
   *
   * Skew: the conv grouping key is salted with `turn_idx / chunkTurns`, so a
-  * mega-conversation fans out across tasks in chunkTurns-sized spans; the
-  * backward-looking context (3 turns) and coref (<=3 sentences) windows only
-  * lose lookback at chunk edges. Small conversations get salt 0 — semantics
-  * unchanged.
+  * mega-conversation fans out across tasks in chunkTurns-sized spans. With
+  * its halo, nearby context entities and its conversation's
+  * [[KgCore.Scope]] (see [[stageB]]), each group gives the rows a
+  * whole-conversation fold gives its turns. Small conversations get salt 0
+  * and no scope.
   */
 object Pipeline {
 
@@ -56,7 +58,8 @@ object Pipeline {
     private val tl: ThreadLocal[Array[Long]] =
       ThreadLocal.withInitial(() => Array(0L))
     def reset(): Unit = tl.get()(0) = 0L
-    def inc(): Unit = tl.get()(0) += 1
+    def inc(): Unit = add(1)
+    def add(n: Long): Unit = tl.get()(0) += n
     def get: Long = tl.get()(0)
   }
 
@@ -180,6 +183,11 @@ object Pipeline {
     instrument(extracted, "mentions", runId, acc)
   }
 
+  /** The fold: [[KgCore.foldGroup]] per group over what [[KgCore.groups]]
+    * routes to it, and, for a conversation past its first group (one small
+    * job finds them), the [[KgCore.Scope]] joined in the same exchange. An
+    * input whose plan computes its rows ([[stageMentions]]') is held first
+    * as a local checkpoint: the job and the exchange both read it. */
   def stageB(spark: SparkSession, mentions: Dataset[MentionRow],
              runId: String, acc: CollectionAccumulator[Lineage],
              cfg: KgConfig = KgConfig.default): Dataset[StageBRow] = {
@@ -188,18 +196,71 @@ object Pipeline {
     // plain values ship with the closure, never the config (it holds the KB)
     val policy = cfg.contextPolicy
     val overrideSpecies = cfg.overrideSpecies
-    // the label closure is a pure function of the head label
-    // (Lexicon.labelClosure) — shipping 5-7 closure strings per mention
-    // through the conv_id exchange made the fold stage shuffle-bandwidth
-    // bound (measured 1.44x per-task inflation 2->8 cores); send only the
-    // head and rebuild on the reduce side
-    val grouped = mentions.map(KgCore.compact)
-      .groupByKey(KgCore.groupKey)
-      .flatMapGroups { (key, it) =>
-        KgCore.fold(key._1, it.map { m => InCount.inc(); m }, bKb.value,
-          bG.value.taxonomy, policy, overrideSpecies).iterator
+    val computed = mentions.queryExecution.optimizedPlan
+      .find(_.isInstanceOf[ObjectProducer]).isDefined
+    val ms = if (computed) mentions.localCheckpoint() else mentions
+    val last = lastGroups(spark, ms)
+    val fold = (key: (String, Int), it: Iterator[MentionRow],
+                scope: Option[KgCore.Scope]) => {
+      val (conv, g) = key
+      val routed = it.toSeq
+      InCount.add(routed.count(_.turn_idx / chunkTurns == g))
+      KgCore.foldGroup(conv, g, chunkTurns, routed, scope, bKb.value,
+        bG.value.taxonomy, policy, overrideSpecies).iterator
+    }
+    // only the head label crosses the exchange (KgCore.compact): the 5-7
+    // closure strings made the fold shuffle-bandwidth bound (1.44x
+    // per-task inflation 2->8 cores). With no conversation past its first
+    // group every mention goes to its own group alone, untagged: tagging
+    // each with its group cost batch_cold ~17 % more task CPU.
+    val folded =
+      if (last.isEmpty) ms.map(KgCore.compact)
+        .groupByKey(m => (m.conv_id, m.turn_idx / chunkTurns))
+        .flatMapGroups((k, it) => fold(k, it, None))
+      else ms.flatMap { m =>
+          val c = KgCore.compact(m)
+          KgCore.groups(c, chunkTurns, last.getOrElse(c.conv_id, 0)).map(_ -> c)
+        }.groupByKey { case (g, m) => (m.conv_id, g) }
+        .cogroup(scopes(spark, ms, last).groupByKey(_._1)) {
+          (k, it, sc) => fold(k, it.map(_._2), sc.map(_._2).nextOption())
+        }
+    instrument(folded, "link_coref_emit", runId, acc)
+  }
+
+  /** The last group of each conversation with a turn past its first: one
+    * job reading `conv_id` and `turn_idx`, one row per such conversation and
+    * task back. */
+  private def lastGroups(spark: SparkSession, ms: Dataset[MentionRow])
+      : Map[String, Int] = {
+    import spark.implicits._
+    ms.select("conv_id", "turn_idx").where(col("turn_idx") >= chunkTurns)
+      .as[(String, Int)].mapPartitions(_.foldLeft(Map.empty[String, Int]) {
+        case (m, (c, t)) => m.updated(c, math.max(t, m.getOrElse(c, t))) }
+        .iterator)
+      .collect().groupMapReduce(_._1)(_._2 / chunkTurns)(math.max)
+  }
+
+  /** The [[KgCore.Scope]] of each conversation in `last`, once per group:
+    * its context entities, aliases and alias arguments (found by id, which
+    * one job over its aliases collects) through one exchange. */
+  private def scopes(spark: SparkSession, ms: Dataset[MentionRow],
+                     last: Map[String, Int])
+      : Dataset[((String, Int), KgCore.Scope)] = {
+    import spark.implicits._
+    val split = col("conv_id").isin(last.keys.toSeq: _*)
+    val head = col("labels")(0)
+    val alias = col("is_event") && head === "Alias"
+    val args = ms.where(split && alias)
+      .select(explode(col("args.mention_id"))).as[Long].collect()
+    ms.where(split && (alias || col("mention_id").isin(args: _*) ||
+        (!col("is_event") && head.isin(ConvProcessor.ctxTypes: _*))))
+      .map(KgCore.compact)
+      .groupByKey(_.conv_id)
+      .flatMapGroups { (conv, it) =>
+        val scoped = it.toSeq
+        val sc = KgCore.scope(ConvProcessor.ctxCounts(scoped), scoped)
+        (0 to last(conv)).iterator.map(g => ((conv, g), sc))
       }
-    instrument(grouped, "link_coref_emit", runId, acc)
   }
 
   /** The canon map `(gid, canon_id)`: connected components of the alias

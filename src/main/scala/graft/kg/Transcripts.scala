@@ -2252,36 +2252,33 @@ object Transcripts {
   def corpus(spark: SparkSession, nConvs: Int, seed: Long,
              megaTurns: Int = 0): (Dataset[Turn], Dataset[Triple]) = {
     import spark.implicits._
-    val turns = spark.range(nConvs.toLong).flatMap { i =>
-      val n = 2 + (new Random(seed ^ i).nextInt(49) *
-        (if (i % 7 == 0) 1 else 0)) + new Random(seed ^ (i + 7)).nextInt(8)
-      genConv(seed, i, n)._1
-    }
-    val expected = spark.range(nConvs.toLong).flatMap { i =>
-      val n = 2 + (new Random(seed ^ i).nextInt(49) *
-        (if (i % 7 == 0) 1 else 0)) + new Random(seed ^ (i + 7)).nextInt(8)
-      genConv(seed, i, n)._2
-    }
+    val turns = spark.range(nConvs.toLong).flatMap(corpusConv(seed, _)._1)
+    val expected = spark.range(nConvs.toLong).flatMap(corpusConv(seed, _)._2)
     if (megaTurns > 0) {
       // one skewed mega-conversation, generated in parallel slices of
-      // chunk-aligned spans (no coref templates -> slice independence)
-      val slice = Pipeline.chunkTurns
-      val nSlices = (megaTurns + slice - 1) / slice
-      val mega = spark.range(nSlices.toLong).flatMap { s =>
-        val (ts, _) = genConv(seed * 31 + s, 999999L, math.min(slice, megaTurns - s.toInt * slice), withCoref = false)
-        ts.map(t => t.copy(conv_id = "mega",
-          turn_idx = s.toInt * slice + t.turn_idx))
-      }
-      // mega expected triples union in with the same conv_id/turn remap —
+      // chunk-aligned spans (no coref templates -> slice independence);
+      // its expected triples union in with the same conv_id/turn remap —
       // otherwise --mega with --score counts every mega edge as a false
       // positive (ADVICE r1)
-      val megaExpected = spark.range(nSlices.toLong).flatMap { s =>
-        val (_, es) = genConv(seed * 31 + s, 999999L, math.min(slice, megaTurns - s.toInt * slice), withCoref = false)
-        es.map(t => t.copy(conv_id = "mega",
-          turn_idx = s.toInt * slice + t.turn_idx))
-      }
-      (turns.union(mega), expected.union(megaExpected))
+      val slices = spark.range(((megaTurns + Pipeline.chunkTurns - 1) /
+        Pipeline.chunkTurns).toLong)
+      (turns.union(slices.flatMap(megaSlice(seed, _, megaTurns)._1)),
+        expected.union(slices.flatMap(megaSlice(seed, _, megaTurns)._2)))
     } else (turns, expected)
+  }
+
+  /** Conversation `i` of [[corpus]]: Zipf-ish turn counts. */
+  def corpusConv(seed: Long, i: Long): (Seq[Turn], Seq[Triple]) =
+    genConv(seed, i, 2 + (new Random(seed ^ i).nextInt(49) *
+      (if (i % 7 == 0) 1 else 0)) + new Random(seed ^ (i + 7)).nextInt(8))
+
+  /** Slice `s` of [[corpus]]'s `megaTurns`-turn mega-conversation. */
+  def megaSlice(seed: Long, s: Long, megaTurns: Int): (Seq[Turn], Seq[Triple]) = {
+    val slice = Pipeline.chunkTurns
+    val (ts, es) = genConv(seed * 31 + s, 999999L,
+      math.min(slice, megaTurns - s.toInt * slice), withCoref = false)
+    (ts.map(t => t.copy(conv_id = "mega", turn_idx = s.toInt * slice + t.turn_idx)),
+      es.map(t => t.copy(conv_id = "mega", turn_idx = s.toInt * slice + t.turn_idx)))
   }
 
   def goldenTurns(spark: SparkSession): Dataset[Turn] = {

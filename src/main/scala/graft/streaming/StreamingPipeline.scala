@@ -2,85 +2,63 @@ package graft.streaming
 
 import graft.kg._
 import graft.model._
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured Streaming mode of the KG pipeline (SURVEY.md §2.8): the batch
-  * pipeline's per-conversation operators are all *backward-looking* (context
-  * window <= 3 turns, coref <= 1 turn), so the streaming form keeps a bounded
-  * per-conversation state — the mentions of the last [[lookback]] turns — and
-  * re-runs the same partition-local fold over (state ++ new turns), emitting
-  * only the new turns' triples. Semantics match the batch pipeline exactly
-  * for in-order turn arrival (verified in StreamingSpec).
+/** Structured Streaming mode of the KG pipeline (SURVEY.md §2.8): each
+  * micro-batch's turns of a conversation go through [[KgCore.step]], the
+  * fold that batch groups and `Serve` run, with the conversation's state as
+  * its context: the [[KgCore.haloTurns]] turns before the first turn still
+  * to emit, the context entities of the [[KgCore.ctxReach]] turns before
+  * it, and the [[KgCore.Scope]] so far (running context-entity counts,
+  * aliases with their arguments, the context entities their links read).
+  * Only the new turns' triples emit. The reference has no streaming (its
+  * analogue is the restart log, ReachCLI.scala:47-66). A late turn (older
+  * than turns already seen) folds with the retained state and emits once;
+  * emitted triples never change.
   *
-  * The reference has no streaming; its analogue is whole-file reprocessing
-  * via the restart log (ReachCLI.scala:47-66). Here a late conversation turn
-  * (one older than turns already seen) folds with the retained window and
-  * its own triples emit once, under either policy; triples already emitted
-  * are never revised by it.
+  * Two known deviations from batch:
+  *  - The BACKWARD alias rescan (J3 — an alias surface used before its
+  *    parenthetical definition) needs a second pass over emitted turns,
+  *    which append-mode streaming cannot replay. Forward uses resolve as in
+  *    batch: alias defs accumulate in the state and extraction runs inside
+  *    the fold with them.
+  *  - The context default is a running default: a turn with no context
+  *    mention within `contextBound` turns gets the default of the context
+  *    mentions seen up to its micro-batch, where batch counts the whole
+  *    conversation's. One from the past is never lost; one from the future
+  *    is not yet known.
   *
-  * Known deviation from batch: the BACKWARD alias rescan (J3 — an alias
-  * surface used before its parenthetical definition) requires a second pass
-  * over already-emitted turns, which append-mode streaming cannot replay;
-  * batch mode covers it. Forward uses (definition in an earlier or the same
-  * turn) resolve exactly as in batch: alias defs accumulate in the
-  * per-conversation state and extraction runs inside the fold with them.
+  * Policy4 ([[graft.kg.ConvProcessor.PolicyBidirectional]]) runs by
+  * DELAYED EMISSION, as filters on the step's rows: a turn's triples emit
+  * once `contextBound` further turns have arrived, and the unsealed tail
+  * flushes on the idle timeout (no further turns: batch's situation at
+  * conversation end). The cost is latency, never correctness, PROVIDED an
+  * `idleTimeout` is configured (without one the tail of an idle
+  * conversation never flushes; a warning is printed). The config's grammar,
+  * KB and `overrideSpecies` apply as in batch; `crossConvAliases` does not.
   *
-  * Policy4 (the bidirectional context window,
-  * [[graft.kg.ConvProcessor.PolicyBidirectional]]) is supported via
-  * DELAYED EMISSION: a turn's triples are held back until `contextBound`
-  * further turns of its conversation have arrived (so the forward window
-  * is complete — the sealed turns emit with exactly the batch pipeline's
-  * context), and the unsealed tail flushes on the idle timeout — at which
-  * point no further turns exist, which is precisely the batch pipeline's
-  * situation at conversation end, so the flush is batch-exact too. The
-  * cost is latency (up to `contextBound` turns + the timeout), never
-  * correctness — PROVIDED an `idleTimeout` is configured (without one the
-  * unsealed tail of an idle conversation never flushes; a warning is
-  * printed). Opt in with a [[graft.kg.KgConfig]] whose `contextPolicy` is
-  * `PolicyBidirectional`; the default backward policy emits immediately.
-  * The config's grammar, KB and `overrideSpecies` apply as in batch;
-  * `crossConvAliases` does not (streaming has no batch to pool over).
-  *
-  * Scale: state is O(lookback x mentions-per-turn) per live conversation;
-  * with watermarking on `ts` (caller adds `withWatermark` upstream) idle
-  * conversations age out via the processing-time timeout.
+  * Scale: a live conversation's state is its halo, recent context entities
+  * and scope, which grows with its aliases and distinct context texts, not
+  * its turns; idle conversations age out via the processing-time timeout.
   */
 object StreamingPipeline {
 
-  val lookback = 4 // turns kept in state: covers context bound 3 + coref 1
-
-  /** `emittedThrough` matters only under Policy4 delayed emission: the
-    * highest turn_idx whose triples have been emitted (sealed turns);
-    * backward policy emits immediately and leaves it at Int.MaxValue.
+  /** One conversation's state. `recent` holds the mentions of the turns
+    * after `emittedThrough - haloTurns`, and the context entities after
+    * `emittedThrough - ctxReach`: the next step's halo and, under Policy4,
+    * the turns not yet emitted. `scope` is the [[KgCore.Scope]] of the
+    * turns seen so far, `emittedThrough` the highest turn whose triples
+    * have emitted and `maxTurn` the highest turn seen.
     *
-    * State-schema note: adding this field changed the
-    * flatMapGroupsWithState state encoding (round 5) — a streaming query
-    * CHECKPOINTED on an earlier build cannot restart on this one (Spark's
-    * state-store schema check fails); restart such queries with a fresh
-    * checkpoint location. In-flight processing is unaffected.
+    * State-schema note: this encoding (halo plus scope) replaced the
+    * earlier last-turns window, so a query CHECKPOINTED on an earlier build
+    * fails Spark's state-store schema check on restart; restart it with a
+    * fresh checkpoint location.
     */
-  final case class ConvState(mentions: Seq[MentionRow],
+  final case class ConvState(recent: Seq[MentionRow], scope: KgCore.Scope,
                              aliasDefs: Seq[(String, String)], maxTurn: Int,
-                             emittedThrough: Int = Int.MaxValue)
-
-  /** The Policy4 idle-timeout flush body (factored out so the flush
-    * semantics are unit-testable without a wall clock — processing-time
-    * timeouts make `processAllAvailable` spin on continuous timeout-check
-    * micro-batches, so a deterministic spec drives this function with the
-    * state the handler would hold instead of sleeping): fold the retained
-    * window and emit everything past the sealed frontier.
-    */
-  private[graft] def flushPending(convId: String, st: ConvState,
-                                  kb: Link.KbIndex, contextPolicy: String,
-                                  overrideSpecies: Boolean = false)
-      : Iterator[PreTriple] =
-    ConvProcessor.process(convId, st.mentions, kb, contextPolicy,
-      overrideSpecies = overrideSpecies)
-      .flatMap(_.triple)
-      .filter(_.turn_idx > st.emittedThrough)
-      .iterator
+                             emittedThrough: Int)
 
   def triples(spark: SparkSession, turns: Dataset[Turn],
               idleTimeout: Option[String] = None,
@@ -96,79 +74,58 @@ object StreamingPipeline {
         "idleTimeout never flushes the final contextBound turns of an " +
         "idle conversation — supply idleTimeout in production (the " +
         "batch-exactness claim is conditional on the flush running)")
-    // Policy4 retention: an unsealed turn (up to contextBound behind the
-    // frontier) still needs ITS backward windows when it seals later, so
-    // the state keeps contextBound extra turns beyond the backward policy's
-    // lookback
-    val keepTurns = if (bidi) ConvProcessor.contextBound + lookback
-                    else lookback
 
     // stage 1 (stateless, streaming-safe): annotate per turn. Rule matching
-    // moves into the stateful fold so FORWARD alias uses (definition in an
+    // moves into the stateful step so FORWARD alias uses (definition in an
     // earlier — or the same — turn) inject rescan surfaces exactly as the
     // batch pre-pass does; only the BACKWARD rescan stays batch-only.
     val annotated: Dataset[AnnotatedTurn] = Annotate(spark, turns, bTrie)
 
-    // stage 2 (stateful): bounded-lookback conversation fold; state carries
-    // the last `lookback` turns' mentions plus ALL alias defs seen so far
-    // (tiny — parenthetical definitions are rare)
     annotated
       .groupByKey(_.conv_id)
       .flatMapGroupsWithState(OutputMode.Append,
         if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
         else GroupStateTimeout.NoTimeout)(
         (convId: String, it: Iterator[AnnotatedTurn], state: GroupState[ConvState]) => {
-          if (state.hasTimedOut) {
-            // Policy4 flush: no further turns will arrive, which is the
-            // batch pipeline's exact situation at conversation end — the
-            // unsealed tail folds with whatever forward context exists
-            val pending = state.getOption
-            state.remove()
-            if (!bidi) Iterator.empty
-            else pending.map(flushPending(convId, _, bKb.value,
-              contextPolicy, overrideSpecies)).getOrElse(Iterator.empty)
-          } else {
-            val incoming = it.toSeq.sortBy(_.turn_idx)
-            val prior = state.getOption.map(_.mentions).getOrElse(Seq.empty)
-            var defs = state.getOption.map(_.aliasDefs).getOrElse(Seq.empty)
-            val newMentions = incoming.flatMap { at =>
-              // the batch pre-pass's filter (Pipeline.aliasDefsDs)
-              if (at.sents.exists(s => BioRules.hasAliasCue(s.text))) {
-                val d = BioRules.aliasDefsTurn(at, bG.value)
-                if (d.nonEmpty) defs = KgCore.surfaces(
-                  d ++ defs.map { case (sf, label) => (convId, sf, label) })
-              }
-              BioRules.extractTurn(at, defs, bG.value)
+          val st = state.getOption.getOrElse(
+            ConvState(Nil, KgCore.Scope(Nil, Nil), Nil, -1, -1))
+          val incoming = it.toSeq.sortBy(_.turn_idx)
+          var defs = st.aliasDefs
+          val fresh = incoming.flatMap { at =>
+            // the batch pre-pass's filter (Pipeline.aliasDefsDs)
+            if (at.sents.exists(s => BioRules.hasAliasCue(s.text))) {
+              val d = BioRules.aliasDefsTurn(at, bG.value)
+              if (d.nonEmpty) defs = KgCore.surfaces(
+                d ++ defs.map { case (sf, label) => (convId, sf, label) })
             }
-            val incomingTurns = incoming.map(_.turn_idx).toSet
-            val all = prior ++ newMentions
-            val maxTurn =
-              if (all.isEmpty) state.getOption.map(_.maxTurn).getOrElse(0)
-              else all.map(_.turn_idx).max
-            val folded = ConvProcessor.process(convId, all, bKb.value,
-              contextPolicy, overrideSpecies = overrideSpecies)
-              .flatMap(_.triple)
-            val (out, emittedThrough) =
-              if (!bidi) (folded.filter(t => incomingTurns(t.turn_idx)),
-                Int.MaxValue)
-              else {
-                // delayed emission: seal turns whose full forward window
-                // (contextBound further turns) has arrived; a late turn
-                // behind the sealed frontier emits now, as it will never
-                // seal again
-                val prevEmitted = state.getOption.map(_.emittedThrough)
-                  .getOrElse(-1)
-                val seal = maxTurn - ConvProcessor.contextBound
-                (folded.filter(t =>
-                  if (t.turn_idx <= prevEmitted) incomingTurns(t.turn_idx)
-                  else t.turn_idx <= seal), math.max(prevEmitted, seal))
-              }
-            state.update(ConvState(
-              all.filter(_.turn_idx > maxTurn - keepTurns), defs, maxTurn,
-              emittedThrough))
+            BioRules.extractTurn(at, defs, bG.value)
+          }.map(KgCore.compact)
+          val maxTurn = (st.maxTurn +: incoming.map(_.turn_idx)).max
+          // the frontier of emitted turns: under Policy4 a turn seals once
+          // contextBound further turns have arrived, and the idle-timeout
+          // flush (no further turns exist: the batch pipeline's situation
+          // at conversation end) emits the rest
+          val through =
+            if (!bidi || state.hasTimedOut) maxTurn
+            else math.max(st.emittedThrough,
+              maxTurn - ConvProcessor.contextBound)
+          // a late turn behind the frontier is own too: it emits now, as
+          // it will never seal again
+          val own = st.recent.filter(_.turn_idx > st.emittedThrough) ++ fresh
+          val scope = KgCore.scope(ConvProcessor.mergeCounts(st.scope.counts,
+            ConvProcessor.ctxCounts(fresh)), st.scope.mentions ++ st.recent ++ fresh)
+          val out = KgCore.step(convId, own, st.recent, Some(scope),
+              bKb.value, bG.value.taxonomy, contextPolicy, overrideSpecies)
+            .flatMap(_.triple).filter(_.turn_idx <= through)
+          if (state.hasTimedOut) state.remove()
+          else {
+            state.update(ConvState((st.recent ++ fresh).filter(m =>
+              m.turn_idx > through -
+                (if (KgCore.isCtx(m)) KgCore.ctxReach else KgCore.haloTurns)),
+              scope, defs, maxTurn, through))
             idleTimeout.foreach(state.setTimeoutDuration)
-            out.iterator
           }
+          out.iterator
         })
   }
 }

@@ -118,42 +118,6 @@ class ConvProcessorSpec extends AnyFunSuite {
     assert(b1 == b2 && b1.forall(_ == "taxonomy:10090"))
   }
 
-  test("Policy4 stays exact across mega-conversation chunk edges: a forward " +
-       "context mention just past the boundary still fills the slot") {
-    // the species sits one turn AFTER the event but lands in the NEXT
-    // chunk when chunkSize forces a boundary after turn 0 — the
-    // context-only overlap must carry it back (pre-overlap behavior: the
-    // chunk-local default, which is empty here)
-    val texts = Seq(
-      "ERK2 was phosphorylated at T669.",     // turn 0 -> chunk 1
-      "We studied mouse fibroblasts.",        // turn 1 -> chunk 2
-      "Data handling followed standard procedures.")
-    def runChunked(policy: String, chunkSize: Int) = {
-      val mentions = texts.zipWithIndex.flatMap { case (t, i) =>
-        BioRules.extractTurn(AnnotatedTurn("c", i, "user",
-          Annotate.annotateText(trie, t)))
-      }
-      ConvProcessor.process("c", mentions, kb, policy, chunkSize)
-    }
-    val whole = runChunked(ConvProcessor.PolicyBidirectional, Int.MaxValue)
-    val chunked = runChunked(ConvProcessor.PolicyBidirectional, 1)
-    // chunked ≡ unchunked under Policy4, including the context slot
-    // (compare triples by value — LinkedMention carries Array fields whose
-    // case-class equality is referential; row order differs per chunk)
-    assert(triples(chunked).toSet == triples(whole).toSet)
-    assert(chunked.size == whole.size)
-    val ph = triples(chunked).filter(_.pred == "Phosphorylation")
-    assert(ph.nonEmpty && ph.forall(_.ctx_species == "taxonomy:10090"),
-      ph.map(_.ctx_species))
-    // backward policy gets no overlap: the event's slot falls back to the
-    // CHUNK-local default (empty here) — the pre-existing, documented
-    // bounded deviation of chunked folds; Policy4's forward window is the
-    // part the overlap makes exact
-    val bk = triples(runChunked(ConvProcessor.PolicyBackward, 1))
-      .filter(_.pred == "Phosphorylation")
-    assert(bk.nonEmpty && bk.forall(_.ctx_species == ""))
-  }
-
   test("grounding.overrideSpecies = true ignores species context " +
        "(ReachGrounder.scala:38, the reference's shipped default)") {
     // the mouse context is present but ignored: groundAsHuman ordering

@@ -7,7 +7,7 @@ import org.apache.spark.util.CollectionAccumulator
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The in-process conversation core ≡ the Spark stages: for every
-  * conversation, `KgCore.stageB` over its turns gives the stage_b rows
+  * conversation, the core over its turns gives the stage_b rows
   * `Pipeline.stageB ∘ stageMentions` gives it over the whole corpus.
   */
 class KgCoreSpec extends AnyFunSuite {
@@ -24,17 +24,20 @@ class KgCoreSpec extends AnyFunSuite {
       cfg), "spec", acc, cfg).toJSON.collect().toSeq.sorted
   }
 
-  /** The core run once per conversation; every row as its JSON. */
-  private def coreRows(turns: Seq[Turn], cfg: KgConfig): Seq[String] = {
+  /** The core run once per conversation, in fold groups of `groupTurns`
+    * turns; every row as its JSON. */
+  private def coreRows(turns: Seq[Turn], cfg: KgConfig,
+                       groupTurns: Int): Seq[String] = {
     val parts = KgCore.compile(cfg)
-    val rows = turns.groupBy(_.conv_id).values.toSeq
-      .flatMap(ts => KgCore.stageB(ts, parts, cfg))
+    val rows = turns.groupBy(_.conv_id).values.toSeq.flatMap(ts =>
+      KgCore.fold(KgCore.mentions(ts, parts, cfg), parts, cfg, groupTurns))
     spark.createDataset(rows).toJSON.collect().toSeq.sorted
   }
 
-  private def assertSame(turns: Seq[Turn], cfg: KgConfig): Unit = {
+  private def assertSame(turns: Seq[Turn], cfg: KgConfig,
+                         groupTurns: Int = KgCore.chunkTurns): Unit = {
     val want = sparkRows(spark.createDataset(turns), cfg)
-    val got = coreRows(turns, cfg)
+    val got = coreRows(turns, cfg, groupTurns)
     assert(want.nonEmpty)
     assert(got.size == want.size, s"${cfg.contextPolicy}: row counts")
     if (got != want) fail(s"${cfg.contextPolicy}: first diff " +
@@ -49,11 +52,11 @@ class KgCoreSpec extends AnyFunSuite {
   }
 
   test("a conversation longer than chunkTurns folds in the same groups") {
+    // ... and they give the rows of one whole-conversation fold
     val (ds, _) = Transcripts.corpus(spark, 6, seed = 5,
       megaTurns = KgCore.chunkTurns + 150)
     // a species context one turn before the chunk edge and the event right
-    // after it: the backward window sees the species only if the edge is
-    // not a group boundary
+    // after it: the group after the edge sees the species in its halo
     val n = KgCore.chunkTurns
     val edge = (0 until n - 1).map(i =>
       Transcripts.mkTurn("edge", i, "user", "Thanks.")) ++ Seq(
@@ -62,7 +65,8 @@ class KgCoreSpec extends AnyFunSuite {
       Transcripts.mkTurn("edge", n + 1, "user", "Other work used human cells."))
     val turns = ds.collect().toSeq ++ edge
     assert(turns.count(_.conv_id == "mega") > n)
-    policies.foreach(p => assertSame(turns, KgConfig(contextPolicy = p)))
+    policies.foreach(p =>
+      assertSame(turns, KgConfig(contextPolicy = p), Int.MaxValue))
   }
 
   test("alias definitions: the rescan surfaces match, also pooled with " +

@@ -174,6 +174,71 @@ class PipelineSpec extends AnyFunSuite {
       "Phosphorylation(uniprot:P28482)")), edges)
   }
 
+  test("Policy4 reads across a fold-group edge: the species in the next " +
+       "group fills the slot of the group's last turn") {
+    val n = Pipeline.chunkTurns
+    val turns = (0 until n - 1).map(i =>
+      Transcripts.mkTurn("p4edge", i, "user", "Thanks.")) ++ Seq(
+      Transcripts.mkTurn("p4edge", n - 1, "user", "ERK2 was phosphorylated at T669."),
+      Transcripts.mkTurn("p4edge", n, "user", "We studied mouse fibroblasts."))
+    val got = Pipeline.extract(spark, spark.createDataset(turns),
+        KgConfig(contextPolicy = ConvProcessor.PolicyBidirectional))
+      .edges.select("turn_idx", "pred", "obj", "ctx_species")
+      .as[(Int, String, String, String)].collect().toSet
+    assert(got == Set((n - 1, "Phosphorylation", "uniprot:P63085",
+      "taxonomy:10090")))
+  }
+
+  test("a multi-group corpus: the fold's rows_in counts every mention " +
+       "once, not its halo, context or scope copies") {
+    val dir = java.nio.file.Files.createTempDirectory("kghalo").toString
+    val (turns, _) = Transcripts.corpus(spark, 20, seed = 13, megaTurns = 2500)
+    val res = Pipeline.run(spark, turns, dir, resume = false)
+    val ms = graft.io.TableIO(dir).read(spark, "mentions_raw")
+      .as[graft.model.MentionRow]
+    // mentions within haloTurns before a group edge: each also goes to the
+    // next group as halo
+    assert(ms.filter(m => m.conv_id == "mega" && m.turn_idx % Pipeline.chunkTurns >=
+      Pipeline.chunkTurns - KgCore.haloTurns).count() > 0)
+    val rowsIn = res.lineage.filter(col("stage") === "link_coref_emit")
+      .agg(sum("rows_in")).as[Long].head()
+    assert(rowsIn == ms.count())
+  }
+
+  test("an alias in the first group grounds a use in the next, however " +
+       "partitioned") {
+    val n = Pipeline.chunkTurns
+    val turns = (Seq("Zorp1 (also called AKT1) phosphorylates ERK2.") ++
+      Seq.fill(n)("Thanks.") :+ "Zorp1 phosphorylates MEK1.").zipWithIndex
+      .map { case (t, i) => Transcripts.mkTurn("alias_split", i, "user", t) }
+    val parts = KgCore.compile(KgConfig.default)
+    val whole = KgCore.fold(KgCore.mentions(turns, parts, KgConfig.default),
+      parts, KgConfig.default, Int.MaxValue)
+    // the use in group 1 takes the grounded side's candidates
+    assert(whole.flatMap(_.linked).exists(m => m.turn_idx == n + 1 &&
+      m.text == "Zorp1" && m.candidates.exists(_.id == "P31749")))
+    val acc = new org.apache.spark.util.CollectionAccumulator[graft.model.Lineage]
+    spark.sparkContext.register(acc)
+    // round-robin: a turn's mentions land in different partitions; the
+    // fold finds the alias arguments by id
+    val ms = Pipeline.stageMentions(spark, spark.createDataset(turns), "t", acc)
+      .repartition(5)
+    val got = Pipeline.stageB(spark, ms, "t", acc).toJSON.collect().sorted
+    assert(got.toSeq == spark.createDataset(whole).toJSON.collect().sorted.toSeq)
+  }
+
+  test("Spark jobs: a cold run takes 15, a fully-resumed run none") {
+    // the cold run's jobs include the fold's one job that finds the
+    // conversations past their first group (14 before it); a resumed run
+    // reads every table back without a job
+    val dir = java.nio.file.Files.createTempDirectory("kgjobs").toString
+    val (turns, _) = Transcripts.corpus(spark, 200, seed = 42, megaTurns = 1000)
+    def jobs(resume: Boolean) = SparkJobs.during(spark.sparkContext,
+      "pipeline-jobs")(Pipeline.run(spark, turns, dir, resume = resume))
+    assert(jobs(resume = false) == 15)
+    assert(jobs(resume = true) == 0)
+  }
+
   test("mega-conversation chunking preserves non-boundary semantics") {
     val (mega, _) = Transcripts.corpus(spark, 0, seed = 5, megaTurns = 2500)
     val res = Pipeline.extract(spark, mega)

@@ -31,6 +31,25 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  private def conv(id: String, first: String, filler: Seq[String],
+                   last: String): Seq[Turn] =
+    ((first +: filler) :+ last).zipWithIndex.map { case (t, i) =>
+      Transcripts.mkTurn(id, i, "user", t) }
+
+  private def key(t: PreTriple) = (t.turn_idx, t.pred, t.obj_gid, t.ctx_species)
+
+  /** The fold's triples of `Pipeline.extract`, before canonicalization. */
+  private def batchTriples(turns: Seq[Turn], cfg: KgConfig)
+      : Set[(Int, String, String, String)] = {
+    import spark.implicits._
+    Pipeline.extract(spark, spark.createDataset(turns), cfg).stageB
+      .filter(col("kind") === "triple").select("triple.*").as[PreTriple]
+      .collect().map(key).toSet
+  }
+
+  private def phospho(ts: Set[(Int, String, String, String)]) =
+    ts.filter(_._2 == "Phosphorylation").map(t => (t._1, t._3, t._4))
+
   test("streaming triples match batch pipeline across micro-batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -109,18 +128,17 @@ class StreamingSpec extends AnyFunSuite {
     // window yet — emitting now would freeze ctx prematurely)
     assert(!sealedOut.exists(_._1 == 4), sealedOut.toString)
 
-    // idle-timeout flush ≡ batch end-of-conversation: drive the factored
-    // flush body with the state the handler holds after the batch above
-    // (mentions of the retained window, frontier sealed through turn 1)
-    val trie = Annotate.buildTrie(Lexicon.nerLexicon)
-    val mentions = turns.flatMap(t =>
-      BioRules.extractTurn(AnnotatedTurn(t.conv_id, t.turn_idx, t.role,
-        Annotate.annotateText(trie, t.text))))
-    val st = StreamingPipeline.ConvState(mentions, Nil, maxTurn = 4,
-      emittedThrough = 1)
-    val flushed = StreamingPipeline.flushPending("p4", st,
-        new Link.KbIndex(Lexicon.kb), ConvProcessor.PolicyBidirectional)
-      .map(t => (t.turn_idx, t.pred, t.ctx_species)).toSet
+    // idle-timeout flush ≡ batch end-of-conversation: run the step the
+    // handler runs on its timeout, with the state it holds after the batch
+    // above (every turn within the halo of the frontier, sealed through
+    // turn 1): the unsealed turns are its own turns
+    val parts = KgCore.compile(bidi)
+    val mentions = KgCore.mentions(turns, parts, bidi).map(KgCore.compact)
+    val flushed = KgCore.step("p4", mentions.filter(_.turn_idx > 1),
+        mentions, Some(KgCore.scope(ConvProcessor.ctxCounts(mentions), mentions)),
+        parts.kb, parts.grammar.taxonomy, bidi.contextPolicy,
+        overrideSpecies = false)
+      .flatMap(_.triple).map(t => (t.turn_idx, t.pred, t.ctx_species)).toSet
     assert(flushed.forall(_._1 > 1), flushed.toString)
     val streamedTotal = sealedOut ++ flushed
     assert(streamedTotal == batch,
@@ -149,6 +167,43 @@ class StreamingSpec extends AnyFunSuite {
       .edges.select("pred", "ctx_species").as[(String, String)].collect()
       .filter(_._1 == "Phosphorylation")
     assert(batch.nonEmpty && batch.forall(_._2 == "taxonomy:10090"))
+  }
+
+  test("the default from the future stays a deviation: one turn per " +
+       "micro-batch, the event emits before the species arrives") {
+    // batch's backward policy takes the whole conversation's default
+    // (mouse); streaming's running default has seen no species yet
+    val turns = conv("dfut", "ERK2 was phosphorylated at T669.",
+      Seq.fill(4)("MEK1 was detected."), "We studied mouse fibroblasts.")
+    assert(phospho(batchTriples(turns, KgConfig.default)) ==
+      Set((0, "uniprot:P63085", "taxonomy:10090")))
+    assert(phospho(streamed("triples_dfut", KgConfig.default,
+        turns.map(Seq(_))).map(key).toSet) ==
+      Set((0, "uniprot:P28482", "")))
+  }
+
+  test("the default from the past reaches a turn five turns later, one " +
+       "turn per micro-batch") {
+    val turns = conv("dpast", "We studied mouse fibroblasts.",
+      Seq.fill(4)("MEK1 was detected."), "ERK2 was phosphorylated at T669.")
+    val batch = batchTriples(turns, KgConfig.default)
+    assert(phospho(batch) == Set((5, "uniprot:P63085", "taxonomy:10090")))
+    assert(streamed("triples_dpast", KgConfig.default, turns.map(Seq(_)))
+      .map(key).toSet == batch)
+  }
+
+  test("a fold-group edge does not show: the edge conversation in " +
+       "200-turn micro-batches ≡ batch") {
+    // the species at turn chunkTurns - 1, the event right after the edge
+    val n = KgCore.chunkTurns
+    val turns = (0 until n - 1).map(i =>
+      Transcripts.mkTurn("edge", i, "user", "Thanks.")) ++ Seq(
+      Transcripts.mkTurn("edge", n - 1, "user", "We studied mouse fibroblasts."),
+      Transcripts.mkTurn("edge", n, "user", "ERK2 was phosphorylated at T669."))
+    val batch = batchTriples(turns, KgConfig.default)
+    assert(phospho(batch) == Set((n, "uniprot:P63085", "taxonomy:10090")))
+    assert(streamed("triples_edge", KgConfig.default, turns.grouped(200).toSeq)
+      .map(key).toSet == batch)
   }
 
   test("a late turn emits its batch triples exactly once under either " +
