@@ -1,9 +1,10 @@
 package graft.io
 
+import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
-import java.nio.file.{Files, Paths, Path}
+import java.nio.file.{Files, Paths, Path, StandardCopyOption}
 
 /** Iceberg-shaped table layer (SURVEY.md §7.0: no Iceberg runtime jar in the
   * sandbox, offline coursier). Named tables backed by partitioned Parquet plus
@@ -18,11 +19,12 @@ final case class TableIO(root: String) {
   private def manifestPath(name: String): Path =
     Paths.get(s"$root/$name/_graft_manifest.json")
 
-  /** Atomic-enough manifest write: parquet first, manifest last — a killed job
-    * leaves no manifest, so resume re-runs the stage (exactly-once at stage
-    * granularity). The manifest also records the table's schema as parquet
-    * schema inference would read it back (every field nullable, partition
-    * columns last), so [[read]] starts no inference job.
+  /** Atomic manifest write: parquet first, manifest last, renamed into
+    * place — a killed job leaves no manifest, so resume re-runs the stage
+    * (exactly-once at stage granularity). The manifest also records the
+    * table's schema as parquet schema inference would read it back (every
+    * field nullable, partition columns last), so [[read]] starts no
+    * inference job.
     */
   def write(df: DataFrame, name: String,
             partitionBy: Seq[String] = Nil): Long = {
@@ -43,8 +45,13 @@ final case class TableIO(root: String) {
       partitionBy.flatMap(p => parts.find(_.name == p)))
     val json = s"""{"table":"$name","rows":$rows,"complete":true,""" +
       s""""ts":${System.currentTimeMillis()},"schema":${schema.json}}"""
-    Files.createDirectories(manifestPath(name).getParent)
-    Files.writeString(manifestPath(name), json)
+    // written beside the table, then renamed over the manifest: a kill
+    // mid-write leaves a stray temp file, never a torn manifest
+    val path = manifestPath(name)
+    Files.createDirectories(path.getParent)
+    val tmp = Files.writeString(path.resolveSibling(s"${path.getFileName}.tmp"),
+      json)
+    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE)
     rows
   }
 
@@ -68,9 +75,17 @@ final case class TableIO(root: String) {
       .asInstanceOf[StructType]).parquet(tablePath(name))
   }
 
+  /** The table's manifest; None when it is missing or does not parse (a
+    * manifest torn by an older build's in-place write). */
   private def manifest(name: String): Option[JsonNode] =
     if (!Files.exists(manifestPath(name))) None
-    else Some(new ObjectMapper().readTree(Files.readString(manifestPath(name))))
+    else try Some(new ObjectMapper().readTree(
+      Files.readString(manifestPath(name))))
+    catch { case e: JsonProcessingException =>
+      System.err.println(s"[graft] table $name: unreadable manifest " +
+        s"(${e.getOriginalMessage}), treated as incomplete")
+      None
+    }
 
   /** A stage checkpoint is valid iff its manifest exists, says complete and
     * records the schema. */

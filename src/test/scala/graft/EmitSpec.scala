@@ -140,32 +140,56 @@ class EmitSpec extends AnyFunSuite {
     import spark.implicits._
     // one viral interaction seen in 1,200 conversations with distinct
     // evidence — without the cap this forms a single unbounded output row
-    val n = Emit.MaxListPerKey + 200
-    val edges = spark.range(n).select(
-      org.apache.spark.sql.functions.lit("uniprot:P28482").as("subj"),
-      org.apache.spark.sql.functions.lit("Positive_regulation").as("pred"),
-      org.apache.spark.sql.functions.lit("Phosphorylation(uniprot:P31749)").as("obj"),
-      org.apache.spark.sql.functions.lit("").as("site"),
-      org.apache.spark.sql.functions.lit(false).as("negated"),
-      org.apache.spark.sql.functions.lit(false).as("hypothesis"),
-      org.apache.spark.sql.functions.format_string("c%05d", col("id")).as("conv_id"),
-      org.apache.spark.sql.functions.lit(0).as("turn_idx"),
-      org.apache.spark.sql.functions.format_string("evidence %05d", col("id")).as("evidence_text"),
-      org.apache.spark.sql.functions.lit("r").as("found_by"),
-      org.apache.spark.sql.functions.lit("phosphorylates").as("trigger_text"),
-      org.apache.spark.sql.functions.lit("").as("ctx_species"),
-      org.apache.spark.sql.functions.lit("").as("ctx_organ"),
-      org.apache.spark.sql.functions.lit("").as("ctx_cell_line"),
-      org.apache.spark.sql.functions.lit("").as("ctx_cell_type"))
-    val row = Emit.arizonaTsv(edges).collect()
-    assert(row.length === 1)
-    assert(row.head.getAs[Long]("SEEN") === n.toLong, "SEEN counts all rows")
-    val ev = row.head.getAs[String]("EVIDENCE").split(" \\| ")
-    val seenIn = row.head.getAs[String]("SEEN_IN").split("\\|")
-    assert(ev.length === Emit.MaxListPerKey, "evidence capped")
-    assert(seenIn.length === Emit.MaxListPerKey, "conv ids capped")
-    // deterministic selection: the lexicographically-first K survive
-    assert(ev.head === "evidence 00000" &&
-      ev.last === f"evidence ${Emit.MaxListPerKey - 1}%05d")
+    val cap = KgExport.MaxListPerKey
+    val n = cap + 200
+    val evidence = (i: Int) => f"evidence $i%05d"
+    val conv = (i: Int) => f"c$i%05d"
+    def edge(i: Int, convId: String) = {
+      val (subj, pred, obj) = ("uniprot:P28482", "Positive_regulation",
+        "Phosphorylation(uniprot:P31749)")
+      EdgeRow(subj, pred, obj, "", false, false, convId, i % 7, evidence(i),
+        "r", "phosphorylates", "", "", "", "", "", 0, 0, "", "",
+        KgExport.edgeId(subj, pred, obj, "", false, false, convId, i % 7))
+    }
+    // shuffled, so the cap must pick by order, not by arrival
+    val order = new scala.util.Random(7).shuffle((0 until n).toList)
+    val edges = order.map(i => edge(i, conv(i))).toDS().toDF()
+    val nodes = spark.emptyDataset[graft.model.Node].toDF()
+    val stageB = spark.emptyDataset[StageBRow].toDF()
+    val canon = Seq.empty[(String, String)].toDF("gid", "canon_id")
+
+    // a list holds the lexicographically-first `cap` of its key's values
+    def isCapped(list: String, sep: String, fmt: Int => String): Unit = {
+      val xs = list.split(sep)
+      assert(xs.length === cap, s"${xs.length} items, not capped at $cap")
+      assert(xs.head === fmt(0) && xs.last === fmt(cap - 1))
+    }
+
+    val az = Emit.arizonaTsv(edges).collect()
+    assert(az.length === 1)
+    assert(az.head.getAs[Long]("SEEN") === n.toLong, "SEEN counts all rows")
+    isCapped(az.head.getAs[String]("EVIDENCE"), " \\| ", evidence)
+    isCapped(az.head.getAs[String]("SEEN_IN"), "\\|", conv)
+
+    val cmu = Emit.cmuTsv(edges, nodes).collect()
+    assert(cmu.length === 1)
+    isCapped(cmu.head.getAs[String]("EVIDENCE"), " \\| ", evidence)
+    isCapped(cmu.head.getAs[String]("PAPER_ID"), "\\|", conv)
+
+    for (mitre <- Seq(false, true)) {
+      val asm = Emit.assemblyTsv(edges, stageB, canon, mitre).collect()
+      assert(asm.length === 1, s"mitre=$mitre")
+      assert(asm.head.getAs[Long]("SEEN") === n.toLong, s"mitre=$mitre")
+      isCapped(asm.head.getAs[String]("EVIDENCE"), " \\| ", evidence)
+      isCapped(asm.head.getAs[String]("SEEN_IN"), "\\|", conv)
+    }
+
+    // a card's key holds its conversation, so its viral key is one
+    // conversation repeating the interaction
+    val oneConv = order.map(edge(_, conv(0))).toDS().toDF()
+    val cards = Emit.indexCardFlat(oneConv, nodes).collect()
+    assert(cards.length === 1)
+    assert(cards.head.getAs[Long]("seen") === n.toLong, "seen counts all rows")
+    isCapped(cards.head.getAs[String]("evidence"), " \\| ", evidence)
   }
 }

@@ -52,6 +52,22 @@ class TableIOSpec extends AnyFunSuite {
     intercept[IllegalStateException](io.read(spark, "t"))
   }
 
+  test("a torn manifest is incomplete, so a resumed run rebuilds the table") {
+    val dir = tmp("tableio-torn")
+    val io = TableIO(dir)
+    io.write(Seq(1, 2).toDF("x"), "t")
+    // what a kill in the middle of the manifest write would leave
+    Files.writeString(Paths.get(dir, "t", "_graft_manifest.json"),
+      """{"table":"t","rows":2,"comp""")
+    assert(!io.isComplete("t"))
+    intercept[IllegalStateException](io.read(spark, "t"))
+    io.write(Seq(3).toDF("x"), "t")
+    assert(io.isComplete("t"))
+    assert(io.read(spark, "t").as[Int].collect().toSeq == Seq(3))
+    assert(new java.io.File(dir, "t").list().count(_.contains("manifest")) == 1,
+      "no temp manifest left")
+  }
+
   test("delete closes the directory stream of every directory it lists") {
     val dir = tmp("tableio-rm")
     val root = Paths.get(dir, "t")
