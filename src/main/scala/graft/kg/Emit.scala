@@ -131,17 +131,15 @@ object Emit {
     *  - entity rows: [[KgExport.entityMention]] per linked stage_b mention
     *    under the broadcast canon map, then [[KgExport.entity]] per
     *    (grounding, mutant forms, PTM features);
-    *  - [[KgExport.assemblyKept]] on every row. The MITRE variant then
-    *    prunes PRECEDED_BY to the surviving rows (filterPrecededBy:66-88;
-    *    the reference intersects against row *labels*, an evident id-vs-
-    *    label slip, so row event ids are kept here).
+    *  - [[KgExport.assemblyKept]] on every row. The MITRE variant holds the
+    *    kept rows once, as an eager local checkpoint, and prunes each row's
+    *    PRECEDED_BY to the kept EVENT_IDs ([[KgExport.precededByKept]]).
     */
   def assemblyTsv(edges: DataFrame, stageB: DataFrame, canonMap: DataFrame,
                   mitre: Boolean = false): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val canon = spark.sparkContext.broadcast(canonMap
-      .select("gid", "canon_id").as[(String, String)].collect().toMap)
+    val canon = Pipeline.canonBroadcast(canonMap)
     val events = edges.as[EdgeRow].groupByKey(_.conv_id)
       .flatMapGroups((_, es) => KgExport.precededBy(es.toSeq))
       .groupByKey(e => KgExport.assemblyKey(e._1)).mapGroups(KgExport.assembly)
@@ -150,15 +148,13 @@ object Emit {
       .groupByKey(m => (m.cgid, m.mutant_forms, m.ptm_feats))
       .mapGroups(KgExport.entity)
     val rows = events.union(entities)
-      .filter((r: AssemblyRow) => KgExport.assemblyKept(r, mitre)).toDF()
-    if (!mitre) rows
+      .filter((r: AssemblyRow) => KgExport.assemblyKept(r, mitre))
+    if (!mitre) rows.toDF()
     else {
-      val kept = rows.select(col("EVENT_ID").as("kept_id")).distinct()
-      rows.withColumn("pb", explode_outer(split(col("PRECEDED_BY"), "\\|")))
-        .join(kept, col("pb") === col("kept_id"), "left")
-        .groupBy(rows.columns.toSeq.filter(_ != "PRECEDED_BY").map(col): _*)
-        .agg(concat_ws("|", array_sort(collect_set(
-          when(col("kept_id").isNotNull, col("pb"))))).as("PRECEDED_BY"))
+      val held = rows.localCheckpoint()
+      val kept = spark.sparkContext.broadcast(
+        held.map(_.EVENT_ID).collect().toSet)
+      held.map(KgExport.precededByKept(_, kept.value)).toDF()
     }
   }
 

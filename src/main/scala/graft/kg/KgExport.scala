@@ -80,11 +80,11 @@ final case class CmuRow(
   * tabular exports, run by two executors, as [[KgCore]] is for extraction.
   * Each exporter rule is written once, here. The Spark entry points run
   * them as their closures:
-  *   - [[Pipeline.stageCanon]]: [[Canon.rewrites]] (and
-  *     [[Canon.unionFind]] on the driver path of [[Canon.components]]);
+  *   - [[Pipeline.stageCanon]]: [[Canon.canonMap]] on the driver;
   *   - [[Pipeline.stageMaterialize]]: [[edge]] in a `map` over the
-  *     broadcast canon map, then `dropDuplicates("edge_id")`; [[surface]],
-  *     a Catalyst count per surface, then [[node]] per `canon_id` group;
+  *     broadcast canon map, then `dropDuplicates("edge_id")`; [[surface]]
+  *     and [[surfaceCounts]] per partition, then [[surfaceCounts]] and
+  *     [[node]] per `canon_id` group;
   *   - `Emit.friesFrameGraph`: [[fries]] per `(conv_id, doc_part)` group,
   *     cogrouped with the turns;
   *   - `Emit.indexCardFlat`: [[cards]] per conversation, then
@@ -96,7 +96,7 @@ final case class CmuRow(
   *   - `Emit.assemblyTsv`: [[precededBy]] per conversation, then
   *     [[assembly]] per [[assemblyKey]]; [[entityMention]] per linked
   *     mention over the broadcast canon map, then [[entity]] per grounding;
-  *     [[assemblyKept]] on every row.
+  *     [[assemblyKept]] on every row, and [[precededByKept]] for MITRE.
   * Every merge per row key folds through one capped [[Tally]].
   * [[materialize]], [[friesDocs]] and [[indexCards]] run the same functions
   * in-process over one request's rows (`graft.Serve`), with no Spark job.
@@ -170,6 +170,16 @@ object KgExport {
         m.labels.toSeq, m.display_label, 1L))
     }
 
+  /** The distinct surfaces among some, each once with the summed `n` of its
+    * copies: the count behind every node, which `Pipeline.stageMaterialize`
+    * runs per partition and again per canonical id. */
+  def surfaceCounts(surfaces: IterableOnce[Surface]): Seq[Surface] = {
+    val counts = mutable.HashMap.empty[Surface, Long]
+    surfaces.iterator.foreach(s => counts.updateWith(s.copy(n = 0L))(
+      c => Some(c.getOrElse(0L) + s.n)))
+    counts.iterator.map { case (s, n) => s.copy(n = n) }.toSeq
+  }
+
   /** Per-key list fan-in bound (scale guard): a viral interaction or a
     * ubiquitous entity would otherwise collect an unbounded evidence,
     * conversation or surface-form list into ONE output row. Far above
@@ -207,14 +217,11 @@ object KgExport {
     * nodes.
     */
   def materialize(rows: Seq[StageBRow]): (Seq[EdgeRow], Seq[Node]) = {
-    val canon = Canon.unionFind(rows.filter(_.kind == "alias").flatMap(_.alias)
-      .map(e => (e.a, e.b)).filter(e => Canon.rewrites(e._1, e._2)),
-      Canon.order).toMap
+    val canon = Canon.canonMap(rows.filter(_.kind == "alias").flatMap(_.alias)
+      .map(e => (e.a, e.b)))
     val edges = rows.filter(_.kind == "triple").flatMap(_.triple)
       .map(edge(_, canon)).distinctBy(_.edge_id)
-    val nodes = linked(rows).flatMap(surface(_, canon))
-      .groupMapReduce(identity)(_.n)(_ + _).toSeq
-      .map { case (s, n) => s.copy(n = n) }
+    val nodes = surfaceCounts(linked(rows).flatMap(surface(_, canon)))
       .groupBy(_.canon_id).toSeq.map { case (c, ss) => node(c, ss) }
     (edges, nodes)
   }
@@ -652,6 +659,14 @@ object KgExport {
       false, false, "", "", "", "", "", t.seen, joined(texts, " | "), t.convs,
       "")
   }
+
+  /** An assembly row with PRECEDED_BY pruned to the `kept` EVENT_IDs,
+    * still sorted and "|"-joined: the MITRE variant's filterPrecededBy
+    * (:66-88; the reference intersects against row *labels*, an evident
+    * id-vs-label slip, so row event ids are kept here). */
+  def precededByKept(r: AssemblyRow, kept: Set[String]): AssemblyRow =
+    r.copy(PRECEDED_BY =
+      joined(r.PRECEDED_BY.split("\\|", -1).iterator.filter(kept), "|"))
 
   private val NotMitre =
     "_activation\\(|(^|[(&\\s:])(pfam|interpro|be):|(^|[(&\\s])uaz:".r

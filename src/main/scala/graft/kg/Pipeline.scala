@@ -17,9 +17,9 @@ import scala.jdk.CollectionConverters._
   *   turns --(narrow: filter+annotate+rule-match flatMap, NO shuffle)--> mentions_raw
   *   mentions_raw --(ONE exchange: salted conv grouping; context+coref+link+emit
   *                   in a single partition-local fold)--> stage_b (linked/triples/aliases)
-  *   aliases --(tiny; CC)--> canon_map
-  *   stage_b + broadcast(canon_map) --(typed map, narrow; dedup / node
-  *                   aggregation)--> edges, nodes
+  *   aliases --(one collect; driver union-find)--> canon_map
+  *   stage_b + broadcast(canon_map) --(typed map; ONE exchange each: edge_id
+  *                   dedup / per-canonical-id node fold)--> edges, nodes
   *
   * Checkpoint-resumable at every stage boundary via TableIO manifests
   * (mention -> link -> canonicalize -> materialize, per the north rule).
@@ -27,9 +27,9 @@ import scala.jdk.CollectionConverters._
   * table) and [[extract]] (holds stage_b in memory, the rest lazy).
   *
   * The per-turn and per-group work inside these stages is [[KgCore]]'s
-  * (narrow pass, fold), [[Canon]]'s (alias predicate, driver union-find)
-  * and [[KgExport]]'s (edge, node); `KgCore.stageB` and
-  * `KgExport.materialize` run the same functions in-process.
+  * (narrow pass, fold), [[Canon]]'s (the canon map) and [[KgExport]]'s
+  * (edge, surface count, node); `KgCore.stageB` and `KgExport.materialize`
+  * run the same functions in-process.
   *
   * Skew: the conv grouping key is salted with `turn_idx / chunkTurns`, so a
   * mega-conversation fans out across tasks in chunkTurns-sized spans. With
@@ -263,39 +263,47 @@ object Pipeline {
       }
   }
 
-  /** The canon map `(gid, canon_id)`: connected components of the alias
-    * edges that [[Canon.rewrites]] admits. */
+  /** The canon map `(gid, canon_id)`: [[Canon.canonMap]] over the alias
+    * pairs [[Canon.rewrites]] admits, which one job collects, as a local
+    * table. */
   def stageCanon(spark: SparkSession, b: Dataset[StageBRow]): DataFrame = {
     import spark.implicits._
-    val aliases = b.filter(col("kind") === "alias")
+    val pairs = b.filter(col("kind") === "alias")
       .select(col("alias.a"), col("alias.b")).as[(String, String)]
-      .filter(e => Canon.rewrites(e._1, e._2))
-    Canon.connectedComponents(spark, aliases.toDF("a", "b"))
+      .filter(e => Canon.rewrites(e._1, e._2)).collect()
+    Canon.canonMap(pairs.toSeq).toSeq.toDF("gid", "canon_id")
   }
 
-  /** Edges and nodes: [[KgExport.edge]] over every triple with the canon
-    * map broadcast, deduplicated on `edge_id` — content-level dedup
-    * (reference corefDistinct A4): the same semantic edge can be derived via
-    * multiple rule paths (entity-controller and flattened event-controller
-    * regulations); [[KgExport.node]] per canonical id over the Catalyst
-    * count of each surface ([[KgExport.surface]]). The canon map is
-    * collected here, once for both tables.
+  /** The canon map collected and broadcast: what [[stageMaterialize]] and
+    * `Emit.assemblyTsv` rewrite groundings through. */
+  private[kg] def canonBroadcast(canonMap: DataFrame)
+      : Broadcast[Map[String, String]] = {
+    val spark = canonMap.sparkSession
+    import spark.implicits._
+    spark.sparkContext.broadcast(canonMap
+      .select("gid", "canon_id").as[(String, String)].collect().toMap)
+  }
+
+  /** Edges and nodes over the broadcast canon map: [[KgExport.edge]] per
+    * triple, deduplicated on `edge_id` — content-level dedup (reference
+    * corefDistinct A4): the same semantic edge can be derived via multiple
+    * rule paths (entity-controller and flattened event-controller
+    * regulations); [[KgExport.node]] per canonical id over the
+    * [[KgExport.surfaceCounts]] of its surfaces, counted per partition
+    * before the one exchange and again per group.
     */
   def stageMaterialize(spark: SparkSession, b: Dataset[StageBRow],
                        canonMap: DataFrame): (DataFrame, DataFrame) = {
     import spark.implicits._
-    val canon = spark.sparkContext.broadcast(canonMap
-      .select("gid", "canon_id").as[(String, String)].collect().toMap)
+    val canon = canonBroadcast(canonMap)
     val edges = b.filter(col("kind") === "triple").select("triple.*")
       .as[PreTriple].map(KgExport.edge(_, canon.value))
       .dropDuplicates("edge_id")
-    val surfaceKey = Seq("canon_id", "text", "ns", "ns_id", "species",
-      "labels", "display_label")
     val nodes = b.filter(col("kind") === "linked").select("linked.*")
-      .as[LinkedMention].flatMap(KgExport.surface(_, canon.value))
-      .groupBy(surfaceKey.map(col): _*).agg(sum(col("n")).as("n"))
-      .as[Surface].groupByKey(_.canon_id)
-      .mapGroups((c, ss) => KgExport.node(c, ss.toSeq))
+      .as[LinkedMention].mapPartitions(ms => KgExport.surfaceCounts(
+        ms.flatMap(KgExport.surface(_, canon.value))).iterator)
+      .groupByKey(_.canon_id)
+      .mapGroups((c, ss) => KgExport.node(c, KgExport.surfaceCounts(ss)))
     (edges.toDF(), nodes.toDF())
   }
 

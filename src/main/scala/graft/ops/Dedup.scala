@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -268,26 +268,65 @@ object Dedup {
     * than the corpus; the caller anti-joins `keep = 0` rows against the docs
     * table — a broadcast anti-join when dupes are rare).
     *
-    * Components come from `graft.kg.Canon.components`, the one
-    * connected-components implementation, ordered by the numeric doc id:
-    * driver union-find below `driverThreshold` edges (near-dup graphs are
-    * small relative to the corpus), distributed min-label propagation above
-    * it, capped at 50 rounds (dup components are shallow cliques around a
-    * template, so a handful converge); non-convergence is surfaced, never
-    * silent.
+    * Components: one job collects up to `driverThreshold + 1` pairs; at or
+    * below the threshold that is the whole set, and canonicalization's
+    * `graft.kg.Canon.unionFind` runs on the driver under the numeric doc-id
+    * order (near-dup graphs are small relative to the corpus). Above it,
+    * [[labelPropagation]] runs distributed.
     */
   def clusters(pairs: DataFrame, driverThreshold: Long = 100000L): DataFrame = {
-    // components reads the pairs twice; persisted, an expensive upstream
-    // pair generator (minhash + verify) runs once. Its result never reads
-    // them again (a local relation or a local checkpoint)
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    // the propagation reads the pairs again; persisted, an expensive
+    // upstream pair generator (minhash + verify) runs once. The result
+    // never reads them again (a local relation or a local checkpoint)
     val es = pairs.select(col("a").cast("long").as("a"),
       col("b").cast("long").as("b")).persist()
-    try graft.kg.Canon.components(es, driverThreshold, Ordering.Long,
-        identity)(Encoders.scalaLong)
-      .toDF("doc_id", "cluster_id")
-      .select(col("cluster_id"), col("doc_id"),
+    try {
+      val head = es.as[(Long, Long)]
+        .limit(math.min(driverThreshold + 1, Int.MaxValue.toLong).toInt)
+        .collect()
+      val comps =
+        if (head.length > driverThreshold) labelPropagation(es)
+        else graft.kg.Canon.unionFind(head.toSeq, Ordering.Long)
+          .toDF("doc_id", "cluster_id")
+      comps.select(col("cluster_id"), col("doc_id"),
         (col("doc_id") === col("cluster_id")).cast("int").as("keep"))
-    finally es.unpersist(blocking = false)
+    } finally es.unpersist(blocking = false)
+  }
+
+  /** Connected components of the undirected pairs `es(a, b)` by min-label
+    * propagation: `(doc_id, cluster_id)` per document of a non-self-loop
+    * pair, `cluster_id` the least id of its component. O(component
+    * diameter) rounds of join + partial-agg groupBy, capped at 50 (dup
+    * components are shallow cliques around a template, so a handful
+    * converge); non-convergence is surfaced, never silent.
+    */
+  private def labelPropagation(es: DataFrame): DataFrame = {
+    val und = es.select(col("a").as("u"), col("b").as("v"))
+      .union(es.select(col("b").as("u"), col("a").as("v")))
+      .where(col("u") =!= col("v")).distinct()
+      .localCheckpoint(true)
+    var labels = und.select(col("u").as("n"), col("u").as("lbl")).distinct()
+      .localCheckpoint(true)
+    var changed = 1L
+    var iter = 0
+    while (changed > 0 && iter < 50) {
+      val nbr = und.join(labels.withColumnRenamed("n", "v"), "v")
+        .select(col("u").as("n"), col("lbl"))
+      val next = labels.union(nbr).groupBy("n").agg(min("lbl").as("lbl"))
+        .localCheckpoint(true)
+      changed = next.join(labels.withColumnRenamed("lbl", "was"), "n")
+        .where(col("lbl") < col("was")).count()
+      labels = next
+      iter += 1
+    }
+    if (changed > 0)
+      System.err.println(s"[graft] WARNING: connected-components label " +
+        s"propagation did not converge in $iter iterations " +
+        s"($changed labels still changing) — components with diameter " +
+        s"> $iter are partially merged")
+    labels.select(col("n").as("doc_id"), col("lbl").as("cluster_id"))
   }
 
   /** 64-bit SimHash per document: sign-sum of per-token hash bits weighted by

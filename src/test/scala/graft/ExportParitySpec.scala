@@ -2,6 +2,7 @@ package graft
 
 import graft.kg._
 import graft.kg.Json._
+import graft.model.{LinkedMention, Node}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -55,6 +56,47 @@ class ExportParitySpec extends AnyFunSuite {
     assertSameLines("cards", KgExport.indexCards(edges, nodes),
       Emit.indexCardJson(Emit.indexCardFlat(sparkRun.edges, sparkRun.nodes))
         .as[String].collect().toSeq.sorted)
+  }
+
+  test("a node past MaxListPerKey surfaces: stageMaterialize equals " +
+       "materialize and keeps the top-ranked surfaces' texts") {
+    // 1,250 distinct surfaces of one canonical node: form i under uniprot:P1
+    // (even i, 2 mentions) or uaz:UAZ:x, its alias (odd i, 1 mention), and
+    // for even i < 100 a second surface of the same text displayed "Gene".
+    // Ranked by count, then text, then display label, the first
+    // MaxListPerKey are the 650 two-mention surfaces and odd i < 700.
+    val cap = KgExport.MaxListPerKey
+    def form(i: Int) = f"form $i%04d"
+    def mention(i: Int, copy: Int, display: String) = {
+      val (ns, id) = if (i % 2 == 0) ("uniprot", "P1") else ("uaz", "UAZ:x")
+      val m = LinkedMention(i * 4L + copy, s"c${(i + copy) % 9}", 0, 0, 0, 1,
+        Array("Gene_or_gene_product"), form(i), "r", false, "", Array.empty,
+        false, false, ns, id, "", display_label = display)
+      StageBRow("linked", Some(m), None, None)
+    }
+    val surfaces = (0 until cap + 200).map(i =>
+      (i, if (i % 2 == 0) 2 else 1, "Protein")) ++
+      (0 until 100 by 2).map(i => (i, 2, "Gene"))
+    assert(surfaces.size > cap)
+    val rows = new scala.util.Random(11).shuffle(surfaces.flatMap {
+      case (i, n, display) => (0 until n).map(c =>
+        mention(i, if (display == "Gene") c + 2 else c, display))
+    }) :+ StageBRow("alias", None, None,
+      Some(AliasEdge("uaz:UAZ:x", "uniprot:P1", "c0")))
+    val b = spark.createDataset(rows)
+    val (_, nodes) = Pipeline.stageMaterialize(spark, b,
+      Pipeline.stageCanon(spark, b))
+    val got = nodes.as[Node].collect().toSeq
+    val want = KgExport.materialize(rows)._2
+    assert(got.size == 1 && want.size == 1)
+    def fields(n: Node) =
+      n.copy(alias_surface_forms = null) -> n.alias_surface_forms.toSeq
+    assert(fields(got.head) == fields(want.head))
+    val (node, forms) = fields(got.head)
+    assert(node.canon_id == "uniprot:P1" && node.display == form(0) &&
+      node.display_label == "Gene")
+    assert(forms == ((0 until cap + 200 by 2) ++ (1 until 700 by 2))
+      .sorted.map(form))
   }
 
   test("edge_id is Catalyst's xxhash64 on empty, non-ASCII, " +

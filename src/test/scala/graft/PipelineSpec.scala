@@ -4,27 +4,41 @@ import graft.kg._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Spark-level pipeline specs: distributed CC, t2 P/R gate, determinism
-  * under repartitioning, checkpoint resume == cold run.
+/** Pipeline specs: the canon map, t2 P/R gate, determinism under
+  * repartitioning, checkpoint resume == cold run.
   */
 class PipelineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  test("connected components: distributed label-prop equals union-find") {
-    val edges = Seq(
-      ("uniprot:A", "uaz:UAZ:x"), ("uaz:UAZ:x", "uaz:UAZ:y"),
-      ("uniprot:B", "uaz:UAZ:z"), ("uaz:UAZ:q", "uaz:UAZ:r"))
-      .toDF("a", "b")
-    val small = Canon.connectedComponents(spark, edges)
-      .as[(String, String)].collect().toMap
-    val dist = Canon.connectedComponents(spark, edges, driverThreshold = 0)
-      .as[(String, String)].collect().toMap
-    assert(small == dist)
-    // grounded id wins as representative; chains collapse
-    assert(small("uaz:UAZ:y") == "uniprot:A")
-    assert(small("uaz:UAZ:z") == "uniprot:B")
-    assert(small("uaz:UAZ:r") == "uaz:UAZ:q")
+  test("canon map: a grounded id names its component") {
+    val m = Canon.canonMap(Seq(("uaz:UAZ:x", "uniprot:B"),
+      ("uaz:UAZ:x", "uaz:UAZ:a")))
+    assert(m == Map("uaz:UAZ:x" -> "uniprot:B", "uaz:UAZ:a" -> "uniprot:B",
+      "uniprot:B" -> "uniprot:B"))
+  }
+
+  test("canon map: uaz chains collapse onto their least node") {
+    val m = Canon.canonMap(Seq(("uniprot:A", "uaz:UAZ:x"),
+      ("uaz:UAZ:x", "uaz:UAZ:y"), ("uaz:UAZ:q", "uaz:UAZ:r")))
+    assert(m("uaz:UAZ:y") == "uniprot:A")
+    assert(m("uaz:UAZ:r") == "uaz:UAZ:q" && m("uaz:UAZ:q") == "uaz:UAZ:q")
+  }
+
+  test("canon map: a known<->known alias is not admitted") {
+    assert(Canon.canonMap(Seq(("uniprot:A", "uniprot:B"))).isEmpty)
+    // nor does it join the components of its two sides
+    val m = Canon.canonMap(Seq(("uniprot:A", "uniprot:B"),
+      ("uniprot:A", "uaz:UAZ:x"), ("uniprot:B", "uaz:UAZ:y")))
+    assert(m("uaz:UAZ:x") == "uniprot:A" && m("uaz:UAZ:y") == "uniprot:B")
+  }
+
+  test("canon map: a 60-edge uaz path is one component") {
+    // min-label propagation capped at 50 rounds left the far end unmerged
+    val path = (0 until 60).map(i =>
+      (f"uaz:UAZ:n$i%02d", f"uaz:UAZ:n${i + 1}%02d"))
+    val m = Canon.canonMap(path)
+    assert(m.size == 61 && m.values.toSet == Set("uaz:UAZ:n00"))
   }
 
   test("t2 corpus: triple P/R >= 0.95 gate (expect exact)") {
@@ -227,15 +241,16 @@ class PipelineSpec extends AnyFunSuite {
     assert(got.toSeq == spark.createDataset(whole).toJSON.collect().sorted.toSeq)
   }
 
-  test("Spark jobs: a cold run takes 15, a fully-resumed run none") {
+  test("Spark jobs: a cold run takes 14, a fully-resumed run none") {
     // the cold run's jobs include the fold's one job that finds the
-    // conversations past their first group (14 before it); a resumed run
-    // reads every table back without a job
+    // conversations past their first group, and an AQE map-stage job per
+    // exchange of each write; a resumed run reads every table back without
+    // a job
     val dir = java.nio.file.Files.createTempDirectory("kgjobs").toString
     val (turns, _) = Transcripts.corpus(spark, 200, seed = 42, megaTurns = 1000)
     def jobs(resume: Boolean) = SparkJobs.during(spark.sparkContext,
       "pipeline-jobs")(Pipeline.run(spark, turns, dir, resume = resume))
-    assert(jobs(resume = false) == 15)
+    assert(jobs(resume = false) == 14)
     assert(jobs(resume = true) == 0)
   }
 

@@ -6,7 +6,9 @@ rows-only and hash-bearing queries, whose values no oracle pins.
 
   python3 tools/verify_diff.py A B [QUERY_PREFIX ...]
 
-Exits 1 when a query differs or is missing on one side.
+Also compares two `Pipeline.run` workdirs (one parquet directory per
+table, as here), e.g. `python3 tools/verify_diff.py A B edges nodes
+canon_map`. Exits 1 when a query differs or is missing on one side.
 """
 import os, sys, glob
 import duckdb
@@ -17,6 +19,10 @@ from oracle_check import compare
 
 def queries(d):
     return {p.rstrip("/").split("/")[-1] for p in glob.glob(f"{d}/*/")}
+
+
+def nested(duck_type):
+    return duck_type.endswith("]") or duck_type.startswith(("STRUCT", "MAP"))
 
 
 def main():
@@ -33,7 +39,12 @@ def main():
             for d in (a, b):
                 scan = f"SELECT * FROM parquet_scan('{d}/{name}/*.parquet')"
                 cols.append([(c[0], c[1]) for c in con.execute(f"DESCRIBE {scan}").fetchall()])
-                rows.append(con.execute(scan).fetchdf())
+                # nested values (a node's alias forms, stage_b's structs)
+                # compare as DuckDB's text rendering: pandas cannot sort them
+                proj = ", ".join(
+                    f'CAST("{c}" AS VARCHAR) AS "{c}"' if nested(t) else f'"{c}"'
+                    for c, t in cols[-1])
+                rows.append(con.execute(f"SELECT {proj} FROM ({scan})").fetchdf())
         except Exception as e:
             diff.append((name, f"unreadable: {e}"))
             continue
