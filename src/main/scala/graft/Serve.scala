@@ -33,10 +33,24 @@ import org.apache.spark.sql.SparkSession
   * run — on a fixed pool of one handler thread per available processor.
   * On a 4-core host (kgbench `serve_closed`, traced run, seed 42) a
   * request takes 0 Spark jobs and 0 tasks, and p50 latency is ~5 ms for
-  * fries and ~47 ms for indexcard; with the exporters as Spark jobs it took
-  * 16 jobs, 47 tasks, ~1.4 s and ~3.6 s. The session is still needed for
+  * fries and ~4 ms for indexcard (~47 ms for indexcard without
+  * TCP_NODELAY, below); with the exporters as Spark jobs it took 16 jobs,
+  * 47 tasks, ~1.4 s and ~3.6 s. The session is still needed for
   * the KB and grammar broadcasts the batch path shares. It is the dev/eval
   * serving shape; the 100 TB path is the batch pipeline.
+  *
+  * Sockets run with TCP_NODELAY: `sendResponseHeaders` sends the headers
+  * as one segment and the body follows as a second, small one, which
+  * Nagle's algorithm (RFC 896) would hold until the client's delayed ACK
+  * (up to 40 ms, RFC 1122 §4.2.3.2). The JDK reads the switch, the system
+  * property `sun.net.httpserver.nodelay`, once per JVM, when the first JDK
+  * `HttpServer` is created. So [[start]] sets it to `true` only if it is
+  * unset (an explicit `-Dsun.net.httpserver.nodelay=false` holds); the
+  * setting is JVM-wide, and it has no effect in a JVM that created a JDK
+  * `HttpServer` before the first [[start]].
+  *
+  * Every `/api/text` request prints one line to stderr, whatever its
+  * status: `[graft] apiN <format> <status> <handler ms>` ([[requestLine]]).
   */
 object Serve {
 
@@ -77,12 +91,23 @@ object Serve {
     s"""{"hasError":true,"errorMessage":"internal error ($reqId)"}"""
   }
 
+  /** The per-request stderr line: request id, requested output format,
+    * HTTP status and the handler's wall time in ms.
+    */
+  private[graft] def requestLine(reqId: String, outFormat: String,
+                                 status: Int, ms: Double): String =
+    s"[graft] $reqId $outFormat $status " +
+      "%.1f".formatLocal(java.util.Locale.ROOT, ms)
+
   /** Start the server on `port` (0 = ephemeral; read the bound port from
     * the returned server), extracting with `cfg`. The caller owns the
-    * SparkSession lifecycle.
+    * SparkSession lifecycle. Turns on TCP_NODELAY JVM-wide unless it is
+    * set already (see the object's note).
     */
   def start(spark: SparkSession, port: Int,
             cfg: KgConfig = KgConfig.default): HttpServer = {
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     // one handler thread per processor; idle threads exit, so a stopped
     // server leaves none behind
@@ -107,20 +132,24 @@ object Serve {
     server.createContext("/api/text", (x: HttpExchange) => {
       // reference request ids: prefix "api" + incrementing counter
       val reqId = s"api${reqCounter.incrementAndGet()}"
+      val t0 = System.nanoTime()
+      val outFormat = Option(x.getRequestURI.getQuery)
+        .flatMap(_.split("&").collectFirst {
+          case kv if kv.startsWith("output=") => kv.substring(7)
+        }).getOrElse("fries")
+      var status = 500
+      def reply(code: Int, body: String): Unit = {
+        status = code
+        respond(x, code, body)
+      }
       try {
         if (x.getRequestMethod != "POST")
-          respond(x, 405,
-            """{"hasError":true,"errorMessage":"POST required"}""")
+          reply(405, """{"hasError":true,"errorMessage":"POST required"}""")
         else {
           val text = new String(x.getRequestBody.readAllBytes(),
             StandardCharsets.UTF_8)
-          val outFormat = Option(x.getRequestURI.getQuery)
-            .flatMap(_.split("&").collectFirst {
-              case kv if kv.startsWith("output=") => kv.substring(7)
-            }).getOrElse("fries")
           if (text.trim.isEmpty)
-            respond(x, 400,
-              """{"hasError":true,"errorMessage":"empty text body"}""")
+            reply(400, """{"hasError":true,"errorMessage":"empty text body"}""")
           else {
             val json =
               try Right(annotateText(spark, text, outFormat, reqId, cfg))
@@ -132,15 +161,16 @@ object Serve {
                 case e: Throwable => Left((500, internalError(reqId, e)))
               }
             json match {
-              case Right(j) => respond(x, 200,
+              case Right(j) => reply(200,
                 s"""{"hasError":false,"requestId":"$reqId","resultJson":$j}""")
-              case Left((code, body)) => respond(x, code, body)
+              case Left((code, body)) => reply(code, body)
             }
           }
         }
       } catch {
-        case e: Throwable => respond(x, 500, internalError(reqId, e))
-      }
+        case e: Throwable => reply(500, internalError(reqId, e))
+      } finally System.err.println(requestLine(reqId, outFormat, status,
+        (System.nanoTime() - t0) / 1e6))
     })
     server.start()
     server

@@ -235,4 +235,38 @@ class ServeSpec extends AnyFunSuite {
         r.body())
     }
   }
+
+  test("sequential indexcard POSTs over one keep-alive connection answer " +
+       "well under the 40 ms delayed-ACK floor") {
+    // HttpURLConnection (kgbench's client) reuses one connection once a
+    // response is read to its end; without TCP_NODELAY each response body
+    // waited for the client's delayed ACK of the headers
+    withServer { port =>
+      val url = URI.create(
+        s"http://127.0.0.1:$port/api/text?output=indexcard").toURL
+      val ms = (1 to 30).map { _ =>
+        val t0 = System.nanoTime()
+        val c = url.openConnection().asInstanceOf[java.net.HttpURLConnection]
+        c.setRequestMethod("POST")
+        c.setDoOutput(true)
+        c.getOutputStream.write("MEK1 phosphorylates ERK2.".getBytes("UTF-8"))
+        assert(c.getResponseCode == 200)
+        val in = c.getInputStream
+        in.readAllBytes()
+        in.close()
+        (System.nanoTime() - t0) / 1e6
+      }.drop(10).sorted // the first requests wait on the JIT
+      val median = ms(ms.size / 2)
+      assert(median < 20.0, s"median round trip $median ms over $ms")
+    }
+  }
+
+  test("the per-request log line carries id, format, status and handler ms") {
+    assert(Serve.requestLine("api12", "indexcard", 200, 1.234) ==
+      "[graft] api12 indexcard 200 1.2")
+    assert(Serve.requestLine("api3", "bogus", 400, 0.04) ==
+      "[graft] api3 bogus 400 0.0")
+    assert(Serve.requestLine("api4", "fries", 500, 1234.56) ==
+      "[graft] api4 fries 500 1234.6")
+  }
 }
