@@ -23,8 +23,9 @@ package graft.kg
   * @param crossConvAliases apply every conversation's alias definitions to
   *                         all conversations of the batch (reference:
   *                         `Alias.canonizeAliases(mentions, docs)`, sent61).
-  *                         The pooled surfaces are capped at
-  *                         [[Pipeline.AliasJoinThreshold]], with a warning
+  *                         A pool of more than
+  *                         [[Pipeline.AliasJoinThreshold]] definitions is
+  *                         refused: [[Pipeline.stageMentions]] throws
   * @param overrideSpecies  grounding.overrideSpecies
   *                         (ReachGrounder.scala:22,38): true ignores the
   *                         species context and ranks candidates human-first

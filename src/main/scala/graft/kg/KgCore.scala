@@ -10,8 +10,8 @@ import graft.model._
   * does, ApiRuler.scala:50-95).
   *
   *   narrow pass, per turn: role/text filter -> annotate -> alias pre-pass
-  *     (cue-filtered turns only) -> rule match with the conversation's
-  *     distinct, sorted alias surfaces
+  *     (cue-filtered turns only) -> rule match with the distinct, sorted
+  *     surfaces of its alias scope ([[aliasKey]])
   *   fold, per (conv_id, turn_idx / chunkTurns) group: [[step]] over the
   *     group's mentions, with its halo, nearby context entities and the
   *     conversation's [[Scope]] as context; it emits what a whole-document
@@ -57,13 +57,20 @@ object KgCore {
     AnnotatedTurn(t.conv_id, t.turn_idx, t.role,
       Annotate.annotateText(trie, t.text))
 
-  /** The rescan surfaces of a set of alias definitions `(conv_id, surface,
-    * label)`: distinct and sorted, so the injection order (which resolves
-    * overlapping-surface conflicts) never depends on the executor.
+  /** The alias scope a turn of `convId` reads: its conversation, or with
+    * `crossConvAliases` the one batch key `""` that every turn shares
+    * (multi-document semantics, reference coref/Alias.scala:46-75). */
+  def aliasKey(convId: String, crossConvAliases: Boolean): String =
+    if (crossConvAliases) "" else convId
+
+  /** The rescan surfaces of alias definitions `(conv_id, surface, label)`
+    * per [[aliasKey]]: distinct and sorted, so the injection order (which
+    * resolves overlapping-surface conflicts) never depends on the executor.
     */
-  def surfaces(defs: Iterable[(String, String, String)])
-      : Seq[(String, String)] =
-    defs.map(d => (d._2, d._3)).toSeq.distinct.sorted
+  def aliasScopes(defs: Iterable[(String, String, String)],
+                  crossConvAliases: Boolean): Map[String, Seq[(String, String)]] =
+    defs.groupBy(d => aliasKey(d._1, crossConvAliases)).map { case (k, ds) =>
+      k -> ds.map(d => (d._2, d._3)).toSeq.distinct.sorted }
 
   /** Only the head label crosses the fold's exchange: the closure is a pure
     * function of it ([[Lexicon.labelClosure]]) and [[step]] rebuilds it.
@@ -140,9 +147,7 @@ object KgCore {
 
   /** In-process `stageB(stageMentions(turns))`: the stage_b rows the Spark
     * stages give for the same turns and config, in fold-group order. Every
-    * conversation uses its own alias definitions, or with
-    * `crossConvAliases` the pool of all of them (uncapped: the Spark
-    * stages cap the pool at [[Pipeline.AliasJoinThreshold]] definitions).
+    * conversation uses the alias definitions of its [[aliasKey]].
     */
   def stageB(turns: Seq[Turn], parts: Parts, cfg: KgConfig): Seq[StageBRow] =
     fold(mentions(turns, parts, cfg), parts, cfg, chunkTurns)
@@ -157,13 +162,9 @@ object KgCore {
         BioRules.aliasDefsTurn(at, parts.grammar)
       else Nil
     }
-    val pooled = surfaces(defs)
-    val byConv = defs.groupBy(_._1).map { case (c, ds) => c -> surfaces(ds) }
-    annotated.flatMap { at =>
-      BioRules.extractTurn(at,
-        if (cfg.crossConvAliases) pooled else byConv.getOrElse(at.conv_id, Nil),
-        parts.grammar)
-    }
+    val scopes = aliasScopes(defs, cfg.crossConvAliases)
+    annotated.flatMap(at => BioRules.extractTurn(at, scopes.getOrElse(
+      aliasKey(at.conv_id, cfg.crossConvAliases), Nil), parts.grammar))
   }
 
   /** The fold of [[stageB]], in fold groups of `groupTurns` turns. */

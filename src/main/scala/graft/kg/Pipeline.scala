@@ -5,7 +5,6 @@ import graft.model._
 import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.ObjectProducer
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
 
@@ -24,7 +23,7 @@ import scala.jdk.CollectionConverters._
   * Checkpoint-resumable at every stage boundary via TableIO manifests
   * (mention -> link -> canonicalize -> materialize, per the north rule).
   * One private stage sequence serves [[run]] (writes and reads back every
-  * table) and [[extract]] (holds stage_b in memory, the rest lazy).
+  * table) and [[extract]] (holds mentions_raw and stage_b, the rest lazy).
   *
   * The per-turn and per-group work inside these stages is [[KgCore]]'s
   * (narrow pass, fold), [[Canon]]'s (the canon map) and [[KgExport]]'s
@@ -93,18 +92,19 @@ object Pipeline {
   /** Phase-A alias-definition aggregation (J3): a narrow entity-rules-only
     * pre-pass finds unknown-surface alias definitions as a distributed
     * Dataset of (conv_id, surface, label); the full extraction pass then
-    * rescans every turn of the defining conversation for the surface — so an
-    * alias used *before* its definition still yields mentions (reference:
-    * coref/Alias.scala:46-75 + InstanceFinder.scala:9-34).
+    * rescans every turn of the definition's alias scope for the surface — so
+    * an alias used *before* its definition still yields mentions (reference:
+    * coref/Alias.scala:46-75 + InstanceFinder.scala:9-34). The scope is a
+    * key, [[KgCore.aliasKey]]: the conversation, or one for the whole batch.
     *
-    * Scale: alias definitions are a rarity, so the common case collects +
-    * broadcasts the tiny set (zero extra shuffle on the turns table). Above
-    * [[AliasJoinThreshold]] definitions the pipeline auto-switches to a
-    * conv_id-keyed left join of the aggregated defs onto the annotated
-    * turns — no truncation; the skewed mega-conversation case is one row on
-    * the defs side and AQE's skew-join handles the turns side. On both paths
-    * the one job that picks the path collects up to threshold + 1 defs to
-    * the driver; the join path then drops them.
+    * Scale: alias definitions are a rarity, so one job collects up to
+    * threshold + 1 of them and, at or below [[AliasJoinThreshold]],
+    * broadcasts their [[KgCore.aliasScopes]] (zero extra shuffle on the
+    * turns table). Above it, per-conversation scopes come through a
+    * conv_id-keyed left join of the defs onto the annotated turns (the
+    * mega-conversation is one row on the defs side; AQE's skew-join handles
+    * the turns side), and a batch-wide pool, a corpus-sized broadcast, is
+    * refused: `stageMentions` throws, naming the count and the threshold.
     */
   val AliasJoinThreshold: Long = 100000L
 
@@ -139,15 +139,27 @@ object Pipeline {
     val annotated = Annotate(spark, turns, bTrie)
     val defs = aliasDefsDs(spark, turns, bTrie, bG)
     val thr = aliasJoinThreshold
-    // one job decides the path and, below the threshold, is the whole set
+    val cross = cfg.crossConvAliases
+    // one job decides the path and, at or below the threshold, is the set
     val head = defs.limit(math.min(thr + 1, Int.MaxValue.toLong).toInt)
       .collect()
-    val useJoin = head.length > thr
     val extracted =
-      if (useJoin && !cfg.crossConvAliases) {
-        val defsByConv = defs.groupByKey(_._1).mapGroups { (conv, it) =>
-          (conv, KgCore.surfaces(it.toSeq))
+      if (head.length <= thr) {
+        val bScopes =
+          spark.sparkContext.broadcast(KgCore.aliasScopes(head, cross))
+        annotated.flatMap { at =>
+          InCount.inc()
+          BioRules.extractTurn(at, bScopes.value.getOrElse(
+            KgCore.aliasKey(at.conv_id, cross), Nil), bG.value)
         }
+      } else if (cross)
+        throw new IllegalStateException(s"crossConvAliases: ${defs.count()} " +
+          s"alias definitions are more than the alias threshold $thr; the " +
+          "batch-wide pool is broadcast whole or not at all")
+      else {
+        val defsByConv = defs.groupByKey(_._1)
+          .flatMapGroups((_, ds) =>
+            KgCore.aliasScopes(ds.toSeq, crossConvAliases = false))
         annotated
           .joinWith(defsByConv, annotated("conv_id") === defsByConv("_1"),
             "left_outer")
@@ -155,39 +167,17 @@ object Pipeline {
             InCount.inc()
             BioRules.extractTurn(at, if (d == null) Nil else d._2, bG.value)
           }
-      } else {
-        // broadcast path: conv_id -> the conversation's own surfaces (the
-        // join path's), else the pool. With crossConvAliases (multi-document
-        // batch semantics, sent61) the map is empty and the pool holds every
-        // conversation's surfaces, so ALL conversations are rescanned with
-        // them. Capped — an unbounded pool is a corpus-sized broadcast.
-        val aliases: (Map[String, Seq[(String, String)]], Seq[(String, String)]) =
-          if (!cfg.crossConvAliases)
-            (head.groupBy(_._1).map { case (c, xs) => c -> KgCore.surfaces(xs) },
-              Nil)
-          else if (!useJoin) (Map.empty, KgCore.surfaces(head))
-          else {
-            val capped = defs.sort("_2", "_3")
-              .limit(math.min(thr, Int.MaxValue.toLong).toInt).collect()
-            System.err.println(s"[graft] WARNING: crossConvAliases pool " +
-              s"truncated to $thr definitions (deterministic sort order)")
-            (Map.empty, KgCore.surfaces(capped))
-          }
-        val bAliases = spark.sparkContext.broadcast(aliases)
-        annotated.flatMap { at =>
-          InCount.inc()
-          val (byConv, pool) = bAliases.value
-          BioRules.extractTurn(at, byConv.getOrElse(at.conv_id, pool), bG.value)
-        }
       }
     instrument(extracted, "mentions", runId, acc)
   }
 
   /** The fold: [[KgCore.foldGroup]] per group over what [[KgCore.groups]]
     * routes to it, and, for a conversation past its first group (one small
-    * job finds them), the [[KgCore.Scope]] joined in the same exchange. An
-    * input whose plan computes its rows ([[stageMentions]]') is held first
-    * as a local checkpoint: the job and the exchange both read it. */
+    * job, [[lastGroups]], finds them), the [[KgCore.Scope]] joined in the
+    * same exchange. It holds nothing and reads `mentions` twice, in that job
+    * and in the exchange (a split conversation's [[scopes]] twice more): an
+    * input that computes its rows, as [[stageMentions]]' does, computes them
+    * each time unless the caller holds it, as [[run]] and [[extract]] do. */
   def stageB(spark: SparkSession, mentions: Dataset[MentionRow],
              runId: String, acc: CollectionAccumulator[Lineage],
              cfg: KgConfig = KgConfig.default): Dataset[StageBRow] = {
@@ -196,10 +186,7 @@ object Pipeline {
     // plain values ship with the closure, never the config (it holds the KB)
     val policy = cfg.contextPolicy
     val overrideSpecies = cfg.overrideSpecies
-    val computed = mentions.queryExecution.optimizedPlan
-      .find(_.isInstanceOf[ObjectProducer]).isDefined
-    val ms = if (computed) mentions.localCheckpoint() else mentions
-    val last = lastGroups(spark, ms)
+    val last = lastGroups(spark, mentions)
     val fold = (key: (String, Int), it: Iterator[MentionRow],
                 scope: Option[KgCore.Scope]) => {
       val (conv, g) = key
@@ -214,14 +201,14 @@ object Pipeline {
     // group every mention goes to its own group alone, untagged: tagging
     // each with its group cost batch_cold ~17 % more task CPU.
     val folded =
-      if (last.isEmpty) ms.map(KgCore.compact)
+      if (last.isEmpty) mentions.map(KgCore.compact)
         .groupByKey(m => (m.conv_id, m.turn_idx / chunkTurns))
         .flatMapGroups((k, it) => fold(k, it, None))
-      else ms.flatMap { m =>
+      else mentions.flatMap { m =>
           val c = KgCore.compact(m)
           KgCore.groups(c, chunkTurns, last.getOrElse(c.conv_id, 0)).map(_ -> c)
         }.groupByKey { case (g, m) => (m.conv_id, g) }
-        .cogroup(scopes(spark, ms, last).groupByKey(_._1)) {
+        .cogroup(scopes(spark, mentions, last).groupByKey(_._1)) {
           (k, it, sc) => fold(k, it.map(_._2), sc.map(_._2).nextOption())
         }
     instrument(folded, "link_coref_emit", runId, acc)
@@ -369,8 +356,9 @@ object Pipeline {
   }
 
   /** In-memory path for tests and small corpora: the same stage sequence
-    * with no checkpoint I/O. Only stage_b, which canon and materialize both
-    * read, is held, as an eager local checkpoint; the other tables stay lazy.
+    * with no checkpoint I/O. mentions_raw (the fold's probe and exchange read
+    * it) and stage_b (canon and materialize read it) are held, each as an
+    * eager local checkpoint; the other tables stay lazy.
     * A local checkpoint is no session cache entry: the ContextCleaner frees
     * its blocks once the [[Result]] is unreachable.
     */
@@ -382,7 +370,9 @@ object Pipeline {
                              cfg: KgConfig, aliasJoinThreshold: Long): Result = {
     import spark.implicits._
     stages(spark, turns, cfg, aliasJoinThreshold, "mem",
-      (name, build) => if (name == "stage_b") build.localCheckpoint() else build,
+      (name, build) =>
+        if (name == "mentions_raw" || name == "stage_b") build.localCheckpoint()
+        else build,
       rows => spark.createDataset(rows).toDF())
   }
 }

@@ -268,13 +268,16 @@ object Dedup {
     * than the corpus; the caller anti-joins `keep = 0` rows against the docs
     * table — a broadcast anti-join when dupes are rare).
     *
-    * Components: one job collects up to `driverThreshold + 1` pairs; at or
-    * below the threshold that is the whole set, and canonicalization's
-    * `graft.kg.Canon.unionFind` runs on the driver under the numeric doc-id
-    * order (near-dup graphs are small relative to the corpus). Above it,
-    * [[labelPropagation]] runs distributed.
+    * Components: one job collects up to 100,001 pairs; up to 100,000 that
+    * is the whole set, and canonicalization's `graft.kg.Canon.unionFind`
+    * runs on the driver under the numeric doc-id order (near-dup graphs are
+    * small relative to the corpus). Above it, [[labelPropagation]] runs
+    * distributed, and throws on a component it cannot close in 50 rounds.
     */
-  def clusters(pairs: DataFrame, driverThreshold: Long = 100000L): DataFrame = {
+  def clusters(pairs: DataFrame): DataFrame = clusters(pairs, 100000L)
+
+  private[graft] def clusters(pairs: DataFrame,
+                              driverThreshold: Long): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
     // the propagation reads the pairs again; persisted, an expensive
@@ -300,7 +303,8 @@ object Dedup {
     * pair, `cluster_id` the least id of its component. O(component
     * diameter) rounds of join + partial-agg groupBy, capped at 50 (dup
     * components are shallow cliques around a template, so a handful
-    * converge); non-convergence is surfaced, never silent.
+    * converge); a component still merging after the cap throws
+    * `IllegalStateException` rather than come back partly merged.
     */
   private def labelPropagation(es: DataFrame): DataFrame = {
     val und = es.select(col("a").as("u"), col("b").as("v"))
@@ -322,10 +326,9 @@ object Dedup {
       iter += 1
     }
     if (changed > 0)
-      System.err.println(s"[graft] WARNING: connected-components label " +
-        s"propagation did not converge in $iter iterations " +
-        s"($changed labels still changing) — components with diameter " +
-        s"> $iter are partially merged")
+      throw new IllegalStateException(s"dedup clusters: label propagation " +
+        s"did not converge in $iter rounds ($changed labels still changing); " +
+        s"a component of diameter > $iter would come back partly merged")
     labels.select(col("n").as("doc_id"), col("lbl").as("cluster_id"))
   }
 

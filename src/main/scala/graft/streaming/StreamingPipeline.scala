@@ -95,8 +95,8 @@ object StreamingPipeline {
             // the batch pre-pass's filter (Pipeline.aliasDefsDs)
             if (at.sents.exists(s => BioRules.hasAliasCue(s.text))) {
               val d = BioRules.aliasDefsTurn(at, bG.value)
-              if (d.nonEmpty) defs = KgCore.surfaces(
-                d ++ defs.map { case (sf, label) => (convId, sf, label) })
+              if (d.nonEmpty) defs = KgCore.aliasScopes(d ++ defs.map {
+                case (sf, l) => (convId, sf, l) }, crossConvAliases = false)(convId)
             }
             BioRules.extractTurn(at, defs, bG.value)
           }.map(KgCore.compact)

@@ -65,6 +65,21 @@ class OpsSpec extends AnyFunSuite {
         .as[(Long, Long, Int)].collect().toSet == expect, s"threshold $thr")
   }
 
+  test("dedup clusters: a component past the round cap fails loudly on " +
+       "the distributed path") {
+    // the 62-edge path 0-100-101-...-160-50: 50 rounds leave 0 and 50 as
+    // two survivors of one component
+    val path = (0L +: (100L to 160L) :+ 50L).sliding(2)
+      .map(p => (p(0), p(1))).toSeq
+    assert(path.size == 62)
+    val pairs = path.toDF("a", "b")
+    assert(Dedup.clusters(pairs).where(col("keep") === 1)
+      .select("doc_id").as[Long].collect().toSeq == Seq(0L))
+    val e = intercept[IllegalStateException](
+      Dedup.clusters(pairs, driverThreshold = 0L).collect())
+    assert(e.getMessage.contains("50 rounds"), e.getMessage)
+  }
+
   test("decontamination flags quoted eval items, spares clean docs") {
     val eval = Seq((100L, "alpha beta gamma delta epsilon zeta eta theta"))
       .toDF("doc_id", "text")

@@ -138,6 +138,22 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("a crossConvAliases pool past the alias threshold fails loudly, " +
+       "naming the definition count and the threshold") {
+    val turns = Transcripts.goldenTurns(spark)
+    val (bTrie, _, bG) = Broadcasts.all(spark.sparkContext)
+    val n = Pipeline.aliasDefsDs(spark, turns, bTrie, bG).count()
+    val pooled = KgConfig(crossConvAliases = true)
+    val e = intercept[IllegalStateException](
+      Pipeline.extract(spark, turns, pooled, n - 1))
+    assert(e.getMessage.contains(s"$n alias definitions") &&
+      e.getMessage.contains(s"threshold ${n - 1}"), e.getMessage)
+    // at the threshold the whole pool is broadcast
+    assert(Score.keysOf(Pipeline.extract(spark, turns, pooled, n).edges)
+      .collect().toSet ==
+      Score.keysOf(Pipeline.extract(spark, turns, pooled).edges).collect().toSet)
+  }
+
   test("lineage rows_out sums equal the stage table counts (run, extract)") {
     // extract's lineage is complete only because stage_b's local checkpoint
     // is eager: it runs both instrumented stages in full before the
@@ -252,6 +268,23 @@ class PipelineSpec extends AnyFunSuite {
       "pipeline-jobs")(Pipeline.run(spark, turns, dir, resume = resume))
     assert(jobs(resume = false) == 14)
     assert(jobs(resume = true) == 0)
+  }
+
+  test("Spark jobs: extract takes 6 at call time, and stageB on an unheld " +
+       "input only its probe") {
+    // extract: the alias-path probe, the hold of mentions_raw, the fold's
+    // probe, the hold of stage_b (with its exchange's map-stage job) and
+    // the canon collect; edges and nodes stay lazy
+    val (turns, _) = Transcripts.corpus(spark, 40, seed = 13)
+    val sc = spark.sparkContext
+    assert(SparkJobs.during(sc, "extract-jobs")(
+      Pipeline.extract(spark, turns)) == 6)
+    // stageB holds nothing: a computed input is read again by the fold
+    val acc = new org.apache.spark.util.CollectionAccumulator[graft.model.Lineage]
+    sc.register(acc)
+    val ms = Pipeline.stageMentions(spark, turns, "t", acc)
+    assert(SparkJobs.during(sc, "stageb-jobs")(
+      Pipeline.stageB(spark, ms, "t", acc)) == 1)
   }
 
   test("mega-conversation chunking preserves non-boundary semantics") {
